@@ -98,13 +98,12 @@ def spread(df: DataFrame) -> DataFrame:
     ``df.rdd.getNumPartitions()`` path, which is correct but pays the
     ~35 ms physical-planning cost the hint exists to avoid.
 
-    The arithmetic estimate ignores Spark's dynamic maxSplitBytes
-    floor (min with max(openCostInBytes, bytes/defaultParallelism)),
-    so ``est`` is a LOWER bound on actual scan partitions: the skip
-    branch (est >= cores) is always safe, and the repartition branch
-    can at worst fire redundantly on an input Spark would already have
-    split further — a no-op-sized shuffle, accepted and documented
-    rather than re-deriving Spark's split packing here.
+    The arithmetic estimate replicates Spark's dynamic split sizing
+    for a single file (``FilePartition.maxSplitBytes``: maxPartitionBytes
+    capped by max(openCostInBytes, bytes/defaultParallelism)), so
+    ``est`` equals the actual scan split count for every single-file
+    input measured up to sf1 (SCALING_MEASURED.md): both branches fire
+    exactly when the exact ``df.rdd`` partition count would.
     """
     sc = df.sparkSession.sparkContext
     target = sc.defaultParallelism

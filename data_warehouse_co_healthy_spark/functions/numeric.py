@@ -100,9 +100,3 @@ def nz(col: Column) -> Column:
     on. Enforced repo-wide by the divide lint
     (plans/lint.py::divide_findings)."""
     return F.when(col != 0, col)
-
-
-def nz_sql(expr: str) -> str:
-    """SQL-string twin of :func:`nz` for selectExpr/SQL-built plans
-    (Spark and DuckDB share the NULLIF spelling)."""
-    return f"nullif({expr}, 0)"

@@ -29,10 +29,6 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table, spread
 
-MEDIA_SCHEMA = (
-    "media_id long, kind string, payload binary, "
-    "meta_width int, meta_height int"
-)
 FEATURE_SCHEMA = (
     "media_id long, kind string, byte_len long, checksum string, "
     "meta_width int, meta_height int"
@@ -724,121 +720,6 @@ def image_dhash_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
         "media_id",
         "dhash",
         F.count("*").over(Window.partitionBy("dhash")).alias("n_bucket"),
-    )
-
-
-def file_decode_stats(files: DataFrame) -> DataFrame:
-    """Decoded-image stats over a (path, content) frame — the shape
-    both the batch ``binaryFile`` reader and the STREAMING binaryFile
-    source produce, so one transform serves ingest-time decode on a
-    stream and backfill decode in batch with bit-identical outputs
-    (tests/test_streaming.py pins the equality). Payload bytes stay
-    inside executor Arrow batches; the magic-byte dispatch decodes
-    BMP, PPM, baseline JPEG and non-interlaced PNG for real and fails
-    loudly on anything else."""
-    import numpy as np  # noqa: PLC0415
-
-    out_schema = (
-        "file_name string, width int, height int, "
-        "sum_r long, sum_g long, sum_b long"
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: dict[str, list] = {
-                k: []
-                for k in (
-                    "file_name", "width", "height",
-                    "sum_r", "sum_g", "sum_b",
-                )
-            }
-            for path, payload in zip(pdf["path"], pdf["content"]):
-                img = decode_image(bytes(payload)).astype(np.int64)
-                h, w = img.shape[:2]
-                flat = img.reshape(-1, 3)
-                out["file_name"].append(path.rsplit("/", 1)[1])
-                out["width"].append(w)
-                out["height"].append(h)
-                out["sum_r"].append(int(flat[:, 0].sum()))
-                out["sum_g"].append(int(flat[:, 1].sum()))
-                out["sum_b"].append(int(flat[:, 2].sum()))
-            yield pd.DataFrame(out).astype(
-                {"width": "int32", "height": "int32"}
-            )
-
-    return files.select("path", "content").mapInPandas(
-        run, schema=out_schema
-    )
-
-
-def file_av_stats(files: DataFrame) -> DataFrame:
-    """Audio/video-container stats over a (path, content) frame — the
-    GIF/WAV counterpart of ``file_decode_stats`` (images), completing
-    the ingest-time decode surface across all four vendored codecs.
-    Magic-byte dispatch: GIF payloads decode every frame through the
-    LZW codec and reduce to exact-integer pixel sums; RIFF/WAVE
-    payloads decode the int16 raster and reduce to exact-integer
-    energy. One transform serves both the batch ``binaryFile`` reader
-    and the streaming binaryFile source with bit-identical outputs
-    (tests/test_streaming.py pins the equality); anything that is
-    neither container fails loudly."""
-    import numpy as np  # noqa: PLC0415
-
-    from . import audiocodec, gifcodec  # noqa: PLC0415
-
-    out_schema = (
-        "file_name string, kind string, n_units int, "
-        "width int, height int, stat_sum long"
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: dict[str, list] = {
-                k: []
-                for k in (
-                    "file_name", "kind", "n_units",
-                    "width", "height", "stat_sum",
-                )
-            }
-            for path, payload in zip(pdf["path"], pdf["content"]):
-                raw = bytes(payload)
-                if raw[:6] in (b"GIF87a", b"GIF89a"):
-                    frames = gifcodec.decode_gif(raw)
-                    h, w = frames[0].shape[:2]
-                    out["kind"].append("gif")
-                    out["n_units"].append(len(frames))
-                    out["width"].append(w)
-                    out["height"].append(h)
-                    out["stat_sum"].append(
-                        int(
-                            sum(
-                                f.astype(np.int64).sum()
-                                for f in frames
-                            )
-                        )
-                    )
-                elif raw[:4] == b"RIFF":
-                    samples, rate = audiocodec.decode_wav(raw)
-                    a = samples.astype(np.int64)
-                    out["kind"].append("wav")
-                    out["n_units"].append(int(a.shape[0]))
-                    out["width"].append(rate)
-                    out["height"].append(0)
-                    out["stat_sum"].append(int((a * a).sum()))
-                else:
-                    raise ValueError(
-                        f"unsupported A/V container (magic "
-                        f"{raw[:6]!r}); this path decodes GIF and "
-                        "RIFF/WAVE"
-                    )
-                out["file_name"].append(path.rsplit("/", 1)[1])
-            yield pd.DataFrame(out).astype(
-                {"n_units": "int32", "width": "int32",
-                 "height": "int32"}
-            )
-
-    return files.select("path", "content").mapInPandas(
-        run, schema=out_schema
     )
 
 

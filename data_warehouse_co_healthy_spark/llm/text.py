@@ -43,11 +43,6 @@ def _stopword_values_sql() -> str:
     return f"(VALUES {rows}) AS sw(lang, word)"
 
 
-def _stopword_df(spark: SparkSession) -> DataFrame:
-    rows = [(lang, w) for lang, ws in STOPWORDS.items() for w in ws]
-    return spark.createDataFrame(rows, "lang string, word string")
-
-
 def token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Whitespace + BPE-ish regex token counts per document."""
     d = spread(load_table(spark, sf_dir, "documents"))

@@ -111,25 +111,6 @@ def stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def safe_union(*dfs: DataFrame) -> DataFrame:
-    """Positional union with the footgun removed (SURVEY §7: "a check
-    rule forbidding positional union"): raises unless every branch has
-    IDENTICAL column names in IDENTICAL order, so a silent column-order
-    mismatch (the reference's service_process.py:135 hazard) becomes a
-    loud error. Use unionByName for differently-ordered branches."""
-    first = dfs[0].columns
-    for i, df in enumerate(dfs[1:], start=2):
-        if df.columns != first:
-            raise ValueError(
-                f"safe_union branch {i} columns {df.columns} != "
-                f"branch 1 columns {first}; align or use unionByName"
-            )
-    out = dfs[0]
-    for df in dfs[1:]:
-        out = out.union(df)
-    return out
-
-
 def union_positional(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Positional union after drop/rename/lit alignment — mirrors the
     4-way service union (reference service_process.py:123-135) where

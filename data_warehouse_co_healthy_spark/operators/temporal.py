@@ -18,6 +18,8 @@ comparisons and a full broadcast of one side, unusable at 100 TB.
 
 from __future__ import annotations
 
+import weakref
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -1926,21 +1928,9 @@ def _state_partitions(
       work dominates, so parallelism wins — floor at half the cores
       (8→16 on local[32] cut stream_stateful_totals ~12%; 4 or fewer
       was 1.4–3.9× slower). Scales down with the driver's low-core
-      bench automatically and up with input bytes.
-
-    $SPARK_GRAFT_STATE_PARTS overrides both (the production escape
-    hatch: size to state volume, not to this heuristic)."""
+      bench automatically and up with input bytes."""
     import os  # noqa: PLC0415
 
-    env = os.environ.get("SPARK_GRAFT_STATE_PARTS")
-    if env:
-        try:
-            return max(1, int(env))
-        except ValueError as exc:
-            raise ValueError(
-                "SPARK_GRAFT_STATE_PARTS must be an integer state-"
-                f"partition count, got {env!r}"
-            ) from exc
     by_bytes = 0
     if sf_dir:
         try:
@@ -1967,9 +1957,9 @@ def _state_partitions(
 #: file per trigger.
 DRAIN_FILES_PER_TRIGGER = 2
 
-#: One reserved child SparkSession per parent, lazily created and
+#: One reserved child SparkSession per parent, created on first use and
 #: reused for every drain (see _drain_session).
-_DRAIN_SESSIONS: "weakref.WeakKeyDictionary" = None  # set below
+_DRAIN_SESSIONS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 
 
 def _drain_session(spark: SparkSession) -> SparkSession:
@@ -1986,11 +1976,6 @@ def _drain_session(spark: SparkSession) -> SparkSession:
     (cast semantics); builder-time confs already arrive via the shared
     SparkContext conf, and the nanos legacy conf is set by the stream
     readers themselves."""
-    global _DRAIN_SESSIONS
-    import weakref  # noqa: PLC0415
-
-    if _DRAIN_SESSIONS is None:
-        _DRAIN_SESSIONS = weakref.WeakKeyDictionary()
     child = _DRAIN_SESSIONS.get(spark)
     if child is not None:
         return child

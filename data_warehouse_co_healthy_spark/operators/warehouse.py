@@ -301,33 +301,6 @@ def dq_orphans(spark: SparkSession, sf_dir: str) -> DataFrame:
     return li_o.unionByName(li_p)
 
 
-def observe_dq(df: DataFrame, key_col: str, measure_col: str):
-    """Attach in-flight data-quality counters to a load without a
-    second pass: row count, null keys, and negative measures ride the
-    SAME job as the sink action via ``DataFrame.observe`` (accumulator
-    semantics — zero extra scans, exact counts).
-
-    The reference has no load validation at all; the batch-audit twin
-    is dq_null_rates/dq_orphans, which re-scan. At 100 TB an audit
-    re-scan doubles ingest cost — observation metrics are free.
-
-    Returns ``(df, observation)``; read ``observation.get`` AFTER an
-    action on the returned frame (tests/test_sources.py pins the
-    contract)."""
-    from pyspark.sql import Observation  # noqa: PLC0415
-
-    obs = Observation()
-    observed = df.observe(
-        obs,
-        F.count(F.lit(1)).alias("rows"),
-        F.sum(F.col(key_col).isNull().cast("long")).alias("null_keys"),
-        F.sum((F.col(measure_col) < 0).cast("long")).alias(
-            "negative_measures"
-        ),
-    )
-    return observed, obs
-
-
 # Candidate foreign-key pairs to profile: (child table, child col,
 # parent table, parent col). Single source of truth for plan + oracle.
 FK_CANDIDATES: tuple[tuple[str, str, str, str], ...] = (

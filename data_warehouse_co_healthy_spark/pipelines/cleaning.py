@@ -4,13 +4,12 @@ The reference repairs mojibake city names with a 9-branch CASE chain,
 duplicated verbatim in two pipelines (reference
 processing/retreat_process.py:119-134 and
 processing/service_process.py:69-87). Here the mapping is one table,
-applied either as a ``when`` chain (same semantics) or as a broadcast
-mapping-table join — the scalable form when the mapping grows.
+applied as a ``when`` chain (same semantics).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 # Mojibake → repaired city name (behavior observed at reference
@@ -34,19 +33,3 @@ def repair_municipio(col: Column) -> Column:
     for bad, good in MUNICIPIO_REPAIRS.items():
         expr = F.when(col == bad, good).otherwise(expr)
     return expr
-
-
-def repair_municipio_via_join(
-    spark: SparkSession, df: DataFrame, column: str = "municipio"
-) -> DataFrame:
-    """Broadcast mapping-table join form — same result, O(1) plan depth
-    however large the mapping (the when-chain grows the expression tree
-    per entry)."""
-    mapping = spark.createDataFrame(
-        list(MUNICIPIO_REPAIRS.items()), f"{column} string, _fixed string"
-    )
-    return (
-        df.join(F.broadcast(mapping), on=column, how="left")
-        .withColumn(column, F.coalesce("_fixed", column))
-        .drop("_fixed")
-    )

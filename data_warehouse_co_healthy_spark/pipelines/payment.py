@@ -15,28 +15,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-DEMOGRAPHIC_KEYS = [
-    "direccion", "estado_civil", "estracto", "tipo_discapacidad",
-    "salario_base",
-]
-
-
-def enrich_contributor(
-    dim_demografica: DataFrame, cotizante: DataFrame
-) -> DataFrame:
-    """Recover demografica_id by matching all five demographic attributes
-    (reference payment_process.py:136-138) — in-engine, no round-trip."""
-    return (
-        F.broadcast(dim_demografica)
-        .join(cotizante, on=DEMOGRAPHIC_KEYS)
-        .select(
-            "cedula", "nombre", "tipo_cotizante", "sexo",
-            "fecha_nacimiento", "nivel_escolaridad", "fecha_afiliacion",
-            "demografica_id",
-        )
-    )
-
-
 def build_fact_facturacion(
     pagos: DataFrame,
     cotizante: DataFrame,

@@ -12,27 +12,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .cleaning import repair_municipio
-from .payment import DEMOGRAPHIC_KEYS
-
-
-def enrich_contributor_retreat(
-    dim_demografica: DataFrame, cotizante: DataFrame
-) -> DataFrame:
-    """Reference retreat_process.py:148-153: recover demografica_id and
-    normalize proviene_otra_eps to boolean."""
-    return (
-        F.broadcast(dim_demografica)
-        .join(cotizante, on=DEMOGRAPHIC_KEYS)
-        .select(
-            "cedula", "nombre", "tipo_cotizante", "sexo",
-            "fecha_nacimiento", "nivel_escolaridad", "fecha_afiliacion",
-            "demografica_id", "proviene_otra_eps",
-        )
-        .withColumn(
-            "proviene_otra_eps",
-            F.when(F.col("proviene_otra_eps") == 1, True).otherwise(False),
-        )
-    )
 
 
 def build_fact_retiro(

@@ -317,186 +317,3 @@ class ParquetPagesSource(DataSource):
 def register_parquet_pages(spark) -> None:
     """Idempotent registration of the paged-parquet source."""
     spark.dataSource.register(ParquetPagesSource)
-
-
-# ---------------------------------------------------------------------------
-# Custom committable SINK: the writer side of the Python DataSource API.
-# ---------------------------------------------------------------------------
-
-from dataclasses import dataclass  # noqa: E402
-
-from pyspark.sql.datasource import (  # noqa: E402
-    DataSourceArrowWriter,
-    DataSourceWriter,
-    WriterCommitMessage,
-)
-
-
-@dataclass
-class _PartFile(WriterCommitMessage):
-    path: str
-    n_rows: int
-
-
-class JsonlDirWriter(DataSourceWriter):
-    """Executor-parallel JSON-lines sink with ATOMIC commit: each task
-    writes a staging part file and returns a commit message; only the
-    driver-side ``commit`` publishes the manifest (``_SUCCESS`` with
-    file list + row counts), so readers keyed on the manifest never see
-    a half-written dataset and a failed job leaves only unreferenced
-    staging files for ``abort`` to sweep. Same two-phase contract as
-    Spark's file committers, expressed in ~40 lines of Python — the
-    template for any at-least-once external sink (REST bulk, search
-    index, feature store).
-
-    LOCAL-FS ONLY as written: executors ``open()`` paths that the
-    driver's ``commit`` re-reads, which assumes a shared filesystem
-    (local mode / NFS). On a cluster, point ``path`` at a mounted DFS
-    or swap the raw ``open``/``os`` calls for fsspec/Hadoop-FS
-    handles — the two-phase commit protocol itself is unchanged."""
-
-    def __init__(self, options):
-        self.path = options.get("path")
-        if not self.path:
-            raise ValueError("jsonldir sink requires option 'path'")
-
-    def write(self, iterator):
-        # Runs ON THE EXECUTOR, one call per partition.
-        import json
-        import os
-        import uuid
-
-        os.makedirs(self.path, exist_ok=True)
-        part = os.path.join(self.path, f"part-{uuid.uuid4().hex}.jsonl")
-        n = 0
-        with open(part, "w") as f:
-            for row in iterator:
-                f.write(json.dumps(row.asDict()) + "\n")
-                n += 1
-        return _PartFile(path=part, n_rows=n)
-
-    def commit(self, messages):
-        import json
-        import os
-
-        manifest = {
-            "files": [
-                {"path": os.path.basename(m.path), "n_rows": m.n_rows}
-                for m in messages
-            ],
-            "total_rows": sum(m.n_rows for m in messages),
-        }
-        with open(os.path.join(self.path, "_SUCCESS"), "w") as f:
-            json.dump(manifest, f)
-
-    def abort(self, messages):
-        import os
-
-        for m in messages:
-            if m is not None and os.path.exists(m.path):
-                os.remove(m.path)
-
-
-class JsonlDirSink(DataSource):
-    """``df.write.format("jsonldir").option("path", d).mode("append").save()``"""
-
-    @classmethod
-    def name(cls):
-        return "jsonldir"
-
-    def writer(self, schema, overwrite):
-        return JsonlDirWriter(self.options)
-
-
-def register_sink(spark) -> None:
-    """Idempotent registration of the jsonldir sink."""
-    spark.dataSource.register(JsonlDirSink)
-
-
-class ParquetDirArrowWriter(DataSourceArrowWriter):
-    """Arrow-VECTORIZED committable parquet sink — the writer-side
-    twin of ``ParquetPagesReader``: each task streams its
-    ``pyarrow.RecordBatch`` iterator straight into one staging part
-    file through ``pyarrow.parquet.ParquetWriter`` (no Spark Row ever
-    materializes in Python — the same zero-per-row contract as the
-    reader's RecordBatch output), returns a commit message, and only
-    the driver-side ``commit`` publishes the manifest. Same two-phase
-    atomicity as JsonlDirWriter, at Arrow batch speed; the row-group
-    size per part is whatever batch sizing Spark hands over, so at
-    scale part files arrive pre-chunked for the paged reader.
-
-    LOCAL-FS ONLY as written (same caveat as JsonlDirWriter): swap the
-    raw ``open``/``os`` calls for fsspec/Hadoop-FS handles on a
-    cluster; the protocol is unchanged."""
-
-    def __init__(self, options):
-        self.path = options.get("path")
-        if not self.path:
-            raise ValueError("parquetdir sink requires option 'path'")
-
-    def write(self, iterator):
-        # Runs ON THE EXECUTOR: one pyarrow writer per partition.
-        import os  # noqa: PLC0415
-        import uuid  # noqa: PLC0415
-
-        import pyarrow.parquet as pq  # noqa: PLC0415
-
-        os.makedirs(self.path, exist_ok=True)
-        part = os.path.join(
-            self.path, f"part-{uuid.uuid4().hex}.parquet"
-        )
-        writer = None
-        n = 0
-        try:
-            for batch in iterator:
-                if writer is None:
-                    writer = pq.ParquetWriter(part, batch.schema)
-                writer.write_batch(batch)
-                n += batch.num_rows
-        finally:
-            if writer is not None:
-                writer.close()
-        if writer is None:
-            return _PartFile(path="", n_rows=0)  # empty partition
-        return _PartFile(path=part, n_rows=n)
-
-    def commit(self, messages):
-        import json  # noqa: PLC0415
-        import os  # noqa: PLC0415
-
-        files = [
-            {"path": os.path.basename(m.path), "n_rows": m.n_rows}
-            for m in messages
-            if m.path
-        ]
-        manifest = {
-            "files": files,
-            "total_rows": sum(f["n_rows"] for f in files),
-        }
-        with open(os.path.join(self.path, "_SUCCESS"), "w") as f:
-            json.dump(manifest, f)
-
-    def abort(self, messages):
-        import os  # noqa: PLC0415
-
-        for m in messages:
-            if m is not None and m.path and os.path.exists(m.path):
-                os.remove(m.path)
-
-
-class ParquetDirSink(DataSource):
-    """``df.write.format("parquetdir").option("path", d)
-    .mode("append").save()`` — Arrow-batch parquet parts + manifest
-    commit."""
-
-    @classmethod
-    def name(cls):
-        return "parquetdir"
-
-    def writer(self, schema, overwrite):
-        return ParquetDirArrowWriter(self.options)
-
-
-def register_parquet_sink(spark) -> None:
-    """Idempotent registration of the parquetdir Arrow sink."""
-    spark.dataSource.register(ParquetDirSink)

@@ -8,7 +8,7 @@ DataFrame with an explicit schema; nothing materializes on the driver
 except genuinely driver-side payloads (REST pages, spreadsheet files),
 which are bounded by contract (dims ≤ ~1200 rows in the reference).
 
-Scale posture: parquet/CSV/JSON/JDBC reads are distributed scans with
+Scale posture: parquet and JDBC reads are distributed scans with
 predicate/column pushdown. JDBC reads accept partitioning options so a
 big table scan fans out across executors instead of one connection
 (the reference read the whole table through one cursor)."""
@@ -18,7 +18,6 @@ from __future__ import annotations
 from collections.abc import Callable, Iterable
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 
@@ -31,63 +30,6 @@ def read_parquet(
     if schema is not None:
         reader = reader.schema(schema)
     return reader.parquet(path)
-
-
-def read_csv(
-    spark: SparkSession, path: str, schema: T.StructType, header: bool = True
-) -> DataFrame:
-    """CSV with a REQUIRED explicit schema — inferSchema re-reads the
-    data and guesses; the engine never infers (SURVEY §1.3)."""
-    return spark.read.schema(schema).csv(path, header=header)
-
-
-def read_json(
-    spark: SparkSession, path: str, schema: T.StructType
-) -> DataFrame:
-    return spark.read.schema(schema).json(path)
-
-
-CORRUPT_COL = "_corrupt_record"
-
-
-def read_jsonl_robust(
-    spark: SparkSession, path: str, schema: T.StructType
-) -> tuple[DataFrame, DataFrame]:
-    """JSON-lines ingest with corrupt-record quarantine: returns
-    (good_rows, bad_rows). Bad lines keep their raw text in
-    ``_corrupt_record`` instead of killing the job (PERMISSIVE mode) —
-    at crawl scale some malformed lines are a certainty and a fail-fast
-    reader is unusable. The explicit schema is mandatory: schema
-    inference would scan the corpus twice.
-    """
-    full = T.StructType(
-        schema.fields + [T.StructField(CORRUPT_COL, T.StringType())]
-    )
-    df = (
-        spark.read.schema(full)
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", CORRUPT_COL)
-        .json(path)
-        # Spark requires a checkpoint/cache boundary before filtering on
-        # the corrupt-record column (SPARK-21610: the pushed-down filter
-        # would otherwise reference a column the parser hasn't produced)
-        .cache()
-    )
-    good = df.filter(F.col(CORRUPT_COL).isNull()).drop(CORRUPT_COL)
-    bad = df.filter(F.col(CORRUPT_COL).isNotNull()).select(CORRUPT_COL)
-    return good, bad
-
-
-def read_orc(
-    spark: SparkSession, path: str, schema: T.StructType | None = None
-) -> DataFrame:
-    """ORC source — same columnar pushdown/pruning posture as parquet
-    (predicate pushdown + column pruning reach the ORC reader); schema
-    optional because ORC files carry their own."""
-    r = spark.read
-    if schema is not None:
-        r = r.schema(schema)
-    return r.orc(path)
 
 
 def read_binary_files(
@@ -113,32 +55,6 @@ def read_binary_files(
     if glob is not None:
         r = r.option("pathGlobFilter", glob)
     return r.load(path)
-
-
-def read_text_corpus(
-    spark: SparkSession,
-    path: str,
-    whole_file: bool = False,
-    line_sep: str | None = None,
-) -> DataFrame:
-    """Raw text-corpus ingest via the ``text`` source. Default mode is
-    one row per line (``value`` STRING) — splittable, so a single huge
-    file still fans out across tasks. ``whole_file=True`` flips to
-    doc-per-file (``wholetext``), the right grain when each file IS one
-    document — NOT splittable, so use it for many small files, never
-    one giant one. A custom ``line_sep`` handles record-separated dumps
-    (e.g. ``\\0``-delimited corpora)."""
-    r = spark.read.format("text").option("wholetext", str(whole_file).lower())
-    if line_sep is not None:
-        r = r.option("lineSep", line_sep)
-    df = r.load(path)
-    if whole_file:
-        # carry provenance: doc-per-file rows are useless without the
-        # originating path (dedup/audit joins key on it)
-        df = df.select(
-            F.input_file_name().alias("path"), F.col("value").alias("text")
-        )
-    return df
 
 
 def read_jdbc(

@@ -41,22 +41,15 @@ def overwrite_partitions_dynamic(df: DataFrame, path: str) -> None:
     The partition column set must match the table's existing layout.
     """
     spark = df.sparkSession
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "STATIC")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        existing = spark.read.parquet(path)
-        part_cols = [
-            c for c in existing.columns if c not in df.columns
-        ]
-        if part_cols:
-            raise ValueError(
-                f"df is missing partition columns {part_cols} of {path}"
-            )
-        df.write.mode("overwrite").partitionBy(
-            *_partition_cols_of(spark, path)
-        ).parquet(path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    existing = spark.read.parquet(path)
+    part_cols = [c for c in existing.columns if c not in df.columns]
+    if part_cols:
+        raise ValueError(
+            f"df is missing partition columns {part_cols} of {path}"
+        )
+    df.write.mode("overwrite").option(
+        "partitionOverwriteMode", "dynamic"
+    ).partitionBy(*_partition_cols_of(spark, path)).parquet(path)
 
 
 def _partition_cols_of(spark, path: str) -> list[str]:
@@ -102,21 +95,6 @@ def write_bucketed(
     writer.format("parquet").saveAsTable(table)
 
 
-def write_orc(
-    df: DataFrame,
-    path: str,
-    partition_by: tuple[str, ...] = (),
-    mode: str = "overwrite",
-) -> None:
-    """ORC sink (zlib by default) — interchange with Hive/Trino stacks
-    standardized on ORC; identical partition-pruning layout rules as
-    write_parquet."""
-    writer = df.write.mode(mode)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.orc(path)
-
-
 def write_csv(df: DataFrame, path: str, mode: str = "overwrite") -> None:
     """K3-parity CSV directory write (reference
     medical_formula_process.py:122 — header, overwrite)."""
@@ -159,42 +137,6 @@ def write_versioned(df: DataFrame, path: str) -> int:
         f"{path.rstrip('/')}/version={version}"
     )
     return version
-
-
-def snapshot_diff(
-    spark, path: str, v_old: int, v_new: int, key_cols: tuple[str, ...]
-):
-    """Change-data-feed between two snapshot versions: full-outer join
-    on the key with row-hash comparison → one frame labeled
-    insert/delete/update per key (the diff a downstream consumer
-    replays instead of re-reading the whole new snapshot).
-
-    Scale: one shuffle per side on the key; the row hash (xxhash64 over
-    all non-key columns) is computed at the scan so the join carries
-    (key, 8-byte hash), not full rows — re-read the new snapshot only
-    for the keys you need payloads for."""
-    from pyspark.sql import functions as F  # noqa: PLC0415
-
-    old = read_version(spark, path, v_old)
-    new = read_version(spark, path, v_new)
-    val_cols = [c for c in new.columns if c not in key_cols]
-
-    def keyed(df):
-        return df.select(
-            *key_cols, F.xxhash64(*val_cols).alias("row_hash")
-        )
-
-    o = keyed(old).withColumnRenamed("row_hash", "old_hash")
-    n = keyed(new).withColumnRenamed("row_hash", "new_hash")
-    j = o.join(n, on=list(key_cols), how="full_outer")
-    return j.select(
-        *key_cols,
-        F.when(F.col("old_hash").isNull(), "insert")
-        .when(F.col("new_hash").isNull(), "delete")
-        .when(F.col("old_hash") != F.col("new_hash"), "update")
-        .otherwise("unchanged")
-        .alias("change"),
-    ).filter(F.col("change") != "unchanged")
 
 
 def vacuum_versions(
@@ -432,15 +374,6 @@ def vacuum_uncommitted(path: str, spark=None) -> list[int]:
     return orphans
 
 
-def read_evolved(spark, path: str):
-    """Schema-evolution read: union the schemas of every file in the
-    dataset (``mergeSchema``) so frames written before a column existed
-    surface it as NULL — the read side of additive schema evolution.
-    Footer merging costs one pass over file metadata; at 100 TB pin the
-    merged schema in a catalog instead and pass it explicitly."""
-    return spark.read.option("mergeSchema", "true").parquet(path)
-
-
 def read_version(spark, path: str, version: int | None = None):
     """Read one snapshot (default: latest, discovered via the Hadoop
     FileSystem API)."""
@@ -559,75 +492,6 @@ def write_zordered(
         .write.mode(mode)
         .parquet(path)
     )
-
-
-def table_report(path: str, stat_cols: tuple[str, ...] = ()) -> dict:
-    """Table-health report from parquet FOOTERS only (no data scan):
-    file count/size distribution, row-group sizes, and per-file min/max
-    clustering quality for ``stat_cols``. The triage step before
-    choosing ``compact_parquet`` (too many small files) or
-    ``write_zordered`` (overlapping min/max boxes) — on a 100 TB table
-    footers are KBs where the data is TBs.
-
-    ``clustering overlap`` per column = mean fraction of OTHER files
-    whose [min,max] interval intersects each file's (1.0 ≈ every file
-    overlaps every other → no skipping; → 0 ≈ disjoint → near-perfect
-    skipping).
-
-    Footer reads use pyarrow on a direct path (local/NFS); for object
-    stores hand pyarrow an fsspec filesystem — unlike the maintenance
-    utilities above this function must read FILE BYTES (footers), not
-    just listings, so the Hadoop-FS metadata wrapper doesn't apply."""
-    import glob as _glob
-    import os as _os
-
-    import pyarrow.parquet as _pq
-
-    files = sorted(_glob.glob(_os.path.join(path, "*.parquet")))
-    sizes = [_os.path.getsize(f) for f in files]
-    rows, row_groups = 0, 0
-    bounds: dict[str, list[tuple]] = {c: [] for c in stat_cols}
-    for f in files:
-        md = _pq.ParquetFile(f).metadata
-        rows += md.num_rows
-        row_groups += md.num_row_groups
-        lo: dict[str, object] = {}
-        hi: dict[str, object] = {}
-        for rg in range(md.num_row_groups):
-            g = md.row_group(rg)
-            for i in range(g.num_columns):
-                col = g.column(i)
-                c = col.path_in_schema
-                if c in bounds and col.statistics is not None:
-                    st = col.statistics
-                    lo[c] = st.min if c not in lo else min(lo[c], st.min)
-                    hi[c] = st.max if c not in hi else max(hi[c], st.max)
-        for c in stat_cols:
-            if c in lo:
-                bounds[c].append((lo[c], hi[c]))
-    overlap = {}
-    for c, boxes in bounds.items():
-        if len(boxes) < 2:
-            overlap[c] = 0.0
-            continue
-        inter = sum(
-            sum(
-                1
-                for j, (lo2, hi2) in enumerate(boxes)
-                if i != j and not (hi1 < lo2 or lo1 > hi2)
-            )
-            for i, (lo1, hi1) in enumerate(boxes)
-        )
-        overlap[c] = round(inter / (len(boxes) * (len(boxes) - 1)), 4)
-    return {
-        "n_files": len(files),
-        "total_bytes": sum(sizes),
-        "min_file_bytes": min(sizes, default=0),
-        "max_file_bytes": max(sizes, default=0),
-        "n_rows": rows,
-        "n_row_groups": row_groups,
-        "clustering_overlap": overlap,
-    }
 
 
 def rest_bulk_insert(

@@ -1,163 +1,22 @@
-"""Streaming document near-dedup: an online SimHash duplicate detector
-over a document stream (engine-added capability — the streaming twin of
-llm/dedup.py's batch SimHash pipeline).
+"""Streaming staging helpers and the embedding-stream quality scorer.
 
-The ingestion-time shape every crawl pipeline wants: as documents
-arrive, each is fingerprinted and checked against the documents already
-seen in its SimHash byte-block buckets; near-dups (hamming <= 6) are
-emitted IMMEDIATELY, not in a nightly batch job. State is the per-bucket
-fingerprint list — (doc_id, simhash) longs, never text — bounded by the
-same skew-cap philosophy as the batch LSH bucket cap.
+The file stream source reads a DIRECTORY, while the fixtures are single
+parquet files; ``_staged_dir`` stages each fixture once per process
+(symlink or materialized files), keyed on the fixture's fingerprint,
+and every file-stream source in the package goes through it.
+``fresh_tmpdir`` hands out never-cached dirs on the same atexit
+cleanup.
 
-Dataflow: stateless Arrow fingerprinting (mapInPandas — md5 per token,
-bit-majority vote, IDENTICAL values to llm/dedup.simhash_docs) -> 4-way
-block-key fan-out -> applyInPandasWithState keyed by (block, byte): each
-arriving doc compares against its bucket's fingerprints and is appended.
-At-least-once pair emission (a pair sharing two block keys surfaces in
-both buckets) — consumers dedupe downstream, the standard streaming
-contract. Equality with the batch pair set is asserted in
-tests/test_streaming.py.
+``streaming_quality_scores`` is the train-offline / serve-online shape:
+the quality probe is fitted in batch and the arriving embedding stream
+is scored with the batch scorer (asserted bit-identical in
+tests/test_streaming.py).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-from ..llm.dedup import HAMMING_MAX, SIMHASH_BITS
-
-N_BLOCKS = 4          # byte blocks of the 32-bit simhash (pigeonhole)
-MAX_BUCKET_STATE = 512  # fingerprints kept per bucket (skew guard)
-
-
-def stage_documents_dir(sf_dir: str) -> str:
-    """File-stream staging for the documents fixture (symlink dir, no
-    copy) — cached via the shared ``_staged_dir`` helper."""
-    import os  # noqa: PLC0415
-
-    def build(d: str) -> None:
-        os.symlink(
-            os.path.join(sf_dir, "documents.parquet"),
-            os.path.join(d, "documents.parquet"),
-        )
-
-    return _staged_dir(
-        "documents",
-        sf_dir,
-        "docs_stream_",
-        build,
-        src=os.path.join(sf_dir, "documents.parquet"),
-    )
-
-
-def read_documents_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    staged = stage_documents_dir(sf_dir)
-    schema = spark.read.parquet(staged).schema
-    return (
-        spark.readStream.schema(schema)
-        .format("parquet")
-        .load(staged)
-        .select("doc_id", "text")
-    )
-
-
-def _simhash_py(text: str) -> int:
-    """Bit-exact Python twin of llm/dedup.simhash_docs: md5-derived
-    32-bit token hash, occurrence-weighted bitwise majority vote."""
-    import hashlib  # noqa: PLC0415
-
-    votes = [0] * SIMHASH_BITS
-    for w in text.lower().split(" "):
-        if not w:
-            continue
-        h = int(hashlib.md5(w.encode("utf-8")).hexdigest()[:8], 16)
-        for b in range(SIMHASH_BITS):
-            votes[b] += 1 if (h >> b) & 1 else -1
-    return sum(1 << b for b in range(SIMHASH_BITS) if votes[b] > 0)
-
-
-def fingerprints(docs: DataFrame) -> DataFrame:
-    """Stateless Arrow fingerprinting stage: (doc_id, simhash)."""
-    import pandas as pd  # noqa: PLC0415
-
-    def run(batches):
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "simhash": pdf["text"].map(_simhash_py).astype(
-                        "int64"
-                    ),
-                }
-            )
-
-    return docs.mapInPandas(run, schema="doc_id long, simhash long")
-
-
-def streaming_simhash_dedup(docs: DataFrame) -> DataFrame:
-    """Online near-dup alerts: (doc_id, dup_of, hamming) emitted the
-    moment a document lands within HAMMING_MAX bits of a previously
-    seen one in any shared byte-block bucket."""
-    import pandas as pd  # noqa: PLC0415
-    from pyspark.sql.streaming.state import GroupState  # noqa: PLC0415
-
-    fp = fingerprints(docs)
-    blocks = F.array(
-        *[
-            F.struct(
-                F.lit(j).alias("blk"),
-                F.expr(f"(simhash >> {8 * j}) & 255").alias("byte"),
-            )
-            for j in range(N_BLOCKS)
-        ]
-    )
-    keyed = fp.select(
-        "doc_id", "simhash", F.explode(blocks).alias("b")
-    ).select("doc_id", "simhash", "b.blk", "b.byte")
-
-    out_schema = "doc_id long, dup_of long, hamming integer"
-    state_schema = "ids array<long>, sims array<long>"
-
-    def update(key, pdfs, state: GroupState):
-        ids, sims = state.get if state.exists else ([], [])
-        ids, sims = list(ids), list(sims)
-        out_doc, out_dup, out_ham = [], [], []
-        from data_warehouse_co_healthy_spark.streaming.microbatch import (  # noqa: PLC0415,E501
-            whole_batch,
-        )
-
-        # whole-batch doc_id sort (see streaming.microbatch): per-chunk
-        # order would make dup_of direction depend on chunk boundaries
-        pdf = whole_batch(pdfs, "doc_id")
-        if pdf is not None:
-            for _, row in pdf.iterrows():
-                s = int(row["simhash"])
-                for pid, psim in zip(ids, sims):
-                    ham = bin(s ^ psim).count("1")
-                    if ham <= HAMMING_MAX:
-                        out_doc.append(int(row["doc_id"]))
-                        out_dup.append(pid)
-                        out_ham.append(ham)
-                if len(ids) < MAX_BUCKET_STATE:
-                    ids.append(int(row["doc_id"]))
-                    sims.append(s)
-        state.update((ids, sims))
-        yield pd.DataFrame(
-            {
-                "doc_id": pd.Series(out_doc, dtype="int64"),
-                "dup_of": pd.Series(out_dup, dtype="int64"),
-                "hamming": pd.Series(out_ham, dtype="int32"),
-            }
-        )
-
-    return keyed.groupBy("blk", "byte").applyInPandasWithState(
-        update,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="update",
-        timeoutConf="NoTimeout",
-    )
 
 
 _STAGED_DIRS: dict[tuple, str] = {}
@@ -314,235 +173,3 @@ def streaming_quality_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
             "probe weights to serve (train on a non-empty corpus)"
         )
     return score_linear_probe(read_embeddings_stream(spark, sf_dir), w)
-
-
-MEDIA_STAGE_N = 60  # files staged per fixture dir (bounded, cached)
-
-
-def stage_media_dir(spark: SparkSession, sf_dir: str) -> str:
-    """Stage a bounded directory of REAL encoded image files
-    (.bmp/.ppm/.png via the vendored codec — PNG rotated in round 9
-    with media_images' mod-3 fmt split) derived from the documents
-    fixture — the on-disk media lake both the batch binaryFile reader
-    and the streaming source ingest (shared ``_staged_dir`` cache —
-    keyed on the documents fixture's fingerprint, so rewriting the
-    fixture in-process re-materializes the media)."""
-    import os  # noqa: PLC0415
-
-    def build(d: str) -> None:
-        from ..llm import multimodal  # noqa: PLC0415
-
-        rows = (
-            multimodal.media_images(spark, sf_dir)
-            .limit(MEDIA_STAGE_N)
-            .collect()  # bounded by MEDIA_STAGE_N tiny files
-        )
-        for r in rows:
-            with open(
-                os.path.join(d, f"media_{r['media_id']}.{r['fmt']}"), "wb"
-            ) as f:
-                f.write(bytes(r["payload"]))
-
-    return _staged_dir(
-        "media",
-        sf_dir,
-        "media_stream_",
-        build,
-        src=os.path.join(sf_dir, "documents.parquet"),
-    )
-
-
-def stage_media_dir_jpeg(spark: SparkSession, sf_dir: str) -> str:
-    """Stage a bounded directory of REAL baseline-JPEG files — the
-    ``jpeg_decode_stats`` construction (solid gray v = 2·((7·id) mod
-    128), coding variant rotating 4:4:4 / 4:2:0 / restart-interval on
-    id mod 3) written through the vendored T.81 encoder — so the
-    ingest-time decode stream exercises the Huffman/IDCT/upsample
-    path, not just the header-parse BMP/PPM one (VERDICT r9 item 6).
-    Same bounded-staging contract as ``stage_media_dir``."""
-    import os  # noqa: PLC0415
-
-    def build(d: str) -> None:
-        import numpy as np  # noqa: PLC0415
-
-        from ..catalog import load_table  # noqa: PLC0415
-        from ..llm import imagecodec  # noqa: PLC0415
-        from ..llm.multimodal import (  # noqa: PLC0415
-            IMG_H_BASE,
-            IMG_H_MOD,
-            IMG_W_BASE,
-            IMG_W_MOD,
-            JPEG_GRAY_MOD,
-        )
-
-        ids = [
-            r[0]
-            for r in load_table(spark, sf_dir, "documents")
-            .select("doc_id")
-            .orderBy("doc_id")
-            .limit(MEDIA_STAGE_N)
-            .collect()  # bounded by MEDIA_STAGE_N tiny files
-        ]
-        for mid in ids:
-            v = 2 * ((7 * mid) % JPEG_GRAY_MOD)
-            w = IMG_W_BASE + 8 + mid % IMG_W_MOD
-            h = IMG_H_BASE + 8 + mid % IMG_H_MOD
-            variant = ("444", "420", "rst")[mid % 3]
-            img = np.full((h, w, 3), v, dtype=np.uint8)
-            payload = imagecodec.encode_jpeg_baseline(
-                img,
-                subsample=variant == "420",
-                restart_interval=2 if variant == "rst" else 0,
-            )
-            with open(os.path.join(d, f"media_{mid}.jpg"), "wb") as f:
-                f.write(payload)
-
-    return _staged_dir(
-        "media_jpeg",
-        sf_dir,
-        "media_jpeg_stream_",
-        build,
-        src=os.path.join(sf_dir, "documents.parquet"),
-    )
-
-
-def streaming_jpeg_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Ingest-time JPEG decode: the same binaryFile-stream →
-    ``file_decode_stats`` twin as ``streaming_media_decode``, pointed
-    at the staged baseline-JPEG lake — each arriving file runs the
-    full vendored T.81 path (Huffman entropy decode, dequant, IDCT,
-    sampling-factor upsample, YCbCr→RGB) the moment it lands.
-    Stream-vs-batch bit-equality and the closed-form gray check are
-    pinned in tests/test_streaming.py."""
-    from ..llm.multimodal import file_decode_stats  # noqa: PLC0415
-
-    media_dir = stage_media_dir_jpeg(spark, sf_dir)
-    stream = (
-        spark.readStream.format("binaryFile")
-        .schema(
-            "path string, modificationTime timestamp, "
-            "length long, content binary"
-        )
-        .load(media_dir)
-    )
-    return file_decode_stats(stream)
-
-
-def stage_media_dir_av(spark: SparkSession, sf_dir: str) -> str:
-    """Stage a bounded directory of REAL A/V containers — animated
-    GIF89a clips (the gif_frame_stats formula: 16-color palette,
-    2 + id%3 frames) alternating with RIFF/WAVE PCM16 clips (the
-    wav_energy_windows sample formula) on doc_id parity — so the
-    ingest-time decode stream exercises the LZW and chunk-walk codec
-    paths too, completing VERDICT r9 item 6 across all four vendored
-    codecs. Same bounded-staging contract as ``stage_media_dir``."""
-    import os  # noqa: PLC0415
-
-    def build(d: str) -> None:
-        import numpy as np  # noqa: PLC0415
-
-        from ..catalog import load_table  # noqa: PLC0415
-        from ..llm import audiocodec, gifcodec  # noqa: PLC0415
-        from ..llm.multimodal import (  # noqa: PLC0415
-            GIF_BASE_FRAMES,
-            GIF_PALETTE_N,
-            IMG_H_BASE,
-            IMG_H_MOD,
-            IMG_W_BASE,
-            IMG_W_MOD,
-            WAV_BASE_SAMPLES,
-            WAV_SAMPLE_MOD,
-        )
-
-        pal = np.stack(
-            [
-                (5 * np.arange(GIF_PALETTE_N)) % 256,
-                (11 * np.arange(GIF_PALETTE_N)) % 256,
-                (23 * np.arange(GIF_PALETTE_N)) % 256,
-            ],
-            axis=1,
-        ).astype(np.uint8)
-        ids = [
-            r[0]
-            for r in load_table(spark, sf_dir, "documents")
-            .select("doc_id")
-            .orderBy("doc_id")
-            .limit(MEDIA_STAGE_N)
-            .collect()  # bounded by MEDIA_STAGE_N tiny files
-        ]
-        for mid in ids:
-            if mid % 2 == 0:
-                w = IMG_W_BASE + mid % IMG_W_MOD
-                h = IMG_H_BASE + mid % IMG_H_MOD
-                nf = GIF_BASE_FRAMES + mid % 3
-                i = np.arange(w * h, dtype=np.int64)
-                frames = [
-                    ((mid + 7 * f + 3 * i) % GIF_PALETTE_N)
-                    .astype(np.uint8)
-                    .reshape(h, w)
-                    for f in range(nf)
-                ]
-                payload = gifcodec.encode_gif(frames, pal)
-                name = f"media_{mid}.gif"
-            else:
-                n = WAV_BASE_SAMPLES + (mid % 3) * 64
-                i = np.arange(n, dtype=np.int64)
-                s = (
-                    (31 * mid + 17 * i) % WAV_SAMPLE_MOD - 2000
-                ).astype(np.int16)
-                payload = audiocodec.encode_wav(s, sample_rate=16_000)
-                name = f"media_{mid}.wav"
-            with open(os.path.join(d, name), "wb") as f:
-                f.write(payload)
-
-    return _staged_dir(
-        "media_av",
-        sf_dir,
-        "media_av_stream_",
-        build,
-        src=os.path.join(sf_dir, "documents.parquet"),
-    )
-
-
-def streaming_av_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Ingest-time GIF/WAV decode: binaryFile stream over the staged
-    A/V lake through the shared ``file_av_stats`` transform — each
-    arriving container runs the full vendored LZW (GIF) or chunk-walk
-    PCM16 (WAV) path the moment it lands. Stream-vs-batch
-    bit-equality pinned in tests/test_streaming.py."""
-    from ..llm.multimodal import file_av_stats  # noqa: PLC0415
-
-    media_dir = stage_media_dir_av(spark, sf_dir)
-    stream = (
-        spark.readStream.format("binaryFile")
-        .schema(
-            "path string, modificationTime timestamp, "
-            "length long, content binary"
-        )
-        .load(media_dir)
-    )
-    return file_av_stats(stream)
-
-
-def streaming_media_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Ingest-time image decode: a binaryFile STREAM over the staged
-    media lake, each arriving file's bytes parsed by the vendored
-    BMP/PPM codec the moment it lands — the media analog of
-    streaming_quality_scores' train-offline/serve-online shape. The
-    transform is the SAME ``file_decode_stats`` the batch reader uses,
-    so stream and batch outputs are bit-identical (asserted in
-    tests/test_streaming.py). Per-file work is stateless; a 100 TB
-    media lake streams through at source-discovery parallelism with
-    maxFilesPerTrigger as the batch-size knob."""
-    from ..llm.multimodal import file_decode_stats  # noqa: PLC0415
-
-    media_dir = stage_media_dir(spark, sf_dir)
-    stream = (
-        spark.readStream.format("binaryFile")
-        .schema(
-            "path string, modificationTime timestamp, "
-            "length long, content binary"
-        )
-        .load(media_dir)
-    )
-    return file_decode_stats(stream)

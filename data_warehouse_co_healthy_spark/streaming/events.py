@@ -140,39 +140,6 @@ def ohlc_daily_stream(
     )
 
 
-def windowed_distinct_users(
-    events: DataFrame,
-    window: str = "1 hour",
-    watermark: str = "2 hours",
-    rsd: float = 0.02,
-) -> DataFrame:
-    """Distinct users per tumbling window on a stream: exact
-    count-distinct is unbounded-state in streaming, so this is the
-    approx_count_distinct (HLL) aggregate — per-window state is one
-    sketch, watermark-evicted. rsd=0.02 (vs the 0.05 default) costs a
-    ~4× larger sketch per window — still KBs of bounded state — and
-    keeps the worst-window error well inside the batch-reconciliation
-    bound at every fixture scale (the 0.05 default showed 20% error on
-    one small-cardinality sf0.01 window: HLL's small-range bias, not
-    the rsd itself). The batch reconciliation (exact countDistinct vs
-    this estimate) is pinned in tests/test_streaming.py."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("w"))
-        .agg(
-            F.approx_count_distinct("user_id", rsd).alias(
-                "approx_users"
-            ),
-            F.count("*").alias("n_events"),
-        )
-        .select(
-            F.col("w").getField("start").alias("bucket"),
-            "approx_users",
-            "n_events",
-        )
-    )
-
-
 def sessionized(
     events: DataFrame,
     gap: str = "30 minutes",
@@ -287,78 +254,6 @@ def running_user_totals_exact(events: DataFrame) -> DataFrame:
     )
 
 
-def zscore_anomalies_stream(
-    events: DataFrame,
-    window: int = 20,
-    min_n: int = 5,
-    thresh: float = 2.5,
-) -> DataFrame:
-    """Streaming twin of ``operators.temporal.rolling_zscore_anomalies``:
-    per-user bounded deque of the last ``window`` purchase values as
-    explicit state; each arriving purchase is scored against the deque
-    BEFORE being pushed (the batch op's self-excluding trailing frame).
-
-    State is O(window) floats per user — watermark-free because it is
-    size-bounded by construction. Within a micro-batch rows are sorted
-    by event time; across micro-batches arrival order stands in for
-    event order (the usual streaming approximation — replay the batch
-    op for exact backfills).
-    """
-    import pandas as pd  # noqa: PLC0415
-    from pyspark.sql.streaming.state import GroupState  # noqa: PLC0415
-
-    out_schema = (
-        "user_id long, event_id long, value double, zscore double"
-    )
-    state_schema = "vals array<double>"
-
-    def update(key, pdfs, state: GroupState):
-        from data_warehouse_co_healthy_spark.streaming.microbatch import (  # noqa: PLC0415,E501
-            whole_batch,
-        )
-
-        hist = list(state.get[0]) if state.exists else []
-        out_ids, out_vals, out_z = [], [], []
-        # whole-batch sort (see streaming.microbatch): per-chunk
-        # sorting would leave the recursion order at the mercy of
-        # Arrow chunk boundaries
-        pdf = whole_batch(pdfs)
-        if pdf is not None:
-            pdf = pdf[pdf["event_type"] == "purchase"].sort_values(
-                ["ts", "event_id"]
-            )
-            for ev_id, v in zip(pdf["event_id"], pdf["value"]):
-                if len(hist) >= min_n:
-                    s = pd.Series(hist)
-                    sd = float(s.std(ddof=1))
-                    if sd > 0:
-                        z = (float(v) - float(s.mean())) / sd
-                        if abs(z) > thresh:
-                            out_ids.append(int(ev_id))
-                            out_vals.append(float(v))
-                            out_z.append(round(z, 4))
-                hist.append(float(v))
-                if len(hist) > window:
-                    hist.pop(0)
-        state.update((hist,))
-        yield pd.DataFrame(
-            {
-                "user_id": [key[0]] * len(out_ids),
-                "event_id": out_ids,
-                "value": out_vals,
-                "zscore": out_z,
-            }
-        )
-
-    return events.groupBy("user_id").applyInPandasWithState(
-        update,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf="NoTimeout",
-    )
-
-
 def clamped_balance_stream(events: DataFrame) -> DataFrame:
     """Streaming twin of ``operators.temporal.clamped_running_balance``:
     the floor-clamped per-user credit balance maintained online. State
@@ -427,137 +322,6 @@ def clamped_balance_stream(events: DataFrame) -> DataFrame:
         "event_id",
         F.round("delta", 4).alias("delta"),
         F.round("balance", 4).alias("balance"),
-    )
-
-
-def cusum_drift_stream(
-    events: DataFrame,
-    mean: float,
-    std: float,
-    k: float | None = None,
-    h: float | None = None,
-) -> DataFrame:
-    """Streaming CUSUM drift monitor (Page 1954) — the online twin of
-    operators.temporal.cusum_changepoints, in the train-offline /
-    serve-online shape: the reference mean/std come from a BATCH
-    baseline (a trained parameter, like the quality probe's weights),
-    the stream only maintains the two one-sided drift sums per
-    event_type and emits a row whenever either crosses h.
-
-    State is exactly two floats per key — watermark-free because it is
-    O(1) by construction. Within a micro-batch rows are event-time
-    sorted; across micro-batches arrival order stands in for event
-    order (replay the batch op for exact backfills)."""
-    import pandas as pd  # noqa: PLC0415
-    from pyspark.sql.streaming.state import GroupState  # noqa: PLC0415
-
-    # default to the BATCH twin's constants so a tuning change there
-    # can't silently drift the online monitor out of agreement
-    from ..operators.temporal import CUSUM_H, CUSUM_K  # noqa: PLC0415
-
-    k = CUSUM_K if k is None else k
-    h = CUSUM_H if h is None else h
-
-    out_schema = (
-        "event_type string, event_id long, value double, "
-        "cusum_pos double, cusum_neg double"
-    )
-    state_schema = "sp double, sn double"
-
-    def update(key, pdfs, state: GroupState):
-        # absolute import: the closure is pickled to executors, where
-        # relative-import context is not guaranteed
-        from data_warehouse_co_healthy_spark.streaming.microbatch import (  # noqa: PLC0415,E501
-            whole_batch,
-        )
-
-        sp, sn = state.get if state.exists else (0.0, 0.0)
-        ids, vals, pos, neg = [], [], [], []
-        # whole-batch sort (see streaming.microbatch): per-chunk
-        # sorting would feed the recursion out of event-time order
-        pdf = whole_batch(pdfs, ["ts", "event_id"])
-        if pdf is not None:
-            for ev_id, v in zip(pdf["event_id"], pdf["value"]):
-                z = (float(v) - mean) / std
-                sp = max(0.0, sp + z - k)
-                sn = max(0.0, sn - z - k)
-                if sp > h or sn > h:
-                    ids.append(int(ev_id))
-                    vals.append(float(v))
-                    pos.append(sp)
-                    neg.append(sn)
-        state.update((sp, sn))
-        yield pd.DataFrame(
-            {
-                "event_type": [key[0]] * len(ids),
-                "event_id": ids,
-                "value": vals,
-                "cusum_pos": pos,
-                "cusum_neg": neg,
-            }
-        )
-
-    return events.groupBy("event_type").applyInPandasWithState(
-        update,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf="NoTimeout",
-    )
-
-
-def running_user_totals_tws(events: DataFrame) -> DataFrame:
-    """The same running per-user totals on the Spark 4
-    ``transformWithStateInPandas`` API — the successor to
-    applyInPandasWithState: named state variables on the RocksDB state
-    store, with timers and per-state TTL available for eviction policy
-    (neither needed here, so state is one value per user and size is
-    O(distinct users)).
-
-    Requires ``spark.sql.streaming.stateStore.providerClass`` =
-    RocksDBStateStoreProvider (set by the caller/test; HDFS-backed maps
-    don't support transformWithState) and the ``protobuf`` package
-    (state-server wire protocol; not installed in this container, so
-    the test skips — applyInPandasWithState above is the fully
-    exercised stateful path here)."""
-    import pandas as pd  # noqa: PLC0415
-    from pyspark.sql.streaming.stateful_processor import (  # noqa: PLC0415
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class RunningTotals(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._totals = handle.getValueState(
-                "totals", "n long, total double"
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            if self._totals.exists():
-                prev = self._totals.get()
-                n, total = int(prev[0]), float(prev[1])
-            else:
-                n, total = 0, 0.0
-            for pdf in rows:
-                n += len(pdf)
-                total += float(pdf["value"].sum())
-            self._totals.update((n, total))
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]],
-                    "n_events": [n],
-                    "total_value": [total],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    return events.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=RunningTotals(),
-        outputStructType="user_id long, n_events long, total_value double",
-        outputMode="Update",
-        timeMode="None",
     )
 
 
@@ -990,7 +754,7 @@ def merge_user_totals_sink(spark: SparkSession, target: str):
     return sink
 
 
-def _fresh_checkpoint(durable: bool = False) -> str:
+def _fresh_checkpoint() -> str:
     """Ephemeral checkpoint dir for the harness drains, on tmpfs where
     available (round-10 optimization pass, guide §6): the per-batch
     offset-WAL, commit-log and state-store delta writes are each
@@ -1005,21 +769,14 @@ def _fresh_checkpoint(durable: bool = False) -> str:
     storage: set $SPARK_GRAFT_STREAM_TMP (or pass an explicit
     checkpointLocation) to any filesystem. Dirs are released at query
     stop (``release_checkpoint``) with atexit as the backstop, same
-    hygiene as the staged source dirs.
-
-    GUARD (VERDICT r10 item 7): tmpfs is only legal when the sink
-    itself has no durability — a caller whose sink must survive the
-    process passes ``durable=True`` and NEVER silently inherits
-    /dev/shm (it gets $SPARK_GRAFT_STREAM_TMP or the disk tempdir)."""
+    hygiene as the staged source dirs."""
     import atexit  # noqa: PLC0415
     import os  # noqa: PLC0415
     import shutil  # noqa: PLC0415
     import tempfile  # noqa: PLC0415
 
     base = os.environ.get("SPARK_GRAFT_STREAM_TMP") or (
-        "/dev/shm"
-        if not durable and os.path.isdir("/dev/shm")
-        else tempfile.gettempdir()
+        "/dev/shm" if os.path.isdir("/dev/shm") else tempfile.gettempdir()
     )
     os.makedirs(base, exist_ok=True)
     d = tempfile.mkdtemp(prefix="sg_stream_ckpt_", dir=base)

@@ -107,24 +107,6 @@ def test_zorder_prunes_2d_box(spark, tmp_path):
     )
 
 
-def test_observe_dq_counts_ride_the_load(spark, tmp_path):
-    """Observation metrics must report exact counts from the sink's own
-    job — no second scan."""
-    from data_warehouse_co_healthy_spark.operators.warehouse import (
-        observe_dq,
-    )
-
-    li = spark.read.parquet(os.path.join(SF_DIR, "lineitem.parquet")).select(
-        "l_orderkey", "l_quantity"
-    )
-    observed, obs = observe_dq(li, "l_orderkey", "l_quantity")
-    observed.write.mode("overwrite").parquet(str(tmp_path / "out"))
-    metrics = obs.get
-    assert metrics["rows"] == li.count()
-    assert metrics["null_keys"] == 0
-    assert metrics["negative_measures"] == 0
-
-
 _BLOOM_CONFS = {
     "spark.sql.optimizer.runtime.bloomFilter.enabled": "true",
     "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold": "0",
@@ -210,33 +192,6 @@ def test_aqe_splits_skewed_join_partition(spark):
                 spark.conf.unset(k)
             else:
                 spark.conf.set(k, v)
-
-
-def test_table_report_detects_clustering_quality(spark, tmp_path):
-    """table_report must read footers only and rank the z-ordered
-    layout as better clustered (lower min/max overlap) than hash."""
-    from data_warehouse_co_healthy_spark.sources.writers import (
-        table_report,
-    )
-
-    cols = ("l_orderkey", "l_partkey")
-    li = spark.read.parquet(os.path.join(SF_DIR, "lineitem.parquet")).select(
-        *cols
-    )
-    zpath, hpath = str(tmp_path / "z"), str(tmp_path / "h")
-    write_zordered(li, zpath, cols, n_files=8)
-    li.repartition(8).write.parquet(hpath)
-    zr = table_report(zpath, stat_cols=cols)
-    hr = table_report(hpath, stat_cols=cols)
-    assert zr["n_rows"] == hr["n_rows"] == li.count()
-    assert zr["n_files"] > 0 and hr["n_files"] == 8
-    # hash layout: every file overlaps every other on both columns
-    assert hr["clustering_overlap"]["l_orderkey"] == 1.0
-    # z-order: the leading interleaved column must be far better
-    assert (
-        zr["clustering_overlap"]["l_orderkey"]
-        < hr["clustering_overlap"]["l_orderkey"]
-    )
 
 
 def test_dynamic_partition_pruning_star_join(spark, tmp_path):

@@ -54,7 +54,7 @@ def test_driver_window_keeps_family_representation():
         "co_pipelines": {"fact_formula_star", "fact_facturacion_star",
                          "fact_retiro_star", "fact_service_star"},
         # round-9: dedup_rows rotated out — U1/U2 union semantics run
-        # graded inside fact_service_star's safe_union and U3/U4
+        # graded inside fact_service_star's positional union and U3/U4
         # dedup semantics inside dedup_exact (canonical pick) and the
         # stream_dedup_drain state path, both in-window
         "setops": {"union_by_name", "union_positional", "dedup_rows",

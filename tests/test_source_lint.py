@@ -1,5 +1,11 @@
-"""Source-level lints for the round-6 ADVICE bug class: NULL-handling
-asymmetry between Spark expressions and the DuckDB oracle.
+"""Source-level lints.
+
+Reachability: every top-level def and class in the package must be
+reachable from the program's surface (queries, demos, benchmark)
+unless allowlisted with a reason.
+
+NULL-handling: the round-6 ADVICE bug class, asymmetry between Spark
+expressions and the DuckDB oracle.
 
 ``concat_ws`` SKIPS null arguments (shortening the string) while SQL
 ``||`` / ``F.concat`` propagate NULL — so a checksum/fingerprint built
@@ -110,3 +116,99 @@ def test_concat_ws_allowlist_has_no_stale_entries():
             live.add((rel, func))
     stale = set(CONCAT_WS_IN_HASH_OK) - live
     assert not stale, f"allowlist entries no longer in source: {stale}"
+
+
+# ---------------------------------------------------------------- reachability
+
+REPO = PKG.parent
+
+#: The program's surface: the driver contract, the demo and maintenance
+#: scripts, and the benchmark. The module-level code of every package
+#: module is a root too: it runs on import and holds the registry's
+#: QUERIES and ORACLES tables.
+ROOT_FILES = (
+    REPO / "__spark_entry__.py",
+    *sorted((REPO / "tools").rglob("*.py")),
+    *sorted((REPO / "perfbench").rglob("*.py")),
+)
+
+#: (relative path, definition) -> why it stays although no root reaches it.
+UNREACHED_OK = {
+    ("sources/readers.py", "read_jdbc"):
+        "SURVEY S1 Postgres source (COVERAGE.md row S1)",
+    ("sources/writers.py", "rest_bulk_insert"):
+        "SURVEY K1 REST bulk insert sink (COVERAGE.md row K1)",
+    ("sources/writers.py", "write_jdbc"):
+        "SURVEY K2 SQL table sink (COVERAGE.md row K2)",
+    ("sources/writers.py", "write_csv"):
+        "SURVEY K3 CSV sink (COVERAGE.md row K3)",
+    ("llm/training.py", "clear_probe_cache"):
+        "test hook: resets the trained-probe cache between tests",
+    ("streaming/docs.py", "clear_staged_dirs"):
+        "test hook: drops the staged stream-source dirs between tests",
+}
+
+_WORD = re.compile(r"[A-Za-z_]\w*")
+
+
+def _unreached() -> list[tuple[str, str]]:
+    """Top-level defs and classes no root reaches, as (path, name).
+
+    Name-based on purpose: a definition is reached when its name occurs
+    as a word anywhere in reached text (code, strings, comments), and
+    the text of a reached definition is reached in turn. Getattr
+    lookups, SQL text and registry tables therefore count as
+    references; the lint only flags names nothing on the surface
+    mentions at all."""
+    defs: dict[str, list[tuple[str, set[str]]]] = {}
+    roots: set[str] = set()
+    for path in sorted(PKG.rglob("*.py")):
+        rel = str(path.relative_to(PKG))
+        src = path.read_text()
+        lines = src.splitlines()
+        inside: set[int] = set()
+        for node in ast.parse(src).body:
+            if not isinstance(
+                node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+            ):
+                continue
+            start = min(
+                [node.lineno] + [d.lineno for d in node.decorator_list]
+            )
+            span = range(start - 1, node.end_lineno)
+            inside.update(span)
+            words = set(_WORD.findall("\n".join(lines[i] for i in span)))
+            defs.setdefault(node.name, []).append((rel, words))
+        module_level = (l for i, l in enumerate(lines) if i not in inside)
+        roots |= set(_WORD.findall("\n".join(module_level)))
+    for path in ROOT_FILES:
+        roots |= set(_WORD.findall(path.read_text()))
+    seen: set[str] = set()
+    todo = list(roots)
+    while todo:
+        name = todo.pop()
+        if name in seen:
+            continue
+        seen.add(name)
+        for _, words in defs.get(name, []):
+            todo.extend(words - seen)
+    return sorted(
+        (rel, name)
+        for name, found in defs.items()
+        if name not in seen
+        for rel, _ in found
+    )
+
+
+def test_every_definition_is_reachable():
+    unreached = [d for d in _unreached() if d not in UNREACHED_OK]
+    assert not unreached, (
+        "definitions nothing on the program's surface reaches (delete "
+        "them with their tests, or allowlist with a reason): "
+        + ", ".join(f"{rel}:{name}" for rel, name in unreached)
+    )
+
+
+def test_reachability_allowlist_has_no_stale_entries():
+    stale = set(UNREACHED_OK) - set(_unreached())
+    assert not stale, f"allowlisted but reached or gone: {sorted(stale)}"
