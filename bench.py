@@ -102,73 +102,6 @@ def _calibration_sec(spark) -> float:
     return round(best, 3)
 
 
-def _paired_prev_total(names: list[str], sf_dir: str):
-    """Same-day A/B against the PREVIOUS round's code: check out the
-    last 'round N: verdict/...' commit (the driver's end-of-round
-    snapshot) into a temp worktree and time its registry as a
-    subprocess on the intersection query list. Makes cross-round bench
-    deltas same-machine-same-hour comparisons instead of guesses
-    (VERDICT r6 item 5).
-
-    PROTOCOL-MATCHED since round 7: the subprocess runs THIS file
-    (copied into the worktree) over the OLD registry, so both sides
-    time cold-per-run — the historical snapshot's own bench.py cleared
-    cache once per query and would read warm for persisted subtrees,
-    turning the wave-11 protocol change into a fake code regression.
-
-    Returns (commit, total_sec, n_queries, query_names) or
-    (None, None, 0, []) when no snapshot exists or the run fails."""
-    import re  # noqa: PLC0415
-    import shutil  # noqa: PLC0415
-    import subprocess  # noqa: PLC0415
-    import tempfile  # noqa: PLC0415
-
-    repo = os.path.dirname(os.path.abspath(__file__))
-    try:
-        log = subprocess.run(
-            ["git", "log", "--format=%H %s"],
-            cwd=repo, capture_output=True, text=True, timeout=60,
-        ).stdout
-        m = re.search(r"^([0-9a-f]{40}) round \d+: verdict",
-                      log, re.MULTILINE)
-        if not m:
-            return None, None, 0, []
-        commit = m.group(1)
-        wt = tempfile.mkdtemp(prefix="bench_prev_")
-        try:
-            subprocess.run(
-                ["git", "worktree", "add", "--detach", wt, commit],
-                cwd=repo, capture_output=True, timeout=120, check=True,
-            )
-            env = dict(os.environ)
-            env["SPARK_GRAFT_BENCH_PAIRED"] = "1"
-            env["SPARK_GRAFT_SF_DIR"] = sf_dir
-            env["SPARK_GRAFT_BENCH_QUERIES"] = ",".join(names)
-            # ship the CURRENT harness into the worktree: same
-            # timing protocol on both sides, old code under test
-            harness = os.path.join(wt, "bench_paired_protocol.py")
-            shutil.copyfile(os.path.abspath(__file__), harness)
-            out = subprocess.run(
-                [sys.executable, harness],
-                cwd=wt, env=env, capture_output=True, text=True,
-                timeout=1800,
-            ).stdout
-            line = [ln for ln in out.splitlines()
-                    if ln.startswith("{")][-1]
-            parsed = json.loads(line)
-            return (commit[:9], parsed["value"],
-                    len(parsed.get("queries", {})),
-                    list(parsed.get("queries", {})))
-        finally:
-            subprocess.run(
-                ["git", "worktree", "remove", "--force", wt],
-                cwd=repo, capture_output=True, timeout=120,
-            )
-            shutil.rmtree(wt, ignore_errors=True)
-    except Exception:  # noqa: BLE001 - pairing is best-effort
-        return None, None, 0, []
-
-
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "")
@@ -240,32 +173,10 @@ def main() -> None:
         # protocol marker: since round-7 wave 11 every timed run is
         # COLD (clearCache per run), so totals are NOT comparable with
         # r6-and-earlier recordings for queries that persist()
-        # multi-consumer frames — use paired_prev_total_sec vs
-        # paired_current_subtotal_sec for the honest same-protocol,
-        # same-machine, same-hour comparison
+        # multi-consumer frames
         "timing_protocol": "cold-per-run (clearCache before each run)",
     }
-    # nested paired runs (we ARE the previous-round subprocess) skip
-    # the calibration + pairing extras and print the bare line
-    if not os.environ.get("SPARK_GRAFT_BENCH_PAIRED"):
-        out["calibration_sec"] = _calibration_sec(spark)
-        prev_commit, prev_total, prev_n, prev_names = (
-            _paired_prev_total(names, sf_dir)
-        )
-        out["paired_prev_commit"] = prev_commit
-        out["paired_prev_total_sec"] = prev_total
-        out["paired_prev_n_queries"] = prev_n
-        # the COMPARABLE current number: previous-code bench silently
-        # drops queries its registry lacks, so restrict the current
-        # total to the intersection (else value - paired_prev reads as
-        # a fake regression equal to the new queries' runtime)
-        out["paired_current_subtotal_sec"] = (
-            round(
-                sum(timings[n] for n in prev_names if n in timings), 3
-            )
-            if prev_total is not None
-            else None  # pairing failed: no comparable number exists
-        )
+    out["calibration_sec"] = _calibration_sec(spark)
     print(json.dumps(out))
 
 

@@ -1,4 +1,4 @@
-"""Fixture catalog: load the driver's parquet tables and register views.
+"""Fixture catalog: load the driver's parquet tables.
 
 Replaces the reference's per-call psycopg2 full scans
 (``execute_query("SELECT * FROM t")`` with driver-side fetchall,
@@ -12,10 +12,6 @@ import os
 import weakref
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-from .schemas import TESTDATA_TABLES
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -40,11 +36,9 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     explicit); we deliberately do NOT force a cast here so the driver's
     DuckDB oracle sees identical types.
 
-    ``events.ts`` is written as parquet TIMESTAMP(NANOS), which Spark's
-    vectorized reader rejects ([PARQUET_TYPE_ILLEGAL]); it is read via the
-    nanosAsLong legacy conf and truncated to microseconds — exactly what
-    DuckDB's µs-resolution timestamps do, so oracle comparison still
-    value-matches.
+    Every fixture stores ``events.ts`` as parquet TIMESTAMP(MICROS), which
+    Spark reads as ``TimestampNTZ``. A TIMESTAMP(NANOS) column fails the
+    read with ``[PARQUET_TYPE_ILLEGAL]``.
     """
     path = os.path.join(sf_dir, f"{name}.parquet")
     try:
@@ -55,17 +49,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     per_session = _TABLE_CACHE.setdefault(spark, {})
     if fp is not None and fp in per_session:
         return per_session[fp]
-    if name != "events":
-        df = spark.read.parquet(path)
-    else:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(path)
-        if isinstance(df.schema["ts"].dataType, T.LongType):
-            # integer division — float division would round-trip epoch
-            # nanos through a double (53-bit mantissa) and corrupt the µs
-            df = df.withColumn(
-                "ts", F.timestamp_micros(F.expr("ts div 1000"))
-            )
+    df = spark.read.parquet(path)
     try:
         # source-size hint for spread(): lets the fan-out guard decide
         # arithmetically instead of forcing a physical plan (df.rdd
@@ -147,14 +131,3 @@ def spread(df: DataFrame) -> DataFrame:
         return df.repartition(target)
     return df
 
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load_table(spark, sf_dir, t) for t in TESTDATA_TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Register every fixture table as a temp view for the SQL surface."""
-    dfs = load_all(spark, sf_dir)
-    for name, df in dfs.items():
-        df.createOrReplaceTempView(name)
-    return dfs

@@ -98,5 +98,5 @@ def nz(col: Column) -> Column:
     result is bit-identical, so oracles need no mirror — the guard
     only changes behavior on inputs the unguarded query would crash
     on. Enforced repo-wide by the divide lint
-    (plans/lint.py::divide_findings)."""
+    (tests/plan_lint.py::divide_findings)."""
     return F.when(col != 0, col)

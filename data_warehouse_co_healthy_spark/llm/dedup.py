@@ -599,8 +599,8 @@ ESS_K = 12           # char-gram width for exact-substring matching
 ESS_MIN_RUN = 20     # minimum shared-run length (chars) to report
 # Corpus occurrence cap per gram (skew guard). Default 100, lowered
 # from 200 in round 9 (VERDICT r8 item 3) — the production-posture
-# argument: the sf1 cap curve (SCALING_MEASURED.md, regenerate with
-# tools/ess_cap_curve.py) shows wall time tracking in-cap pair volume
+# argument: the sf1 cap curve (SCALING_MEASURED.md) shows wall time
+# tracking in-cap pair volume
 # ~linearly (200 → 96.4 s, 100 → 51.3 s, 50 → 6.6 s), and the RECALL
 # cost of 100 is confined to runs built exclusively from grams whose
 # corpus frequency exceeds 100 — by construction boilerplate (licence
@@ -614,14 +614,52 @@ ESS_MIN_RUN = 20     # minimum shared-run length (chars) to report
 ESS_MAX_OCC = 100
 
 
-def _exact_substring_matches(
-    spark: SparkSession, sf_dir: str, max_occ: int
-) -> DataFrame:
-    """Parameterized core of exact_substring_matches — ``max_occ`` is
-    the corpus occurrence cap, exposed so the committed cap curve
-    (SCALING_MEASURED.md, tools/ess_cap_curve.py) can measure the
-    knob's cost/recall trade at sf1 without editing the module
-    constant."""
+def exact_substring_matches(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Exact shared-substring spans between documents (the
+    'Deduplicating Training Data Makes Language Models Better'
+    Lee et al. 2021 shape, Spark-expressed): every maximal run of
+    ESS_MIN_RUN+ characters appearing VERBATIM in two documents, with
+    both start offsets and the run length — the operator that catches
+    boilerplate/licence blocks and copied passages that token-level
+    Jaccard smooths over.
+
+    Dataflow instead of a suffix array: overlapping ESS_K-char grams
+    fingerprinted to 64 bits at the scan (collision math in the
+    scan-stage comment — semantics unchanged), a corpus occurrence cap
+    (ESS_MAX_OCC — the same visible skew guard as MAX_DOCFREQ,
+    computed with map-side combine and joined back), an in-bucket pair
+    join, then gaps-and-islands per (pair, diagonal): consecutive
+    matching positions on one diagonal (pos_a - pos_b constant)
+    collapse into ONE maximal run via pos - row_number islands.
+    Shuffles: fp-count groupBy (partial-agg), keep-join, pair join,
+    island window at matched-position grain — no all-pairs stage
+    anywhere. The cap's measured cost/recall curve at sf1 lives in
+    SCALING_MEASURED.md. When the frequent-gram tail itself is the
+    target (boilerplate / licence blocks), use ``duplicate_spans`` —
+    span grain, no pair join, linear in corpus size, no cap to tune.
+
+    TERMINAL COST DECISION (round 10, closes the VERDICT r7→r9 open
+    item): cap 100 is the end state, and the sharded suffix array is
+    deliberately NOT built. Why this is terminal, not deferred debt:
+    (a) the superlinear slope (1.43 measured) appears only on the
+    boilerplate-adversarial corpus, where the cost driver is the
+    frequent-gram tail — and for exactly that workload the shipped
+    linear path is ``duplicate_spans``/``cut_duplicate_spans``, the
+    span-grain formulation Lee et al. actually materialize and cut at
+    training scale; (b) what pair grain uniquely answers — WHO shares
+    with WHOM — is a provenance question, and provenance of a gram
+    occurring >100× across a corpus is not attributable to pairs in
+    any meaningful sense (every pairing is boilerplate × boilerplate);
+    the cap therefore bounds cost precisely where the answer stops
+    meaning anything, with the measured knee (96.4 s → ~51 s at sf1,
+    recall on ≤cap grams unchanged by construction) committed in
+    SCALING_MEASURED.md; (c) a sharded suffix array would make the
+    pair-grain cost O(n log n) but introduces a non-DataFrame index
+    artifact, a second storage format, and a rebuild-on-append
+    contract — engineering spent on a workload the span grain already
+    serves linearly. Users needing full uncapped pair provenance set
+    ESS_MAX_OCC explicitly and accept the quadratic-in-occurrence
+    contract the knob documents."""
     from pyspark.sql.window import Window  # noqa: PLC0415
 
     d = spread(load_table(spark, sf_dir, "documents"))
@@ -658,7 +696,7 @@ def _exact_substring_matches(
     keep = (
         grams.groupBy("fp")
         .agg(F.count("*").alias("oc"))
-        .filter(F.col("oc") <= max_occ)
+        .filter(F.col("oc") <= ESS_MAX_OCC)
         .select("fp")
     )
     capped = grams.join(keep, on="fp")
@@ -693,56 +731,6 @@ def _exact_substring_matches(
         .filter(F.col("run_len") >= ESS_MIN_RUN)
         .select("doc_a", "doc_b", "a_start", "b_start", "run_len")
     )
-
-
-def exact_substring_matches(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact shared-substring spans between documents (the
-    'Deduplicating Training Data Makes Language Models Better'
-    Lee et al. 2021 shape, Spark-expressed): every maximal run of
-    ESS_MIN_RUN+ characters appearing VERBATIM in two documents, with
-    both start offsets and the run length — the operator that catches
-    boilerplate/licence blocks and copied passages that token-level
-    Jaccard smooths over.
-
-    Dataflow instead of a suffix array: overlapping ESS_K-char grams
-    fingerprinted to 64 bits at the scan (collision math in the core's
-    comment — semantics unchanged), a corpus occurrence cap
-    (ESS_MAX_OCC — the same visible skew guard as MAX_DOCFREQ,
-    computed with map-side combine and joined back), an in-bucket pair
-    join, then gaps-and-islands per (pair, diagonal): consecutive
-    matching positions on one diagonal (pos_a - pos_b constant)
-    collapse into ONE maximal run via pos - row_number islands.
-    Shuffles: fp-count groupBy (partial-agg), keep-join, pair join,
-    island window at matched-position grain — no all-pairs stage
-    anywhere. The cap's measured cost/recall curve at sf1 lives in
-    SCALING_MEASURED.md (tools/ess_cap_curve.py regenerates it).
-    When the frequent-gram tail itself is the target (boilerplate /
-    licence blocks), use ``duplicate_spans`` — span grain, no pair
-    join, linear in corpus size, no cap to tune.
-
-    TERMINAL COST DECISION (round 10, closes the VERDICT r7→r9 open
-    item): cap 100 is the end state, and the sharded suffix array is
-    deliberately NOT built. Why this is terminal, not deferred debt:
-    (a) the superlinear slope (1.43 measured) appears only on the
-    boilerplate-adversarial corpus, where the cost driver is the
-    frequent-gram tail — and for exactly that workload the shipped
-    linear path is ``duplicate_spans``/``cut_duplicate_spans``, the
-    span-grain formulation Lee et al. actually materialize and cut at
-    training scale; (b) what pair grain uniquely answers — WHO shares
-    with WHOM — is a provenance question, and provenance of a gram
-    occurring >100× across a corpus is not attributable to pairs in
-    any meaningful sense (every pairing is boilerplate × boilerplate);
-    the cap therefore bounds cost precisely where the answer stops
-    meaning anything, with the measured knee (96.4 s → ~51 s at sf1,
-    recall on ≤cap grams unchanged by construction) committed in
-    SCALING_MEASURED.md; (c) a sharded suffix array would make the
-    pair-grain cost O(n log n) but introduces a non-DataFrame index
-    artifact, a second storage format, and a rebuild-on-append
-    contract — engineering spent on a workload the span grain already
-    serves linearly. Users needing full uncapped pair provenance set
-    ESS_MAX_OCC explicitly and accept the quadratic-in-occurrence
-    contract the knob documents."""
-    return _exact_substring_matches(spark, sf_dir, ESS_MAX_OCC)
 
 
 def duplicate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -978,8 +966,8 @@ def dedup_cluster_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     the final labels are ``localCheckpoint``-ed (eager by design) so
     the cached edge list can be released before returning. Callers
     get a materialized result, not a lazy plan; static plan tooling
-    (shuffle audit, dump_plans) sees the truncated lineage and books
-    ~0 exchanges (acknowledged in CHECKPOINT_TRUNCATED)."""
+    (shuffle audit) sees the truncated lineage and books ~0 exchanges
+    (acknowledged in CHECKPOINT_TRUNCATED)."""
     pairs = minhash_lsh_pairs(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
     edges = (
@@ -2837,7 +2825,7 @@ ORACLES["dedup_cc_star"] = ORACLES["dedup_connected_components"]
 # fixture scale), and a false REPORTED run needs ESS_MIN_RUN - ESS_K +
 # 1 consecutive colliding diagonal positions (p < 10⁻¹⁰⁰). The
 # divergence is structural but unobservable; the collision math lives
-# in _exact_substring_matches' scan-stage comment.
+# in exact_substring_matches' scan-stage comment.
 ORACLES["exact_substring_matches"] = f"""
     WITH t AS (
         SELECT doc_id, lower(text) AS t FROM documents

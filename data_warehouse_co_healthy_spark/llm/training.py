@@ -434,9 +434,9 @@ def train_linear_probe(spark: SparkSession, sf_dir: str):
     there): class-balanced logistic gradient via Arrow-batched partial
     sums, Adam updates on the driver, O(d) traffic per iteration.
     Returns the (d+1) weight vector (bias last); cached per
-    (sf_dir, data fingerprint) so batch scoring and the streaming
-    scorer share one training run without ever serving stale weights
-    after a rewrite."""
+    (sf_dir, data fingerprint) so repeated scoring calls share one
+    training run without ever serving stale weights after a
+    rewrite."""
     import numpy as np  # noqa: PLC0415
     import pandas as pd  # noqa: PLC0415
 
@@ -509,8 +509,7 @@ def train_linear_probe(spark: SparkSession, sf_dir: str):
 
 def score_linear_probe(e: DataFrame, w_final) -> DataFrame:
     """Stateless broadcast-weights scoring pass over (vec_id, y, emb)
-    rows — works identically on a batch DataFrame and a streaming one
-    (train-offline / serve-online)."""
+    rows — works identically on a batch DataFrame and a streaming one."""
     import numpy as np  # noqa: PLC0415
     import pandas as pd  # noqa: PLC0415
 
@@ -534,42 +533,30 @@ def score_linear_probe(e: DataFrame, w_final) -> DataFrame:
 
 
 BPE_MERGES = 8  # merge rules learned (fixed → deterministic plan count)
-_VOCAB_ROWS_PER_TASK = 100_000  # per-task vocab slice for BPE rounds
-# Driver fast path: a vocabulary at or under this many distinct words
-# is collected and merged in pure Python (the corpus-side explode +
-# word-count stays distributed; the O(vocab·merges) loop runs where a
-# tiny working set is cheapest — the same bounded-collect pattern as
-# k×d k-means centroids or the PQ training sample). Above it, the
-# distributed fold loop runs — identical rules, pinned by a test that
-# forces both paths on the same corpus.
+# The merge loop runs in pure Python on the collected word-grain
+# vocabulary (the corpus-side explode + word-count stays distributed) —
+# the same bounded-collect pattern as k×d k-means centroids or the PQ
+# training sample. A vocabulary over this many distinct words raises.
 BPE_DRIVER_VOCAB_MAX = 65_536
 
 
 def bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distributed BPE tokenizer training (Sennrich et al. 2016): learn
-    the first BPE_MERGES merge rules from the corpus. Each iteration
-    counts adjacent symbol pairs across the WORD-grain vocabulary
+    """BPE tokenizer training (Sennrich et al. 2016): learn the first
+    BPE_MERGES merge rules from the corpus. Each iteration counts
+    adjacent symbol pairs across the WORD-grain vocabulary
     (occurrence-weighted), picks the most frequent pair (ties broken
     count-desc, then lexicographically — deterministic), and rewrites
-    the vocabulary with that pair merged via a left-to-right codegen
-    fold. Returns the merge table — the tokenizer artifact every
-    in-house data pipeline ends up training on its own corpus.
+    the vocabulary with that pair merged (leftmost-first). Returns the
+    merge table — the tokenizer artifact every in-house data pipeline
+    ends up training on its own corpus.
 
     Scale posture: the corpus collapses to word-grain counts in ONE
-    occurrence shuffle up front; every subsequent iteration works on
-    the vocabulary frame (|vocab| rows, Zipf-bounded ≪ corpus), pair
-    counts partial-agg map-side, and the driver sees ONE argmax row
-    per iteration (max_by aggregate — no sort, no top-k exchange).
-    Lineage is truncated per iteration (localCheckpoint) so the plan
-    stays constant-size across merges. The merge list itself is O(1).
-
-    Small-vocabulary fast path: when the word-grain vocabulary fits
-    BPE_DRIVER_VOCAB_MAX rows, the merge loop runs in pure Python on
-    the collected vocab instead of paying BPE_MERGES rounds of Spark
-    job latency over a near-empty frame (measured 2.9s → 0.4s at
-    sf0.1, where the synthetic corpus has 31 distinct words). The two
-    paths learn IDENTICAL rules — same counts, same tie-break —
-    pinned by a test that forces both on the same corpus.
+    occurrence shuffle; the merge loop then runs in pure Python on the
+    collected vocabulary (Zipf-bounded ≪ corpus; the synthetic corpus
+    has 31 distinct words at sf0.1 and sf1), which is how common BPE
+    trainers work too. A vocabulary over BPE_DRIVER_VOCAB_MAX words
+    raises ``ValueError`` instead of being collected. The merge list
+    itself is O(1).
     """
     d = spread(load_table(spark, sf_dir, "documents"))
     word_counts = (
@@ -594,76 +581,28 @@ def _bpe_merges_from_counts(
         F.expr("transform(split(word, ''), x -> x)").alias("s"),
         "cnt",
     ).filter(F.size("s") > 0)
-    # Size-probe with ONE bounded action (round-10 optimization pass):
-    # head(MAX + 1) either returns the ENTIRE vocabulary (≤ MAX rows →
-    # the driver fast-path already has every row it needs, no
-    # checkpoint, no count, no second collect — the old sequence paid
-    # three near-empty jobs here) or proves the vocabulary is big, in
-    # which case the distributed loop pays the checkpoint it actually
-    # needs. The Python merge loop is row-order independent (Counter
-    # accumulation + explicit (count desc, pair asc) tie-break), so
-    # head()'s partition order is as good as collect()'s.
+    # ONE bounded action: head(MAX + 1) either returns the ENTIRE
+    # vocabulary or proves it is over the cap. The Python merge loop is
+    # row-order independent (Counter accumulation + explicit (count
+    # desc, pair asc) tie-break), so head()'s partition order is as
+    # good as collect()'s.
     probe = vocab.head(BPE_DRIVER_VOCAB_MAX + 1)
-    if len(probe) <= BPE_DRIVER_VOCAB_MAX:
-        rows = [(tuple(r["s"]), int(r["cnt"])) for r in probe]
-        merges = _bpe_merge_rules_python(rows, BPE_MERGES)
-        return _merges_df(spark, merges)
-    vocab = vocab.localCheckpoint()
-    n_vocab = vocab.count()
-    # Distributed path: right-size the iteration frame — the vocab
-    # inherits the corpus groupBy's full shuffle width, so without a
-    # coalesce each fixed round schedules a full task fan-out over
-    # near-empty partitions.
-    vocab = vocab.coalesce(max(1, n_vocab // _VOCAB_ROWS_PER_TASK + 1))
-    merges: list[tuple[int, str, str, int]] = []
-    for rank in range(1, BPE_MERGES + 1):
-        # size >= 2 guard PLUS a total expression: Spark's sequence()
-        # runs DESCENDING when the stop is below the start, and
-        # optimizer-inferred generator filters can evaluate hoisted
-        # subexpressions before the guard short-circuits (see the
-        # ngram_jaccard_pairs note) — greatest() keeps the sequence
-        # ascending and try_element_at keeps the i + 1 probe total on
-        # the size-1 words the filter discards
-        pairs = vocab.filter(F.size("s") >= 2).select(
-            F.explode(
-                F.expr(
-                    "transform(sequence(1, greatest(size(s) - 1, 1)), "
-                    "i -> struct(try_element_at(s, i) AS l, "
-                    "try_element_at(s, i + 1) AS r))"
-                )
-            ).alias("p"),
-            "cnt",
-        ).groupBy("p.l", "p.r").agg(F.sum("cnt").alias("pc"))
-        best = pairs.agg(
-            F.min(F.struct((-F.col("pc")).alias("neg"), "l", "r")).alias(
-                "b"
-            )
-        ).collect()[0]["b"]
-        if best is None:
-            # corpus exhausted its adjacent pairs before BPE_MERGES
-            # iterations (all-single-char words, or fully merged):
-            # return the merges learned so far instead of crashing on
-            # the NULL argmax struct
-            break
-        left, right, count = best["l"], best["r"], -best["neg"]
-        merges.append((rank, left, right, int(count)))
-        # left-to-right adjacent-pair merge as a codegen fold: append
-        # each symbol unless it completes the (l, r) pair with the
-        # accumulator's tail, in which case the tail is replaced by the
-        # merged symbol (standard leftmost-first BPE semantics)
-        vocab = vocab.select(
-            F.expr(_merge_fold_sql("s", left, right)).alias("s"),
-            "cnt",
-        ).localCheckpoint()
-    return _merges_df(spark, merges)
+    if len(probe) > BPE_DRIVER_VOCAB_MAX:
+        raise ValueError(
+            "BPE vocabulary has more than BPE_DRIVER_VOCAB_MAX="
+            f"{BPE_DRIVER_VOCAB_MAX} distinct words; the merge loop "
+            "collects the vocabulary to the driver"
+        )
+    rows = [(tuple(r["s"]), int(r["cnt"])) for r in probe]
+    return _merges_df(spark, _bpe_merge_rules_python(rows, BPE_MERGES))
 
 
 def _bpe_merge_rules_python(
     vocab: list[tuple[tuple[str, ...], int]], n_merges: int
 ) -> list[tuple[int, str, str, int]]:
     """Reference-exact BPE merge loop over an in-memory vocabulary:
-    same occurrence-weighted counts and (count desc, pair asc)
-    tie-break as the distributed fold path."""
+    occurrence-weighted pair counts, (count desc, pair asc) tie-break,
+    leftmost-first merges."""
     from collections import Counter  # noqa: PLC0415
 
     work = Counter()
@@ -735,7 +674,7 @@ def bpe_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
     and report per-source tokenization stats (token count, tokens per
     word, chars per token — the compression numbers that decide
     whether a tokenizer fits a corpus). The trainer↔consumer pair
-    mirrors quality_classifier/streaming_quality_scores: train once,
+    mirrors quality_classifier's train/score split: train once,
     apply everywhere.
 
     Scale posture: segmentation runs once per DISTINCT word (vocab

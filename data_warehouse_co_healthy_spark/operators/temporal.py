@@ -133,8 +133,8 @@ def sessionize_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batch sessionization via gaps-and-islands: a session breaks when
     the gap since the previous event exceeds SESSION_GAP_SEC; session
     id = running count of breaks (lag + cumulative sum — two window
-    passes over ONE user_id shuffle). The deterministic, oracle-checked
-    batch twin of streaming/events.sessionized (session_window)."""
+    passes over ONE user_id shuffle). Deterministic and
+    oracle-checked."""
     ev = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     wc = (
@@ -1190,11 +1190,9 @@ CRB_BURN = 25.0  # per-event credit burn, shared with the oracle
 
 def _clamped_delta_base(ev: DataFrame) -> DataFrame:
     """The ONE definition of the credit-delta projection shared by both
-    clamped-balance variants (the streaming twin re-derives the same
-    rule in Python — see clamped_balance_stream — because its deltas
-    are computed row-wise inside the stateful updater): purchases
-    credit coalesce(value, 0) — a NULL value must credit 0, not
-    NaN-poison the recursion — every other event burns CRB_BURN."""
+    clamped-balance variants: purchases credit coalesce(value, 0) — a
+    NULL value must credit 0, not NaN-poison the recursion — every
+    other event burns CRB_BURN."""
     return ev.select(
         "user_id",
         F.col("ts").cast("timestamp").alias("ts"),

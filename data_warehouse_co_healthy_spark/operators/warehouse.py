@@ -397,7 +397,7 @@ def zone_map_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     file/row-group, surfaced as a query so layout decisions (sort keys,
     Z-order candidates) are driven by observed value ranges. Wide
     min/max domains under a random layout mean every range filter scans
-    everything — the signal to re-cluster (``writers.write_zordered``).
+    everything — the signal to re-cluster (``zorder_layout_profile``).
     """
     li = load_table(spark, sf_dir, "lineitem")
     aggs = []
@@ -425,9 +425,9 @@ ZORDER_N_FILES = 16  # simulated file count for both layouts
 def zorder_layout_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Zone-map quality of a Z-ORDER (Morton-curve) layout vs the
     naive ingest-order layout, computed IN-PLAN (no file writes) — the
-    planning query behind ``sources.writers.write_zordered``: before
-    rewriting 100 TB, measure how much each candidate layout would
-    shrink per-file min/max boxes on each filter dimension. Per
+    planning query for a Z-order rewrite: before rewriting 100 TB,
+    measure how much each candidate layout would shrink per-file
+    min/max boxes on each filter dimension. Per
     (layout, dimension): the number of non-empty files, the mean
     zone span share, and the expected number of files a uniform point
     predicate must scan (Σ over files of (span+1)/domain — the
@@ -566,59 +566,6 @@ def dq_expectation_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Declared query: the expectation suite over lineitem."""
     return run_expectations(
         load_table(spark, sf_dir, "lineitem"), EXPECTATIONS
-    )
-
-
-def build_partitioned_sales(spark: SparkSession, sf_dir: str, path: str) -> None:
-    """Materialize the DPP demo layout: orders as a fact PARTITIONED BY
-    order month (hive-style dirs → static + dynamic partition pruning),
-    plus a small month dim keyed by the partition column. The layout
-    every date-scoped 100 TB fact should have."""
-    orders = load_table(spark, sf_dir, "orders")
-    fact = orders.select(
-        "o_orderkey",
-        "o_custkey",
-        "o_totalprice",
-        F.date_format("o_orderdate", "yyyy-MM").alias("order_month"),
-    )
-    fact.write.mode("overwrite").partitionBy("order_month").parquet(
-        f"{path}/fact_sales"
-    )
-    dim = (
-        fact.select("order_month")
-        .distinct()
-        .select(
-            "order_month",
-            F.substring("order_month", 1, 4).alias("order_year"),
-        )
-    )
-    dim.write.mode("overwrite").parquet(f"{path}/dim_month")
-
-
-def partition_pruned_revenue(
-    spark: SparkSession, path: str, year: str
-) -> DataFrame:
-    """Star join whose fact scan is DYNAMICALLY partition-pruned: the
-    dim-side filter (order_year = <year>) reaches the fact's partition
-    column through a DPP subquery — the fact scan's PartitionFilters
-    gains ``dynamicpruningexpression(order_month IN dynamicpruning#N)``
-    so only the matching month directories are LISTED AND READ. At
-    100 TB with years of history this is the difference between
-    scanning ~1/7th of the table and scanning all of it, decided at
-    RUNTIME from the dim (no hardcoded date literals in the fact
-    query). tests/test_layout.py pins the subquery in the plan AND the
-    pruned row count; PLANS.md carries the committed plan dump."""
-    fact = spark.read.parquet(f"{path}/fact_sales")
-    dim = spark.read.parquet(f"{path}/dim_month").filter(
-        F.col("order_year") == year
-    )
-    return (
-        fact.join(F.broadcast(dim), "order_month")
-        .groupBy("order_year")
-        .agg(
-            F.count("*").cast("long").alias("n_orders"),
-            F.round(F.sum("o_totalprice"), 2).alias("revenue"),
-        )
     )
 
 

@@ -5,7 +5,7 @@ plans with method chains); a Spark-native engine also exposes the full
 ANSI-SQL text surface over the same tables. Two proofs:
 
 - ``sql_api_revenue``: a join+agg written as SQL text over
-  ``catalog.register_views`` temp views — Catalyst plans it identically
+  temp views of ``catalog.load_table`` frames — Catalyst plans it identically
   to the DataFrame build (same broadcast + partial-agg plan).
 - ``sql_udf_token_count``: a VECTORIZED (Arrow) pandas UDF registered
   with ``spark.udf.register`` and called from SQL text — the supported

@@ -435,65 +435,6 @@ def compact_parquet(
     )
 
 
-def write_zordered(
-    df: DataFrame,
-    path: str,
-    zorder_cols: tuple[str, ...],
-    n_files: int = 32,
-    bits: int = 10,
-    mode: str = "overwrite",
-) -> None:
-    """Z-order (Morton-curve) clustered parquet write: multi-column
-    data skipping for a 100 TB table.
-
-    ``compact_parquet(sort_cols=...)`` clusters ONE dimension; queries
-    filtering a second column still scan everything. Interleaving the
-    bits of N rank-scaled columns into one Morton key and range-
-    partitioning + sorting by it gives every file a tight min/max box
-    in ALL N dimensions, so parquet footer stats prune files/row-groups
-    for predicates on ANY of the z-ordered columns (the layout Delta
-    ``OPTIMIZE ZORDER BY`` uses; here on plain parquet).
-
-    Two passes: (1) one tiny agg for per-column min/max, (2) the
-    clustered rewrite. The key is built purely from built-in bitwise
-    expressions (shiftright/shiftleft/AND) — whole-stage codegen, no
-    UDF, no driver loop. tests/test_layout.py measures the pruning:
-    a 2-D box predicate touches a fraction of z-ordered files vs all
-    files of a hash layout."""
-    from pyspark.sql import functions as F
-
-    stats = df.agg(
-        *[F.min(c).cast("double").alias(f"mn_{c}") for c in zorder_cols],
-        *[F.max(c).cast("double").alias(f"mx_{c}") for c in zorder_cols],
-    ).first()
-    top = (1 << bits) - 1
-    ranks = []
-    for c in zorder_cols:
-        mn, mx = stats[f"mn_{c}"], stats[f"mx_{c}"]
-        span = (mx - mn) or 1.0
-        ranks.append(
-            F.least(
-                F.lit(top),
-                ((F.col(c).cast("double") - F.lit(mn)) / F.lit(span)
-                 * F.lit(float(top))).cast("long"),
-            )
-        )
-    n = len(ranks)
-    zkey = F.lit(0)
-    for i in range(bits):
-        for j, r in enumerate(ranks):
-            bit = F.shiftright(r, i).bitwiseAND(F.lit(1))
-            zkey = zkey + F.shiftleft(bit, i * n + j)
-    (
-        df.withColumn("__zkey", zkey)
-        .repartitionByRange(n_files, "__zkey")
-        .sortWithinPartitions("__zkey")
-        .drop("__zkey")
-        .write.mode(mode)
-        .parquet(path)
-    )
-
-
 def rest_bulk_insert(
     df: DataFrame,
     table: str,

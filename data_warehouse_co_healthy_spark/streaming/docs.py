@@ -1,4 +1,4 @@
-"""Streaming staging helpers and the embedding-stream quality scorer.
+"""Streaming staging helpers.
 
 The file stream source reads a DIRECTORY, while the fixtures are single
 parquet files; ``_staged_dir`` stages each fixture once per process
@@ -6,17 +6,9 @@ parquet files; ``_staged_dir`` stages each fixture once per process
 and every file-stream source in the package goes through it.
 ``fresh_tmpdir`` hands out never-cached dirs on the same atexit
 cleanup.
-
-``streaming_quality_scores`` is the train-offline / serve-online shape:
-the quality probe is fitted in batch and the arriving embedding stream
-is scored with the batch scorer (asserted bit-identical in
-tests/test_streaming.py).
 """
 
 from __future__ import annotations
-
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 
 _STAGED_DIRS: dict[tuple, str] = {}
@@ -110,66 +102,3 @@ def clear_staged_dirs() -> None:
         shutil.rmtree(p, ignore_errors=True)
     _STAGED_ALL.clear()
     _STAGED_DIRS.clear()
-
-
-def stage_embeddings_dir(sf_dir: str) -> str:
-    """File-stream staging for the embeddings fixture (symlink dir)."""
-    import os  # noqa: PLC0415
-
-    def build(d: str) -> None:
-        os.symlink(
-            os.path.join(sf_dir, "embeddings.parquet"),
-            os.path.join(d, "embeddings.parquet"),
-        )
-
-    return _staged_dir(
-        "embeddings",
-        sf_dir,
-        "emb_stream_",
-        build,
-        src=os.path.join(sf_dir, "embeddings.parquet"),
-    )
-
-
-def read_embeddings_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding stream shaped like llm.training._probe_inputs rows."""
-    from ..llm.training import LR_TARGET_LABEL  # noqa: PLC0415
-
-    staged = stage_embeddings_dir(sf_dir)
-    schema = spark.read.parquet(staged).schema
-    return (
-        spark.readStream.schema(schema)
-        .format("parquet")
-        .load(staged)
-        .select(
-            "vec_id",
-            (F.col("label") == LR_TARGET_LABEL).cast("double").alias("y"),
-            F.expr("transform(embedding, x -> cast(x AS double))").alias(
-                "emb"
-            ),
-        )
-    )
-
-
-def streaming_quality_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Train-offline / serve-online: fit the quality linear probe in
-    batch (llm.training.train_linear_probe — Arrow partial gradients,
-    O(d) driver traffic per Adam step), then score the ARRIVING
-    embedding stream statelessly with the broadcast weight vector.
-    This is the deployment shape of every quality filter: the model is
-    refreshed by a batch job, ingestion scores each record the moment
-    it lands. Scoring reuses the exact batch scorer
-    (score_linear_probe), so stream and batch scores are bit-identical
-    — asserted in tests/test_streaming.py."""
-    from ..llm.training import (  # noqa: PLC0415
-        score_linear_probe,
-        train_linear_probe,
-    )
-
-    w = train_linear_probe(spark, sf_dir)
-    if w is None:
-        raise ValueError(
-            "score_embeddings_stream: empty embeddings table — no "
-            "probe weights to serve (train on a non-empty corpus)"
-        )
-    return score_linear_probe(read_embeddings_stream(spark, sf_dir), w)

@@ -2,9 +2,8 @@
 (the reference has no streaming at all, SURVEY §2.9; the driver's
 ``events`` fixture motivates the demo).
 
-Three stateful shapes:
+Two stateful shapes:
   - tumbling-window counts with a watermark (late-data bound)
-  - session windows per user (gap-based sessionization)
   - a custom stateful operator via applyInPandasWithState (running
     per-user counters) — the escape hatch for semantics the built-in
     windows can't express.
@@ -26,11 +25,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-# events.parquet has stored ts as TIMESTAMP(NANOS) in some fixture
-# generations and TIMESTAMP(MICROS) in others; the stream source takes
+# events.parquet stores ts as TIMESTAMP(MICROS); the stream source takes
 # its schema from the parquet footer (one batch-read of the footer at
-# plan time) and normalizes long-nanos to a microsecond timestamp, same
-# as catalog.load_table.
+# plan time).
 
 
 def stage_events_dir(sf_dir: str) -> str:
@@ -60,15 +57,10 @@ def stage_events_dir(sf_dir: str) -> str:
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source stream over the events parquet (for tests/demo; a
     production deployment points the same plan at Kafka)."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     staged = stage_events_dir(sf_dir)
     schema = spark.read.parquet(staged).schema
     raw = spark.readStream.schema(schema).format("parquet").load(staged)
-    if isinstance(schema["ts"].dataType, T.LongType):
-        # ts div 1000: integer division — float division would round-trip
-        # epoch nanos through a double and corrupt the microseconds
-        raw = raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    elif isinstance(schema["ts"].dataType, T.TimestampNTZType):
+    if isinstance(schema["ts"].dataType, T.TimestampNTZType):
         # watermarks require TIMESTAMP (LTZ); the session tz is pinned
         # UTC (session.py) so this cast preserves the wall-clock value
         raw = raw.withColumn("ts", F.col("ts").cast("timestamp"))
@@ -140,69 +132,18 @@ def ohlc_daily_stream(
     )
 
 
-def sessionized(
-    events: DataFrame,
-    gap: str = "30 minutes",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Gap-based session windows per user."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.session_window("ts", gap).alias("s"), "user_id")
-        .agg(F.count("*").alias("n_events"), F.sum("value").alias("session_value"))
-        .select(
-            F.col("s").getField("start").alias("session_start"),
-            F.col("s").getField("end").alias("session_end"),
-            "user_id",
-            "n_events",
-            "session_value",
-        )
-    )
-
-
-def running_user_totals(events: DataFrame) -> DataFrame:
-    """Custom stateful operator via applyInPandasWithState: running
-    per-user event count and value total emitted on every update."""
-    import pandas as pd  # noqa: PLC0415
-    from pyspark.sql.streaming.state import (  # noqa: PLC0415
-        GroupState,
-    )
-
-    out_schema = "user_id long, n_events long, total_value double"
-    state_schema = "n long, total double"
-
-    def update(key, pdfs, state: GroupState):
-        n, total = state.get if state.exists else (0, 0.0)
-        for pdf in pdfs:
-            n += len(pdf)
-            total += float(pdf["value"].sum())
-        state.update((n, total))
-        yield pd.DataFrame(
-            {"user_id": [key[0]], "n_events": [n], "total_value": [total]}
-        )
-
-    return events.groupBy("user_id").applyInPandasWithState(
-        update,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="update",
-        timeoutConf="NoTimeout",
-    )
-
-
 def running_user_totals_exact(events: DataFrame) -> DataFrame:
-    """The driver-gradable twin of ``running_user_totals``: identical
-    stateful shape (per-user running count + value total via
-    applyInPandasWithState), but the value total accumulates in EXACT
+    """Per-user running count + value total via
+    applyInPandasWithState. The value total accumulates in EXACT
     integer cents — the fixture's values are exact 2dp money, so
     per-element round(value·100) is an integer and the state is
     independent of how the stream is split into micro-batches or how
     partitions arrive. That order-independence is what makes the FINAL
     totals reconcilable against a plain batch aggregate (the posture
-    any production stateful counter needs for end-of-day checks; the
-    float-state variant documents why: its total drifts with arrival
-    order). Emits the running snapshot on every update; the final
-    snapshot per user is the reconciliation surface."""
+    any production stateful counter needs for end-of-day checks; a
+    float total would drift with arrival order). Emits the running
+    snapshot on every update; the final snapshot per user is the
+    reconciliation surface."""
     import pandas as pd  # noqa: PLC0415
     from pyspark.sql.streaming.state import (  # noqa: PLC0415
         GroupState,
@@ -251,77 +192,6 @@ def running_user_totals_exact(events: DataFrame) -> DataFrame:
         stateStructType=state_schema,
         outputMode="update",
         timeoutConf="NoTimeout",
-    )
-
-
-def clamped_balance_stream(events: DataFrame) -> DataFrame:
-    """Streaming twin of ``operators.temporal.clamped_running_balance``:
-    the floor-clamped per-user credit balance maintained online. State
-    is ONE float per user (the current balance) — O(1) by construction,
-    watermark-free — and the recurrence (coalesce-credit, burn, clamp
-    at 0) is the exact op sequence of the batch twin, so draining the
-    bounded fixture stream is BIT-equal to the batch result (pinned in
-    tests/test_streaming.py). The shared ``whole_batch`` helper sorts
-    each micro-batch once, keeping the recursion order independent of
-    Arrow chunk boundaries."""
-    import pandas as pd  # noqa: PLC0415
-    from pyspark.sql.streaming.state import GroupState  # noqa: PLC0415
-
-    from ..operators.temporal import CRB_BURN  # noqa: PLC0415
-
-    out_schema = (
-        "user_id long, event_id long, delta double, balance double"
-    )
-    state_schema = "bal double"
-
-    def update(key, pdfs, state: GroupState):
-        from data_warehouse_co_healthy_spark.streaming.microbatch import (  # noqa: E501,PLC0415
-            whole_batch,
-        )
-
-        bal = float(state.get[0]) if state.exists else 0.0
-        out_ids, out_deltas, out_bals = [], [], []
-        pdf = whole_batch(pdfs, ["ts", "event_id"])
-        if pdf is not None:
-            for r in pdf.itertuples():
-                if r.event_type == "purchase":
-                    v = r.value
-                    delta = 0.0 if pd.isna(v) else float(v)
-                else:
-                    delta = -CRB_BURN
-                bal = bal + delta
-                if bal < 0.0:
-                    bal = 0.0
-                out_ids.append(int(r.event_id))
-                # emit RAW values: rounding happens in F.round below —
-                # Python round() is banker's (half-even) while the
-                # batch twin's F.round is HALF_UP, and a half-even
-                # round here would break the pinned bit-equality on
-                # any value ending in 5 at the 5th decimal
-                out_deltas.append(delta)
-                out_bals.append(bal)
-        state.update((bal,))
-        yield pd.DataFrame(
-            {
-                "user_id": [key[0]] * len(out_ids),
-                "event_id": out_ids,
-                "delta": out_deltas,
-                "balance": out_bals,
-            }
-        )
-
-    raw = events.groupBy("user_id").applyInPandasWithState(
-        update,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf="NoTimeout",
-    )
-    return raw.select(
-        "user_id",
-        "event_id",
-        F.round("delta", 4).alias("delta"),
-        F.round("balance", 4).alias("balance"),
     )
 
 

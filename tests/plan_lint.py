@@ -1,13 +1,9 @@
-"""Plan-quality linter as a library API.
+"""Plan-quality linter behind tests/test_plan_lint.py.
 
-The full-registry test (tests/test_plan_lint.py) enforces these rules
-on every declared query; this module exposes the same checks to USERS
-of the engine, so any ad-hoc query can be gated before it ships to a
-1000-executor cluster:
+The full-registry test enforces these rules on every declared query;
+``assert_scalable_plan`` applies the same checks to one frame:
 
-    from data_warehouse_co_healthy_spark.plans.lint import (
-        assert_scalable_plan,
-    )
+    from tests.plan_lint import assert_scalable_plan
     assert_scalable_plan(df)            # raises with the offending plan
     assert_scalable_plan(df, allow={"single_partition"})  # documented
 

@@ -1,110 +1,20 @@
-"""File-layout tests: Z-order clustering measurably enables multi-column
-data skipping (parquet footer min/max pruning), and AQE splits skewed
-join partitions at runtime.
+"""File-layout tests: runtime bloom filters, file-level Bloom sidecars
+and the IVF index prune scans, AQE splits skewed join partitions at
+runtime, and the Z-order and bucketed layouts plan as SCALING.md says.
 
 These pin the 100 TB scale story in SCALING.md to observable behavior
-at test scale: the same footer stats Spark's parquet scan uses for
-row-group skipping are read back with pyarrow and checked for tight
-per-file bounding boxes.
+at test scale.
 """
 
 from __future__ import annotations
 
-import glob
-
-import pandas as pd
 import os
 
+import pandas as pd
 import pytest
-
-import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
-from data_warehouse_co_healthy_spark.sources.writers import write_zordered
-
 from tests.conftest import SF_DIR
-
-
-def _file_boxes(path: str, cols: tuple[str, str]):
-    """Per-file [min, max] interval for each col, from parquet footers."""
-    boxes = []
-    for f in sorted(glob.glob(os.path.join(path, "*.parquet"))):
-        md = pq.ParquetFile(f).metadata
-        lo = {c: None for c in cols}
-        hi = {c: None for c in cols}
-        for rg in range(md.num_row_groups):
-            row_group = md.row_group(rg)
-            for i in range(row_group.num_columns):
-                col = row_group.column(i)
-                name = col.path_in_schema
-                if name in cols and col.statistics is not None:
-                    st = col.statistics
-                    lo[name] = (
-                        st.min if lo[name] is None else min(lo[name], st.min)
-                    )
-                    hi[name] = (
-                        st.max if hi[name] is None else max(hi[name], st.max)
-                    )
-        boxes.append((lo, hi))
-    return boxes
-
-
-def _hits(boxes, cols, pred_lo, pred_hi) -> int:
-    """Files whose bounding box intersects the 2-D range predicate —
-    exactly the files a stats-based scan must read."""
-    n = 0
-    for lo, hi in boxes:
-        if all(
-            lo[c] is not None and not (hi[c] < pred_lo[c] or lo[c] > pred_hi[c])
-            for c in cols
-        ):
-            n += 1
-    return n
-
-
-def test_zorder_prunes_2d_box(spark, tmp_path):
-    cols = ("l_orderkey", "l_partkey")
-    li = spark.read.parquet(os.path.join(SF_DIR, "lineitem.parquet")).select(
-        *cols, "l_quantity"
-    )
-    n_files = 16
-    zpath = str(tmp_path / "li_z")
-    hpath = str(tmp_path / "li_hash")
-    write_zordered(li, zpath, cols, n_files=n_files, bits=10)
-    li.repartition(n_files).write.parquet(hpath)
-
-    stats = li.agg(
-        *[F.min(c).alias(f"mn_{c}") for c in cols],
-        *[F.max(c).alias(f"mx_{c}") for c in cols],
-    ).first()
-    # 2-D box: bottom 20% of each key's range (a typical point-ish probe)
-    pred_lo, pred_hi = {}, {}
-    for c in cols:
-        span = stats[f"mx_{c}"] - stats[f"mn_{c}"]
-        pred_lo[c] = stats[f"mn_{c}"]
-        pred_hi[c] = stats[f"mn_{c}"] + span // 5
-
-    z_hits = _hits(_file_boxes(zpath, cols), cols, pred_lo, pred_hi)
-    h_hits = _hits(_file_boxes(hpath, cols), cols, pred_lo, pred_hi)
-
-    # Hash layout: every file spans the whole domain -> no skipping.
-    assert h_hits == n_files
-    # Z-order: the box predicate touches a strict subset of files.
-    assert z_hits < h_hits
-    assert z_hits <= n_files // 2
-
-    # Layout change must not change query results.
-    cond = (
-        (F.col(cols[0]) >= pred_lo[cols[0]])
-        & (F.col(cols[0]) <= pred_hi[cols[0]])
-        & (F.col(cols[1]) >= pred_lo[cols[1]])
-        & (F.col(cols[1]) <= pred_hi[cols[1]])
-    )
-    assert (
-        spark.read.parquet(zpath).filter(cond).count()
-        == spark.read.parquet(hpath).filter(cond).count()
-        == li.filter(cond).count()
-    )
 
 
 _BLOOM_CONFS = {
@@ -192,39 +102,6 @@ def test_aqe_splits_skewed_join_partition(spark):
                 spark.conf.unset(k)
             else:
                 spark.conf.set(k, v)
-
-
-def test_dynamic_partition_pruning_star_join(spark, tmp_path):
-    """A dim-side filter must prune the partitioned fact scan at
-    RUNTIME: the fact scan's PartitionFilters carries a
-    dynamicpruningexpression subquery, and the result equals the
-    statically-filtered compute (so the pruning is correct, not just
-    present)."""
-    from data_warehouse_co_healthy_spark.operators import warehouse
-
-    path = str(tmp_path / "dpp")
-    warehouse.build_partitioned_sales(spark, SF_DIR, path)
-    q = warehouse.partition_pruned_revenue(spark, path, "1995")
-    plan = q._jdf.queryExecution().explainString(
-        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-            "formatted"
-        )
-    )
-    assert "dynamicpruningexpression" in plan, plan[:2000]
-    assert "PartitionFilters" in plan
-    got = q.collect()
-    orders = spark.read.parquet(os.path.join(SF_DIR, "orders.parquet"))
-    want = (
-        orders.filter(F.year("o_orderdate") == 1995)
-        .agg(
-            F.count("*").cast("long").alias("n_orders"),
-            F.round(F.sum("o_totalprice"), 2).alias("revenue"),
-        )
-        .collect()[0]
-    )
-    assert len(got) == 1
-    assert got[0]["n_orders"] == want["n_orders"]
-    assert abs(got[0]["revenue"] - want["revenue"]) < 0.01
 
 
 def test_bloom_index_point_lookup_skips_files(spark, tmp_path):

@@ -775,25 +775,20 @@ def test_bpe_merges_first_rule_exact_and_deterministic(spark):
     assert r1.pair_count == best[1]
 
 
-def test_bpe_driver_and_distributed_paths_learn_identical_rules(spark):
-    """The small-vocab driver fast path and the distributed fold loop
-    must learn the SAME merge table (counts and tie-breaks included)
-    on the same corpus — forcing the distributed path by dropping the
-    threshold to 0."""
+def test_bpe_over_cap_vocabulary_raises(spark):
+    """A vocabulary over BPE_DRIVER_VOCAB_MAX words must raise, naming
+    the cap, instead of being collected to the driver."""
+    import pytest
+
     from data_warehouse_co_healthy_spark.llm import training
 
-    fast = training.bpe_merges(spark, SF_DIR).toPandas()
     orig = training.BPE_DRIVER_VOCAB_MAX
     training.BPE_DRIVER_VOCAB_MAX = 0
     try:
-        dist = training.bpe_merges(spark, SF_DIR).toPandas()
+        with pytest.raises(ValueError, match="BPE_DRIVER_VOCAB_MAX=0"):
+            training.bpe_merges(spark, SF_DIR)
     finally:
         training.BPE_DRIVER_VOCAB_MAX = orig
-    assert fast.values.tolist() == dist.values.tolist()
-
-    # two runs of the default path agree exactly (determinism)
-    again = training.bpe_merges(spark, SF_DIR).toPandas()
-    assert fast.equals(again)
 
 
 def test_bpe_segment_matches_python_apply(spark):

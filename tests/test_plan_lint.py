@@ -196,7 +196,7 @@ DIVIDE_OK: dict[str, str] = {}
 
 @pytest.mark.parametrize("name", sorted(entry.queries()))
 def test_plan_has_no_scale_antipatterns(spark, name):
-    from data_warehouse_co_healthy_spark.plans.lint import (
+    from tests.plan_lint import (
         divide_findings,
         plan_findings,
     )
@@ -220,7 +220,7 @@ def test_assert_scalable_plan_api(spark):
     passes a clean aggregate; allow= must name known rules."""
     from pyspark.sql import functions as F
 
-    from data_warehouse_co_healthy_spark.plans.lint import (
+    from tests.plan_lint import (
         assert_scalable_plan,
     )
 
@@ -249,7 +249,7 @@ def test_divide_findings_guard_patterns(spark):
     own guard (clean). Remainder is covered like Divide."""
     from pyspark.sql import functions as F
 
-    from data_warehouse_co_healthy_spark.plans.lint import (
+    from tests.plan_lint import (
         divide_findings,
     )
 

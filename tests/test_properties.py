@@ -453,7 +453,10 @@ def _events_parquet(rows):
         }
     )
     d = tempfile.mkdtemp(prefix="ev_prop_")
-    df.to_parquet(os.path.join(d, "events.parquet"), index=False)
+    df.to_parquet(
+        os.path.join(d, "events.parquet"), index=False,
+        coerce_timestamps="us",
+    )
     return d
 
 
@@ -906,13 +909,17 @@ _bpe_word = st.text(
 @settings(max_examples=8, deadline=None)
 @given(words=st.lists(_bpe_word, min_size=1, max_size=12))
 def test_bpe_distributed_fold_matches_python_reference(spark, words):
-    """The distributed BPE merge loop (codegen folds over SQL string
-    literals built from learned symbols) must learn EXACTLY the rules
-    of the pure-Python reference on arbitrary vocabularies — counts,
-    tie-breaks, and early exhaustion included. Random symbols cover
-    the escaping surface (quotes, backslashes, regex metachars,
-    emoji) that fixture corpora never touch."""
+    """BPE rules learned on arbitrary vocabularies and applied through
+    ``_merge_fold_sql`` (codegen folds over SQL string literals built
+    from learned symbols) must segment every word EXACTLY like a
+    pure-Python leftmost-first apply. The trainer must learn the
+    reference's rules too — counts, tie-breaks and early exhaustion
+    included. Random symbols cover the escaping surface (quotes,
+    backslashes, regex metachars, emoji) that fixture corpora never
+    touch."""
     from collections import Counter
+
+    from pyspark.sql import functions as F
 
     from data_warehouse_co_healthy_spark.llm import training
 
@@ -920,26 +927,48 @@ def test_bpe_distributed_fold_matches_python_reference(spark, words):
     wc = spark.createDataFrame(
         [(w, c) for w, c in counts.items()], "word string, cnt long"
     )
-    orig_max, orig_merges = (
-        training.BPE_DRIVER_VOCAB_MAX,
-        training.BPE_MERGES,
-    )
-    training.BPE_DRIVER_VOCAB_MAX = 0  # force the distributed fold path
+    orig_merges = training.BPE_MERGES
     training.BPE_MERGES = 3
     try:
-        got = [
+        learned = [
             (r["rank"], r["left"], r["right"], r["pair_count"])
             for r in training._bpe_merges_from_counts(spark, wc)
             .orderBy("rank")
             .collect()
         ]
     finally:
-        training.BPE_DRIVER_VOCAB_MAX = orig_max
         training.BPE_MERGES = orig_merges
     want = training._bpe_merge_rules_python(
         [(tuple(w), c) for w, c in counts.items()], 3
     )
-    assert got == [(r, l, rt, c) for r, l, rt, c in want]
+    assert learned == want
+
+    expr = "ws"
+    for _, left, right, _ in learned:
+        expr = training._merge_fold_sql(expr, left, right)
+    got = {
+        r["word"]: list(r["seg"])
+        for r in wc.select(
+            "word",
+            F.expr("transform(split(word, ''), x -> x)").alias("ws"),
+        )
+        .select("word", F.expr(expr).alias("seg"))
+        .collect()
+    }
+
+    def apply(word):
+        sym = list(word)
+        for _, left, right, _ in learned:
+            out: list[str] = []
+            for x in sym:
+                if out and out[-1] == left and x == right:
+                    out[-1] = left + right
+                else:
+                    out.append(x)
+            sym = out
+        return sym
+
+    assert got == {w: apply(w) for w in counts}
 
 
 # customer-like micro-tables for the privacy-audit trio: few distinct
@@ -1367,7 +1396,10 @@ def test_attribution_counts_null_channel_touches(spark):
         }
     )
     d = tempfile.mkdtemp(prefix="ev_null_")
-    df.to_parquet(os.path.join(d, "events.parquet"), index=False)
+    df.to_parquet(
+        os.path.join(d, "events.parquet"), index=False,
+        coerce_timestamps="us",
+    )
 
     got = {
         r["channel"]: (
@@ -1428,7 +1460,10 @@ def test_top_event_paths_null_propagates_and_sorts_last(spark):
         }
     )
     d = tempfile.mkdtemp(prefix="ev_nullpath_")
-    df.to_parquet(os.path.join(d, "events.parquet"), index=False)
+    df.to_parquet(
+        os.path.join(d, "events.parquet"), index=False,
+        coerce_timestamps="us",
+    )
 
     rows = top_event_paths(spark, d).collect()
     got = [(r["path"], int(r["n"])) for r in rows]

@@ -22,6 +22,22 @@ def test_read_parquet_with_schema(spark):
     assert df.schema == TESTDATA["nation"]
 
 
+def test_load_table_rejects_nanosecond_timestamps(spark, tmp_path):
+    """Every fixture stores timestamps as TIMESTAMP(MICROS); a
+    TIMESTAMP(NANOS) file fails loudly instead of being read through a
+    session-wide legacy conf."""
+    import pandas as pd
+    from pyspark.errors import AnalysisException
+
+    from data_warehouse_co_healthy_spark.catalog import load_table
+
+    pd.DataFrame(
+        {"event_id": [0], "ts": pd.to_datetime(["2024-01-01"])}
+    ).to_parquet(tmp_path / "events.parquet", index=False)
+    with pytest.raises(AnalysisException, match="PARQUET_TYPE_ILLEGAL"):
+        load_table(spark, str(tmp_path), "events").collect()
+
+
 def test_csv_roundtrip(spark, tmp_path):
     out = str(tmp_path / "nation_csv")
     df = readers.read_parquet(spark, f"{SF_DIR}/nation.parquet")

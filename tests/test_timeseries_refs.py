@@ -88,7 +88,7 @@ def test_gapfill_linear_matches_pandas_interpolation(spark):
 
     ev = pd.read_parquet(f"{SF_DIR}/events.parquet")
     ev = ev[ev["event_type"] == "purchase"].copy()
-    # events.ts is parquet TIMESTAMP(NANOS) → pandas datetime64[ns]
+    # events.ts is parquet TIMESTAMP(MICROS) → pandas datetime64[us]
     ev["day"] = pd.to_datetime(ev["ts"]).dt.date
     daily = (
         ev.groupby(["user_id", "day"])["value"]
