@@ -25,6 +25,7 @@ import math as _math
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..catalog import load_table, spread
 from ..functions.numeric import nz, snap_round, snap_round_sql
@@ -1195,7 +1196,9 @@ def star_contraction(
     directly instead of edge-set equality saves the no-change
     confirming round a signature comparison needs, and doubles as the
     correctness guard: labels ship only from a verified star
-    forest).
+    forest). Ids must be ``long``: both paths emit ``node long, root
+    long``, so any other ``s``/``d`` type raises ``TypeError`` before
+    either path runs.
 
     ``assume_canonical=True`` (round-11 optimization pass): the caller
     vouches the input is already an undirected-unique, self-loop-free
@@ -1213,6 +1216,13 @@ def star_contraction(
     groupBy+join pairs, and both union-shaped expansions (small-star's
     two legs, the count's two role rows) explode from one struct array
     per row."""
+    for col in ("s", "d"):
+        dtype = edges.schema[col].dataType
+        if not isinstance(dtype, T.LongType):
+            raise TypeError(
+                f"star_contraction: edge column {col!r} must be long, "
+                f"got {dtype.simpleString()}"
+            )
     e = edges.select(
         F.greatest("s", "d").alias("s"), F.least("s", "d").alias("d")
     ).filter(F.col("s") != F.col("d"))

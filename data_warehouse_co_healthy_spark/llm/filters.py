@@ -139,55 +139,37 @@ def stream_url_frontier_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     frontier epoch (doc_id microseconds apart), so nothing is ever
     late; watermark-DISCARD itself is graded by
     stream_late_drop_drain."""
-    import glob as _glob  # noqa: PLC0415
-    import os  # noqa: PLC0415
-
     from ..operators.temporal import (  # noqa: PLC0415
+        DRAIN_FILES_PER_TRIGGER,
         _drain_bounded,
         _drain_session,
     )
-    from ..streaming.docs import _staged_dir  # noqa: PLC0415
+    from ..streaming.docs import staged_stream  # noqa: PLC0415
 
     spark = _drain_session(spark)
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    feed = _planted_urls(docs).withColumn(
-        "crawl_ts",
-        F.timestamp_micros(
-            F.lit(1_600_000_000_000_000) + F.col("doc_id")
-        ),
-    )
 
-    def build(d: str) -> None:
-        feed.repartitionByRange(
-            4, F.col("v"), F.col("doc_id")
-        ).write.mode("overwrite").parquet(d)
-        t0 = 1_600_000_000
-        for i, f in enumerate(
-            sorted(_glob.glob(os.path.join(d, "part-*.parquet")))
-        ):
-            os.utime(f, (t0 + i, t0 + i))
+    def frames() -> list[DataFrame]:
+        docs = load_table(spark, sf_dir, "documents").select("doc_id")
+        feed = _planted_urls(docs).withColumn(
+            "crawl_ts",
+            F.timestamp_micros(
+                F.lit(1_600_000_000_000_000) + F.col("doc_id")
+            ),
+        )
+        return [feed.repartitionByRange(4, F.col("v"), F.col("doc_id"))]
 
-    staged = _staged_dir(
+    # 2 variant-range files per trigger (round-11 trigger coarsening —
+    # rationale at DRAIN_FILES_PER_TRIGGER): the emitted universe is
+    # batching-independent, and re-arrivals still cross the remaining
+    # batch boundary (every canonical resource appears in BOTH
+    # batches' spelling ranges)
+    raw = staged_stream(
+        spark,
         "url_frontier4",
         sf_dir,
-        "url_frontier_",
-        build,
-        src=os.path.join(sf_dir, "documents.parquet"),
-    )
-    from ..operators.temporal import (  # noqa: PLC0415
+        "documents",
+        frames,
         DRAIN_FILES_PER_TRIGGER,
-    )
-
-    raw = (
-        spark.readStream.schema(feed.schema)
-        # 2 variant-range files per trigger (round-11 trigger
-        # coarsening — rationale at DRAIN_FILES_PER_TRIGGER): the
-        # emitted universe is batching-independent, and re-arrivals
-        # still cross the remaining batch boundary (every canonical
-        # resource appears in BOTH batches' spelling ranges)
-        .option("maxFilesPerTrigger", DRAIN_FILES_PER_TRIGGER)
-        .format("parquet")
-        .load(staged)
     )
     res = (
         _canonicalized(raw, keep=["crawl_ts"])
@@ -214,7 +196,7 @@ def stream_topk_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-domain budget and score is the quality signal.
 
     Execution: the documents table is staged as four files
-    HASH-partitioned on doc_id, one file per trigger, so each source's
+    HASH-partitioned on doc_id, two files per trigger, so each source's
     contenders are scattered across micro-batches and the final podium
     exists only in cross-batch state (pinned in tests: every source's
     final top-K draws from ≥2 staged files at sf0.01). State per key is
@@ -235,41 +217,18 @@ def stream_topk_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB: state is keys × K rows; the only shuffle is the
     groupBy(source) exchange every stateful operator pays. The
     update-mode snapshot stream is podium-grain, not input-grain."""
-    import glob as _glob  # noqa: PLC0415
-    import os  # noqa: PLC0415
-
     import pandas as pd  # noqa: PLC0415
     from pyspark.sql import Window  # noqa: PLC0415
     from pyspark.sql.streaming.state import GroupState  # noqa: PLC0415
 
     from ..operators.temporal import (  # noqa: PLC0415
+        DRAIN_FILES_PER_TRIGGER,
         _drain_bounded,
         _drain_session,
     )
-    from ..streaming.docs import _staged_dir  # noqa: PLC0415
+    from ..streaming.docs import staged_stream  # noqa: PLC0415
 
     spark = _drain_session(spark)
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", "source", "n_chars"
-    )
-
-    def build(d: str) -> None:
-        docs.repartition(4, F.col("doc_id")).write.mode(
-            "overwrite"
-        ).parquet(d)
-        t0 = 1_600_000_000
-        for i, f in enumerate(
-            sorted(_glob.glob(os.path.join(d, "part-*.parquet")))
-        ):
-            os.utime(f, (t0 + i, t0 + i))
-
-    staged = _staged_dir(
-        "topk_docs4",
-        sf_dir,
-        "topk_docs_",
-        build,
-        src=os.path.join(sf_dir, "documents.parquet"),
-    )
 
     out_schema = "source string, rnk int, doc_id long, score long, n_seen long"
     state_schema = "doc_ids array<long>, scores array<long>, n_seen long"
@@ -311,20 +270,21 @@ def stream_topk_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
             }
         )
 
-    from ..operators.temporal import (  # noqa: PLC0415
+    # 2 doc_id-hash files per trigger (round-11 trigger coarsening —
+    # rationale at DRAIN_FILES_PER_TRIGGER): top-K merge is associative
+    # so the final podium is batching-independent, and the hash split
+    # still scatters every source's contenders across both batches
+    raw = staged_stream(
+        spark,
+        "topk_docs4",
+        sf_dir,
+        "documents",
+        lambda: [
+            load_table(spark, sf_dir, "documents")
+            .select("doc_id", "source", "n_chars")
+            .repartition(4, F.col("doc_id"))
+        ],
         DRAIN_FILES_PER_TRIGGER,
-    )
-
-    raw = (
-        spark.readStream.schema(docs.schema)
-        # 2 doc_id-hash files per trigger (round-11 trigger coarsening
-        # — rationale at DRAIN_FILES_PER_TRIGGER): top-K merge is
-        # associative so the final podium is batching-independent, and
-        # the hash split still scatters every source's contenders
-        # across both batches
-        .option("maxFilesPerTrigger", DRAIN_FILES_PER_TRIGGER)
-        .format("parquet")
-        .load(staged)
     )
     res = raw.groupBy("source").applyInPandasWithState(
         update,

@@ -23,60 +23,36 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-# events.parquet stores ts as TIMESTAMP(MICROS); the stream source takes
-# its schema from the parquet footer (one batch-read of the footer at
-# plan time).
+from ..catalog import load_table
+from .docs import staged_stream
 
-
-def stage_events_dir(sf_dir: str) -> str:
-    """The file stream source requires a DIRECTORY; the fixtures are
-    single files. Stage a temp dir containing a symlink to the events
-    parquet (no data copied) — cached/cleaned via the shared
-    ``_staged_dir`` helper in streaming.docs."""
-    import os
-
-    from .docs import _staged_dir  # noqa: PLC0415
-
-    def build(d: str) -> None:
-        os.symlink(
-            os.path.join(sf_dir, "events.parquet"),
-            os.path.join(d, "events.parquet"),
-        )
-
-    return _staged_dir(
-        "events",
-        sf_dir,
-        "events_stream_",
-        build,
-        src=os.path.join(sf_dir, "events.parquet"),
-    )
+#: Files in the parts, ordered, quartile and planted-duplicate
+#: streams (the cohort stream has LATE_COHORTS).
+STREAM_PARTS = 4
+#: Default watermark delay of the event-time operators below.
+WATERMARK = "2 hours"
 
 
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """File-source stream over the events parquet (for tests/demo; a
-    production deployment points the same plan at Kafka)."""
-    staged = stage_events_dir(sf_dir)
-    schema = spark.read.parquet(staged).schema
-    raw = spark.readStream.schema(schema).format("parquet").load(staged)
-    if isinstance(schema["ts"].dataType, T.TimestampNTZType):
-        # watermarks require TIMESTAMP (LTZ); the session tz is pinned
-        # UTC (session.py) so this cast preserves the wall-clock value
-        raw = raw.withColumn("ts", F.col("ts").cast("timestamp"))
-    return raw
+    """File-source stream over the events table as ONE staged file, so
+    it drains in one micro-batch (for tests/demo; a production
+    deployment points the same plan at Kafka)."""
+    return staged_stream(
+        spark,
+        "events",
+        sf_dir,
+        "events",
+        lambda: [load_table(spark, sf_dir, "events").coalesce(1)],
+    )
 
 
-def windowed_counts(
-    events: DataFrame,
-    window: str = "1 hour",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Tumbling-window counts + value sums per event_type with a
+def windowed_counts(events: DataFrame) -> DataFrame:
+    """Hourly tumbling-window counts + value sums per event_type with a
     watermark bounding late data (and state size)."""
     return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("w"), "event_type")
+        events.withWatermark("ts", WATERMARK)
+        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(F.count("*").alias("n"), F.sum("value").alias("total_value"))
         .select(
             F.col("w").getField("start").alias("bucket"),
@@ -87,10 +63,7 @@ def windowed_counts(
     )
 
 
-def ohlc_daily_stream(
-    events: DataFrame,
-    watermark: str = "2 hours",
-) -> DataFrame:
+def ohlc_daily_stream(events: DataFrame) -> DataFrame:
     """Streaming twin of ``operators.temporal.ohlc_daily``: daily OHLC
     bars built incrementally as purchase ticks arrive. ``min_by`` /
     ``max_by`` on the (ts, event_id) struct are declarative aggregates,
@@ -105,7 +78,7 @@ def ohlc_daily_stream(
         "value",
     )
     return (
-        p.withWatermark("ts", watermark)
+        p.withWatermark("ts", WATERMARK)
         .groupBy(F.window("ts", "1 day").alias("w"))
         .agg(
             F.count("*").cast("long").alias("n_trades"),
@@ -197,7 +170,7 @@ def running_user_totals_exact(events: DataFrame) -> DataFrame:
 
 def dedup_within_watermark(
     events: DataFrame,
-    watermark: str = "2 hours",
+    watermark: str = WATERMARK,
 ) -> DataFrame:
     """Streaming exact dedup on event_id with bounded state: duplicates
     arriving within the watermark horizon are dropped; state for ids
@@ -212,7 +185,7 @@ def enriched_counts(
     events: DataFrame,
     user_dim: DataFrame,
     window: str = "1 hour",
-    watermark: str = "2 hours",
+    watermark: str = WATERMARK,
 ) -> DataFrame:
     """Stream-static join: each micro-batch joins the (broadcastable)
     static user dimension — the streaming analog of the reference's
@@ -232,7 +205,7 @@ def enriched_counts(
 def purchase_attribution(
     events: DataFrame,
     horizon_min: int = 30,
-    watermark: str = "2 hours",
+    watermark: str = WATERMARK,
     how: str = "inner",
 ) -> DataFrame:
     """Stream-stream join: each purchase joined to the same user's
@@ -272,20 +245,14 @@ def purchase_attribution(
 
 
 def read_events_stream_parts(
-    spark: SparkSession,
-    sf_dir: str,
-    n_parts: int = 4,
-    files_per_trigger: int = 1,
+    spark: SparkSession, sf_dir: str, files_per_trigger: int = 1
 ) -> DataFrame:
     """Multi-micro-batch file stream: the events table re-staged as
-    ``n_parts`` files, ``files_per_trigger`` files per trigger — the
+    STREAM_PARTS files, ``files_per_trigger`` files per trigger — the
     local stand-in for a stream that arrives over time (Kafka offsets,
-    hourly drops). Timestamps are already µs (conversion happens in
-    the batch staging read), so the streaming side needs no legacy
-    conf. Staged through the shared ``_staged_dir`` cache (keyed on
-    kind + source fingerprint, cleaned at exit) so repeated calls —
-    the oracle sweeps, plan lint over every query, tests — share ONE
-    rewrite instead of leaking a full table copy per invocation.
+    hourly drops). Staged once per process (``staged_stream``), so
+    repeated calls — the oracle sweeps, plan lint over every query,
+    tests — share ONE rewrite instead of leaking a table copy per call.
 
     ``files_per_trigger`` is the trigger-granularity knob (round-11
     optimization pass, VERDICT r10 item 2): each micro-batch pays a
@@ -295,51 +262,32 @@ def read_events_stream_parts(
     trigger — same staged fixture, same file order, half the fixed
     cost, still ≥2 batches so cross-batch state stays exercised.
     Drains whose oracle models per-file batch boundaries keep 1."""
-    import os
-
-    from ..catalog import load_table
-    from .docs import _staged_dir  # noqa: PLC0415
-
-    batch = load_table(spark, sf_dir, "events")
-
-    def build(d: str) -> None:
-        batch.repartition(n_parts).write.mode("overwrite").parquet(d)
-
-    staged = _staged_dir(
-        f"events_parts{n_parts}",
+    return staged_stream(
+        spark,
+        f"events_parts{STREAM_PARTS}",
         sf_dir,
-        "events_parts_",
-        build,
-        src=os.path.join(sf_dir, "events.parquet"),
-    )
-    return (
-        spark.readStream.schema(batch.schema)
-        .option("maxFilesPerTrigger", files_per_trigger)
-        .format("parquet")
-        .load(staged)
+        "events",
+        lambda: [
+            load_table(spark, sf_dir, "events").repartition(STREAM_PARTS)
+        ],
+        files_per_trigger,
     )
 
 
 def read_events_stream_ordered(
-    spark: SparkSession,
-    sf_dir: str,
-    n_parts: int = 4,
-    files_per_trigger: int = 1,
+    spark: SparkSession, sf_dir: str, files_per_trigger: int = 1
 ) -> DataFrame:
     """Multi-micro-batch file stream in EVENT-TIME ORDER: the events
-    table range-partitioned on ``ts`` into ``n_parts`` files, staged
-    with strictly increasing modification times, read one file per
-    trigger — so batch k+1 contains only events with ts >= every event
-    of batch k (range partitioning guarantees the order property for
-    ANY sampled boundaries; part-00000 is the lowest range). This is
-    the local stand-in for the common production reality of a
-    roughly-time-ordered source (Kafka with event-time ≈ ingest-time,
-    hourly file drops), under which NO input is ever late relative to
-    the watermark — the precondition that makes cross-batch
-    stream-stream JOIN state exactly replayable against a batch oracle
-    (see stream_join_multibatch_drain). FileStreamSource picks files
-    oldest-mtime-first (latestFirst=false default); mtimes are pinned
-    1s apart so the order is deterministic, never a same-second tie.
+    table range-partitioned on ``ts`` into STREAM_PARTS files, read in
+    partition order — so batch k+1 contains only events with ts >=
+    every event of batch k (range partitioning guarantees the order
+    property for ANY sampled boundaries; part-00000 is the lowest
+    range). This is the local stand-in for the common production
+    reality of a roughly-time-ordered source (Kafka with event-time ≈
+    ingest-time, hourly file drops), under which NO input is ever late
+    relative to the watermark — the precondition that makes
+    cross-batch stream-stream JOIN state exactly replayable against a
+    batch oracle (see stream_join_multibatch_drain).
 
     ``files_per_trigger``: trigger-granularity knob — see
     read_events_stream_parts. A batch of k consecutive ordered files
@@ -347,190 +295,100 @@ def read_events_stream_ordered(
     input precondition (and every result derived from it) holds for
     ANY value; drains whose graded claim needs the per-file ledger
     (stream_merge_snapshot_drain's four versions) keep 1."""
-    import glob as _glob
-    import os
-
-    from ..catalog import load_table
-    from .docs import _staged_dir  # noqa: PLC0415
-
-    batch = load_table(spark, sf_dir, "events")
-
-    def build(d: str) -> None:
-        batch.repartitionByRange(n_parts, F.col("ts")).write.mode(
-            "overwrite"
-        ).parquet(d)
-        # part-0000i is range partition i (ascending ts); pin mtimes
-        # to the same ascending order, 1 s apart
-        t0 = 1_600_000_000
-        for i, f in enumerate(
-            sorted(_glob.glob(os.path.join(d, "part-*.parquet")))
-        ):
-            os.utime(f, (t0 + i, t0 + i))
-
-    staged = _staged_dir(
-        f"events_ordered{n_parts}",
+    return staged_stream(
+        spark,
+        f"events_ordered{STREAM_PARTS}",
         sf_dir,
-        "events_ordered_",
-        build,
-        src=os.path.join(sf_dir, "events.parquet"),
+        "events",
+        lambda: [
+            load_table(spark, sf_dir, "events").repartitionByRange(
+                STREAM_PARTS, F.col("ts")
+            )
+        ],
+        files_per_trigger,
     )
-    raw = (
-        spark.readStream.schema(batch.schema)
-        .option("maxFilesPerTrigger", files_per_trigger)
-        .format("parquet")
-        .load(staged)
-    )
-    if isinstance(raw.schema["ts"].dataType, T.TimestampNTZType):
-        # watermarks require TIMESTAMP (LTZ); session tz is pinned UTC
-        # so the cast preserves the wall-clock value (same handling as
-        # read_events_stream)
-        raw = raw.withColumn("ts", F.col("ts").cast("timestamp"))
-    return raw
 
 
 LATE_COHORTS = 3  # modulo split for the pinned-late-cohort stream
 
 
 def read_events_stream_cohorts(
-    spark: SparkSession, sf_dir: str, n_cohorts: int = LATE_COHORTS
+    spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """Multi-micro-batch file stream with a PINNED LATE cohort: batch
-    k is every event_id ≡ k (mod n_cohorts) row. Every cohort spans
+    k is every event_id ≡ k (mod LATE_COHORTS) row. Every cohort spans
     the WHOLE event-time range, so batch 0 advances the watermark to
     (its frontier − delay) and each later batch is mostly stragglers
     that arrive long after the watermark passed them. Because the
-    split is a pure event_id predicate and the file order is pinned
-    (mtimes 1 s apart, as in read_events_stream_ordered), the exact
-    set a watermark DISCARDS is a deterministic function of the table
-    alone — SQL-computable by an oracle. n_cohorts must be ≥ 3 to
-    observe drops at all: since SPARK-40925 the late-event filter of
-    batch k uses the watermark DISPLAYED for batch k−1 (one batch
-    behind the eviction watermark), so a 2-batch stream filters batch
-    1 against the initial 1970 watermark and never drops anything —
-    measured, not speculated (numRowsDroppedByWatermark stayed 0).
-    This staged adversary is what ``stream_late_drop_drain`` grades;
-    the ordered readers are its complement (no row ever late)."""
-    import glob as _glob
-    import os
-    import shutil
+    split is a pure event_id predicate and the file order is pinned,
+    the exact set a watermark DISCARDS is a deterministic function of
+    the table alone — SQL-computable by an oracle. LATE_COHORTS must
+    be ≥ 3 to observe drops at all: since SPARK-40925 the late-event
+    filter of batch k uses the watermark DISPLAYED for batch k−1 (one
+    batch behind the eviction watermark), so a 2-batch stream filters
+    batch 1 against the initial 1970 watermark and never drops
+    anything — measured, not speculated (numRowsDroppedByWatermark
+    stayed 0). This staged adversary is what ``stream_late_drop_drain``
+    grades; the ordered readers are its complement (no row ever
+    late)."""
+    def frames() -> list[DataFrame]:
+        batch = load_table(spark, sf_dir, "events")
+        return [
+            batch.filter(F.col("event_id") % LATE_COHORTS == i).coalesce(1)
+            for i in range(LATE_COHORTS)
+        ]
 
-    from ..catalog import load_table
-    from .docs import _staged_dir  # noqa: PLC0415
-
-    batch = load_table(spark, sf_dir, "events")
-
-    def build(d: str) -> None:
-        t0 = 1_600_000_000
-        for i in range(n_cohorts):
-            sub = os.path.join(d, f"stage_{i}")
-            batch.filter(
-                F.col("event_id") % n_cohorts == i
-            ).coalesce(1).write.mode("overwrite").parquet(sub)
-            src = _glob.glob(os.path.join(sub, "part-*.parquet"))[0]
-            dst = os.path.join(d, f"part-{i:05d}.parquet")
-            shutil.move(src, dst)
-            os.utime(dst, (t0 + i, t0 + i))
-            shutil.rmtree(sub)
-
-    staged = _staged_dir(
-        f"events_cohorts{n_cohorts}",
-        sf_dir,
-        "events_cohorts_",
-        build,
-        src=os.path.join(sf_dir, "events.parquet"),
+    return staged_stream(
+        spark, f"events_cohorts{LATE_COHORTS}", sf_dir, "events", frames
     )
-    raw = (
-        spark.readStream.schema(batch.schema)
-        .option("maxFilesPerTrigger", 1)
-        .format("parquet")
-        .load(staged)
-    )
-    if isinstance(raw.schema["ts"].dataType, T.TimestampNTZType):
-        # watermarks require TIMESTAMP (LTZ); session tz is pinned UTC
-        raw = raw.withColumn("ts", F.col("ts").cast("timestamp"))
-    return raw
 
 
 THIN_MOD = 29  # idle-flush stream keeps every THIN_MOD-th event
 
 
 def read_events_stream_quartiles_thinned(
-    spark: SparkSession, sf_dir: str, n_parts: int = 4
+    spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """Event-time-ordered multi-batch stream whose batch boundaries
     are EXACTLY SQL-replayable: the events table thinned to every
     THIN_MOD-th event_id (sparsity is the point — per-user activity
     gaps are what let idle timeouts fire; the full table has every
-    user active in every batch), then split into ``n_parts`` files by
+    user active in every batch), then split into STREAM_PARTS files by
     explicit row_number quartile over (ts, event_id) — unlike
     repartitionByRange's sampled boundaries, ``floor((rn-1)·P/N)`` is
     a pure function of the table, so an oracle can reconstruct each
-    micro-batch verbatim. Files carry ascending mtimes 1 s apart, one
-    file per trigger (the read_events_stream_ordered protocol)."""
-    import glob as _glob
-    import os
-    import shutil
-
+    micro-batch verbatim. One file per trigger, in quartile order."""
     from pyspark.sql import Window  # noqa: PLC0415
 
-    from ..catalog import load_table
-    from .docs import _staged_dir  # noqa: PLC0415
-
-    batch = load_table(spark, sf_dir, "events")
-
-    def build(d: str) -> None:
-        # count + global row_number live INSIDE build (round-11
-        # optimization pass): the staged dir is cached per process, but
-        # this count used to run as its own Spark job on EVERY call —
-        # one wasted job per bench run / oracle sweep after the first
-        thin = batch.filter(F.col("event_id") % THIN_MOD == 0)
+    def frames() -> list[DataFrame]:
+        # runs only on a staging cache miss, so the count is one job
+        # per process, not one per call
+        thin = load_table(spark, sf_dir, "events").filter(
+            F.col("event_id") % THIN_MOD == 0
+        )
         w = Window.orderBy("ts", "event_id")
         n_total = thin.count()
         keyed = thin.withColumn(
             "k",
             F.floor(
-                (F.row_number().over(w) - 1) * n_parts / F.lit(n_total)
+                (F.row_number().over(w) - 1) * STREAM_PARTS / F.lit(n_total)
             ).cast("int"),
         )
-        t0 = 1_600_000_000
-        for i in range(n_parts):
-            sub = os.path.join(d, f"stage_{i}")
-            keyed.filter(F.col("k") == i).drop("k").coalesce(
-                1
-            ).write.mode("overwrite").parquet(sub)
-            src = _glob.glob(os.path.join(sub, "part-*.parquet"))[0]
-            dst = os.path.join(d, f"part-{i:05d}.parquet")
-            shutil.move(src, dst)
-            os.utime(dst, (t0 + i, t0 + i))
-            shutil.rmtree(sub)
+        return [
+            keyed.filter(F.col("k") == i).drop("k").coalesce(1)
+            for i in range(STREAM_PARTS)
+        ]
 
-    staged = _staged_dir(
-        f"events_quartiles{n_parts}",
-        sf_dir,
-        "events_quartiles_",
-        build,
-        src=os.path.join(sf_dir, "events.parquet"),
+    return staged_stream(
+        spark, f"events_quartiles{STREAM_PARTS}", sf_dir, "events", frames
     )
-    raw = (
-        spark.readStream.schema(batch.schema)
-        .option("maxFilesPerTrigger", 1)
-        .format("parquet")
-        .load(staged)
-    )
-    if isinstance(raw.schema["ts"].dataType, T.TimestampNTZType):
-        # watermarks require TIMESTAMP (LTZ); session tz is pinned UTC
-        raw = raw.withColumn("ts", F.col("ts").cast("timestamp"))
-    return raw
 
 
 DUP_MOD = 5  # every DUP_MOD-th event gets an exact duplicate copy
 
 
 def read_events_stream_ordered_with_dups(
-    spark: SparkSession,
-    sf_dir: str,
-    n_parts: int = 4,
-    files_per_trigger: int = 1,
+    spark: SparkSession, sf_dir: str, files_per_trigger: int = 1
 ) -> DataFrame:
     """``read_events_stream_ordered`` over a corpus with PLANTED exact
     duplicates: every DUP_MOD-th event appears twice (full-row copy, so
@@ -541,43 +399,21 @@ def read_events_stream_ordered_with_dups(
     original's event time, so range staging puts both in the same
     micro-batch (range ties hash to one partition) and both are always
     inside the watermark horizon."""
-    import glob as _glob
-    import os
+    def frames() -> list[DataFrame]:
+        batch = load_table(spark, sf_dir, "events")
+        doubled = batch.unionByName(
+            batch.filter(F.col("event_id") % DUP_MOD == 0)
+        )
+        return [doubled.repartitionByRange(STREAM_PARTS, F.col("ts"))]
 
-    from ..catalog import load_table
-    from .docs import _staged_dir  # noqa: PLC0415
-
-    batch = load_table(spark, sf_dir, "events")
-    doubled = batch.unionByName(
-        batch.filter(F.col("event_id") % DUP_MOD == 0)
-    )
-
-    def build(d: str) -> None:
-        doubled.repartitionByRange(n_parts, F.col("ts")).write.mode(
-            "overwrite"
-        ).parquet(d)
-        t0 = 1_600_000_000
-        for i, f in enumerate(
-            sorted(_glob.glob(os.path.join(d, "part-*.parquet")))
-        ):
-            os.utime(f, (t0 + i, t0 + i))
-
-    staged = _staged_dir(
-        f"events_ordered_dup{n_parts}",
+    return staged_stream(
+        spark,
+        f"events_ordered_dup{STREAM_PARTS}",
         sf_dir,
-        "events_ordered_dup_",
-        build,
-        src=os.path.join(sf_dir, "events.parquet"),
+        "events",
+        frames,
+        files_per_trigger,
     )
-    raw = (
-        spark.readStream.schema(batch.schema)
-        .option("maxFilesPerTrigger", files_per_trigger)
-        .format("parquet")
-        .load(staged)
-    )
-    if isinstance(raw.schema["ts"].dataType, T.TimestampNTZType):
-        raw = raw.withColumn("ts", F.col("ts").cast("timestamp"))
-    return raw
 
 
 def merge_user_totals_sink(spark: SparkSession, target: str):
@@ -662,26 +498,6 @@ def _fresh_checkpoint() -> str:
 _CKPT_DIRS: list[str] = []
 
 
-def _raw_checkpoint_fs(spark: SparkSession) -> None:
-    """Route checkpoint I/O on the local ``file:`` scheme through the
-    CRC-free RawLocalFs (round-11 optimization pass, guide §6). Every
-    per-batch checkpoint write — offset WAL, commit log, source
-    metadata log, state-store delta files — goes through Spark's
-    CheckpointFileManager, whose FileContext path resolves ``file:``
-    to the CHECKSUMMED LocalFs: each tiny write pays a full CRC pass
-    plus a twin ``.crc`` file create/write/rename. Measured on
-    stream_outer_join_drain at sf0.1: walCommit 36→19 ms, commitOffsets
-    38→18 ms, state commitTimeMs 650–820→320–470 ms summed, drain wall
-    4.4→3.8 s. The checksum adds nothing here: checkpoints are
-    ephemeral (see _fresh_checkpoint) and parquet data carries its own
-    page checksums. Production checkpoints live on HDFS/S3 schemes and
-    are untouched by this file:-scheme mapping."""
-    spark.sparkContext._jsc.hadoopConfiguration().set(
-        "fs.AbstractFileSystem.file.impl",
-        "org.apache.hadoop.fs.local.RawLocalFs",
-    )
-
-
 def release_checkpoint(q) -> None:
     """Remove a drained query's checkpoint dir NOW instead of waiting
     for interpreter exit (ADVICE r10: a long session running many
@@ -706,7 +522,6 @@ def run_foreach_batch(result: DataFrame, sink, output_mode: str = "update"):
     MERGE into Delta/Iceberg, partitioned parquet upsert — becomes a
     streaming sink with exactly-once-per-batch semantics (batch_id is
     the replay key for idempotence)."""
-    _raw_checkpoint_fs(result.sparkSession)
     ckpt = _fresh_checkpoint()
     q = (
         result.writeStream.outputMode(output_mode)
@@ -734,7 +549,6 @@ def run_to_memory(
     for aq in spark.streams.active:
         if aq.name == name:
             aq.stop()
-    _raw_checkpoint_fs(spark)
     ckpt = _fresh_checkpoint()
     q = (
         result.writeStream.outputMode(output_mode)

@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import os
 import sys
+import xml.etree.ElementTree as ET
 
 import duckdb
 import pandas as pd
@@ -29,10 +30,61 @@ from tools.check_oracle import canonicalize, compare_strict
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.01")
 
 
+#: Session conf and SparkContext Hadoop conf as the ``spark`` fixture
+#: created them. Read through the ``no_leaked_conf`` fixture: a test
+#: module's ``from tests.conftest import`` loads a second copy of this
+#: file, whose dict is never filled.
+_CONF_AT_START: dict[str, dict[str, str]] = {}
+
+
+def conf_state(spark) -> tuple[dict[str, str], dict[str, str]]:
+    """(session conf, SparkContext Hadoop conf). The Hadoop conf is
+    serialized by ``writeXml`` in the JVM and parsed here, so reading
+    its ~1,000 entries costs a few py4j calls, not one per entry."""
+    sw = spark._jvm.java.io.StringWriter()
+    spark._jsc.hadoopConfiguration().writeXml(sw)
+    hadoop = {
+        p.findtext("name"): p.findtext("value")
+        for p in ET.fromstring(sw.toString()).iter("property")
+    }
+    return dict(spark.conf.getAll), hadoop
+
+
+def _diff(want: dict, got: dict) -> dict:
+    return {
+        k: (want.get(k), got.get(k))
+        for k in sorted(set(want) | set(got))
+        if want.get(k) != got.get(k)
+    }
+
+
 @pytest.fixture(scope="session")
 def spark():
     s = get_spark("tests", cpus=8)
+    # SharedState writes hive.metastore.warehouse.dir into the Hadoop
+    # conf on first use; initialize it before taking the snapshot
+    s._jsparkSession.sharedState()
+    _CONF_AT_START["session"], _CONF_AT_START["hadoop"] = conf_state(s)
     yield s
+
+
+@pytest.fixture
+def no_leaked_conf(spark):
+    """``check(name, session_overrides=None)`` fails when the session
+    conf or the SparkContext Hadoop conf differs from the ``spark``
+    fixture's creation snapshot (``session_overrides``: keys a running
+    fixture set on purpose)."""
+
+    def check(name, session_overrides=None):
+        session, hadoop = conf_state(spark)
+        want = {**_CONF_AT_START["session"], **(session_overrides or {})}
+        leaked = {
+            "session": _diff(want, session),
+            "hadoop": _diff(_CONF_AT_START["hadoop"], hadoop),
+        }
+        assert not any(leaked.values()), f"{name} left conf behind: {leaked}"
+
+    return check
 
 
 @pytest.fixture(scope="session")

@@ -198,8 +198,14 @@ def ansi(spark):
     spark.conf.set("spark.sql.ansi.enabled", prev)
 
 
+#: The session conf the ``ansi`` fixture sets for the module.
+_ANSI_ON = {"spark.sql.ansi.enabled": "true"}
+
+
 @pytest.mark.parametrize("name", sorted(reg.QUERIES))
-def test_query_survives_degenerate_warehouse(ansi, degen_dir, name):
+def test_query_survives_degenerate_warehouse(
+    ansi, degen_dir, name, no_leaked_conf
+):
     rows = reg.QUERIES[name](ansi, degen_dir).collect()
     # sanity on what does come back: no query may emit a non-finite
     # double (inf OR NaN) — undefined values must surface as NULL
@@ -207,6 +213,7 @@ def test_query_survives_degenerate_warehouse(ansi, degen_dir, name):
         for v in r:
             if isinstance(v, float):
                 assert math.isfinite(v), f"{name}: non-finite in {r}"
+    no_leaked_conf(name, _ANSI_ON)
 
 
 @pytest.fixture(scope="module")
@@ -227,8 +234,9 @@ def empty_dir(spark, tmp_path_factory):
 
 
 @pytest.mark.parametrize("name", sorted(reg.QUERIES))
-def test_query_survives_empty_warehouse(ansi, empty_dir, name):
+def test_query_survives_empty_warehouse(ansi, empty_dir, name, no_leaked_conf):
     reg.QUERIES[name](ansi, empty_dir).collect()
+    no_leaked_conf(name, _ANSI_ON)
 
 
 @pytest.fixture(scope="module")

@@ -30,12 +30,11 @@ def test_runtime_bloom_filter_prunes_fact_side(spark):
     into the fact scan side of a shuffle join (row-level semi-join
     pushdown — at 100 TB this drops most fact rows BEFORE the shuffle
     instead of after the join)."""
-    saved = {}
+    # explicitly set values only: conf.get returns a default for an
+    # unset key, and setting that back would leave the key set
+    explicit = spark.conf.getAll
+    saved = {k: explicit.get(k) for k in _BLOOM_CONFS}
     for k, v in _BLOOM_CONFS.items():
-        try:
-            saved[k] = spark.conf.get(k)
-        except Exception:
-            saved[k] = None
         spark.conf.set(k, v)
     try:
         li = spark.read.parquet(
@@ -73,12 +72,11 @@ def test_aqe_splits_skewed_join_partition(spark):
     single straggler task; AQE's skew-join rule must split that shuffle
     partition at runtime (the no-code-change complement to the salted
     join operator, operators/joins.py salted_join)."""
-    saved = {}
+    # explicitly set values only: conf.get returns a default for an
+    # unset key, and setting that back would leave the key set
+    explicit = spark.conf.getAll
+    saved = {k: explicit.get(k) for k in _SKEW_CONFS}
     for k, v in _SKEW_CONFS.items():
-        try:
-            saved[k] = spark.conf.get(k)
-        except Exception:
-            saved[k] = None
         spark.conf.set(k, v)
     try:
         fact = spark.range(0, 120_000).select(

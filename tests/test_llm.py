@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import pandas as pd
+import pytest
 
 from data_warehouse_co_healthy_spark.llm import dedup, similarity, text
 from tests.conftest import SF_DIR
@@ -492,6 +493,24 @@ def test_star_contraction_chain_converges_logarithmically(
     assert (pm[pm.node == 501].root == 500).all()
     # self-loop-only node 502 is a root: absent from the parent map
     assert 502 not in set(pm.node)
+
+
+@pytest.mark.parametrize("cap", [None, 0])
+@pytest.mark.parametrize(
+    "dtype, row", [("int", (1, 2)), ("string", ("a", "b"))],
+    ids=["int", "string"],
+)
+def test_star_contraction_rejects_non_long_ids(
+    spark, monkeypatch, cap, dtype, row
+):
+    """Both paths emit ``node long, root long``, so a non-long id
+    column must raise TypeError naming its type before either path
+    runs — with the default driver cap and with the cap at 0."""
+    if cap is not None:
+        monkeypatch.setattr(dedup, "CC_DRIVER_EDGE_MAX", cap)
+    edges = spark.createDataFrame([row], f"s {dtype}, d {dtype}")
+    with pytest.raises(TypeError, match=f"got {dtype}$"):
+        dedup.star_contraction(edges)
 
 
 def test_chunk_dedup_preserves_unique_docs(spark):

@@ -34,16 +34,18 @@ def test_no_orphan_oracles():
 
 
 @pytest.mark.parametrize("name", WITH_ORACLE)
-def test_query_matches_oracle(spark, duck, name):
+def test_query_matches_oracle(spark, duck, name, no_leaked_conf):
     assert_matches_oracle(spark, duck, QUERIES[name], ORACLES[name], name)
+    no_leaked_conf(name)
 
 
 @pytest.mark.parametrize("name", sorted(set(QUERIES) - set(ORACLES)))
-def test_rows_only_queries_run(spark, name):
+def test_rows_only_queries_run(spark, name, no_leaked_conf):
     from tests.conftest import SF_DIR
 
     df = QUERIES[name](spark, SF_DIR)
     assert df.count() >= 0
+    no_leaked_conf(name)
 
 
 # ---------------------------------------------------------------------------

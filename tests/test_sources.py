@@ -585,8 +585,9 @@ def test_bucketed_join_is_shuffle_free(spark, tmp_path):
     # at fixture scale the planner would broadcast instead (also
     # shuffle-free, but not what we're proving); disable it so the plan
     # shows the big-big case: bucketed SMJ with no Exchange.
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.getAll.get(key)  # None: unset, restore by unset
+    spark.conf.set(key, "-1")
     try:
         lb, ob = spark.table("li_b"), spark.table("o_b")
         joined = lb.join(ob, lb.l_orderkey == ob.o_orderkey)
@@ -595,7 +596,10 @@ def test_bucketed_join_is_shuffle_free(spark, tmp_path):
         assert "Bucketed: true" in plan
         assert joined.count() == li.count()
     finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)
         spark.sql("DROP TABLE IF EXISTS li_b")
         spark.sql("DROP TABLE IF EXISTS o_b")
 
@@ -768,15 +772,17 @@ def test_parquetpages_zone_map_pruning(spark, tmp_path):
     )
 
     register_parquet_pages(spark)
-    # default reader keeps working with the pushdown conf OFF
-    spark.conf.set("spark.sql.python.filterPushdown.enabled", "false")
-    plain = (
-        spark.read.format("parquetpages").option("path", src).load()
-    )
-    assert plain.count() == n
-
-    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
+    key = "spark.sql.python.filterPushdown.enabled"
+    prev = spark.conf.getAll.get(key)  # None: unset, restore by unset
     try:
+        # default reader keeps working with the pushdown conf OFF
+        spark.conf.set(key, "false")
+        plain = (
+            spark.read.format("parquetpages").option("path", src).load()
+        )
+        assert plain.count() == n
+
+        spark.conf.set(key, "true")
         df = (
             spark.read.format("parquetpages")
             .option("path", src)
@@ -798,9 +804,10 @@ def test_parquetpages_zone_map_pruning(spark, tmp_path):
         none = df.filter(F.col("doc_id") > 10_000)
         assert none.count() == 0
     finally:
-        spark.conf.set(
-            "spark.sql.python.filterPushdown.enabled", "false"
-        )
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)
 
 
 def test_python_datasource_streams_pages_incrementally(spark):

@@ -602,7 +602,7 @@ def test_stream_incremental_merge_matches_batch(spark, tmp_path):
     from data_warehouse_co_healthy_spark.sources.writers import read_version
 
     target = str(tmp_path / "user_totals")
-    stream = se.read_events_stream_parts(spark, SF_DIR, n_parts=4)
+    stream = se.read_events_stream_parts(spark, SF_DIR)
     q = (
         stream.writeStream.outputMode("append")
         .foreachBatch(se.merge_user_totals_sink(spark, target))
@@ -720,6 +720,28 @@ def test_staged_dir_rebuilds_when_fixture_rewritten(tmp_path):
     sd.clear_staged_dirs()
     assert not os.path.isdir(d1) and not os.path.isdir(d2)
     assert sd._STAGED_DIRS == {}
+
+
+def test_staged_stream_cache_hit_runs_no_job(spark):
+    """A staged stream that is already built opens without calling its
+    split callable and without starting a Spark job."""
+    from data_warehouse_co_healthy_spark.streaming.docs import staged_stream
+
+    se.read_events_stream_ordered(spark, SF_DIR)
+    tracker = spark.sparkContext.statusTracker()
+    jobs = set(tracker.getJobIdsForGroup())
+    calls = []
+
+    def frames():
+        calls.append(1)
+        return []
+
+    raw = staged_stream(
+        spark, f"events_ordered{se.STREAM_PARTS}", SF_DIR, "events", frames
+    )
+    assert not calls
+    assert set(tracker.getJobIdsForGroup()) == jobs
+    assert dict(raw.dtypes)["ts"] == "timestamp"
 
 
 def test_ohlc_stream_matches_batch_bars(spark, stream):

@@ -31,7 +31,7 @@ def main() -> None:
     spark = get_spark("stream-demo")
 
     # 1. a stream that "arrives over time": 4 files, 1 per trigger
-    stream = se.read_events_stream_parts(spark, sf_dir, n_parts=4)
+    stream = se.read_events_stream_parts(spark, sf_dir)
 
     # 2. windowed counts with watermark → memory sink (monitoring view)
     q1 = se.run_to_memory(
@@ -46,7 +46,7 @@ def main() -> None:
 
     # 3. incremental MERGE into versioned snapshots (4 micro-batches
     #    → 4 snapshot versions, each a consistent upsert)
-    stream2 = se.read_events_stream_parts(spark, sf_dir, n_parts=4)
+    stream2 = se.read_events_stream_parts(spark, sf_dir)
     target = f"{out}/user_totals"
     q2 = se.run_foreach_batch(
         stream2.select("user_id", "value"),
