@@ -115,13 +115,12 @@ def _signature_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
     17-column row per document. Higher-order lambdas are deliberately
     kept off the hot path — Spark interprets them per element.
 
-    CACHING (round-10 optimization pass): deliberately NOT persisted
-    here. The round-10 build persisted this frame at the producer, but
-    every single-consumer query (minhash_signatures, minhash_lsh_pairs
-    and the graph queries stacked on it) then paid a cache
+    CACHING: deliberately NOT persisted here. Persisted at the
+    producer, every single-consumer query (minhash_signatures,
+    minhash_lsh_pairs and the graph queries stacked on it) pays a cache
     materialization per cold run for a subtree it instantiates exactly
-    once — measured +19–25% on the cold-per-run bench (interleaved A/B
-    vs the round-9 code, OPTIMIZATION_r10.md). Consumers that
+    once — measured +19–25% on the cold-per-run bench
+    (OPTIMIZATION_r10.md). Consumers that
     genuinely instantiate the signature build more than once in ONE
     plan (minhash_jaccard_estimate) persist the wide frame themselves
     and compose via the ``*_from_wide`` helpers below."""
@@ -164,7 +163,7 @@ def minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _band_keys_from_wide(wide: DataFrame) -> DataFrame:
     """Band keys straight off the wide signature row — zero extra
-    shuffle (the old long-form groupBy(doc_id, band) is gone)."""
+    shuffle (no long-form groupBy(doc_id, band))."""
     rows = []
     for j in range(N_BANDS):
         cols = ", ".join(
@@ -367,10 +366,10 @@ def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from pyspark.sql.window import Window
 
-    # persisted: the a/b legs of the pair self-join each re-ran the
-    # scan + gram explode + doc-frequency window before round 10 —
-    # the cache halves the upstream and the g-grain shuffle (round-10
-    # exchange-shave sweep; clearCache contract as tfidf_cosine_pairs)
+    # persisted: without it the a/b legs of the pair self-join each
+    # re-run the scan + gram explode + doc-frequency window — the cache
+    # halves the upstream and the g-grain shuffle (clearCache contract
+    # as tfidf_cosine_pairs)
     rare = grams.withColumn(
         "df", F.count("*").over(Window.partitionBy("g"))
     ).filter(F.col("df") <= MAX_DOCFREQ).persist()
@@ -433,18 +432,17 @@ def tfidf_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     tf = toks.groupBy("doc_id", "tok").agg(F.count("*").alias("tf"))
     # corpus size off the RAW scan, not the spread() frame: the count
-    # needs no fan-out, and counting the repartitioned frame paid the
-    # round-robin exchange a second time in this plan (round-11 shave:
-    # one data exchange out of the n_docs subtree, 7 -> 6 total)
+    # needs no fan-out, and counting the repartitioned frame would pay
+    # the round-robin exchange a second time in this plan (one data
+    # exchange of the 6)
     n_docs_src = load_table(spark, sf_dir, "documents")
-    # Round-9 exchange shave (VERDICT r8 item 8, 11 → ≤8 data
-    # shuffles): DF/IDF and the per-doc norm ride WINDOWS instead of
-    # the round-6 groupBy+join pairs. tf is (doc, tok)-grain, so
+    # DF/IDF and the per-doc norm ride WINDOWS instead of groupBy+join
+    # pairs (≤8 data shuffles instead of 11). tf is (doc, tok)-grain, so
     # count(*) over (partition by tok) IS the document frequency (no
     # countDistinct expansion, no token-grain aggregate, no join
     # back), and sum(w²) over (partition by doc_id) IS the squared
-    # norm. The windows shuffle the same posting volume the old joins
-    # already moved — what disappears is the aggregate-side exchanges
+    # norm. The windows shuffle the same posting volume the joins
+    # would move — what disappears is the aggregate-side exchanges
     # and the joins. doc_id is the table key, so corpus size is a
     # plain count (1-row broadcast).
     n_docs = n_docs_src.select(F.count("doc_id").alias("n"))
@@ -566,10 +564,10 @@ def ngram_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from pyspark.sql.window import Window  # noqa: PLC0415
 
-    # persisted: the a/b legs of the pair self-join each re-ran the
-    # scan + gram explode + doc-frequency window before round 10 —
-    # the cache halves the upstream and the g-grain shuffle (round-10
-    # exchange-shave sweep; clearCache contract as tfidf_cosine_pairs)
+    # persisted: without it the a/b legs of the pair self-join each
+    # re-run the scan + gram explode + doc-frequency window — the cache
+    # halves the upstream and the g-grain shuffle (clearCache contract
+    # as tfidf_cosine_pairs)
     rare = grams.withColumn(
         "df", F.count("*").over(Window.partitionBy("g"))
     ).filter(F.col("df") <= MAX_DOCFREQ).persist()
@@ -598,10 +596,9 @@ def ngram_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 ESS_K = 12           # char-gram width for exact-substring matching
 ESS_MIN_RUN = 20     # minimum shared-run length (chars) to report
-# Corpus occurrence cap per gram (skew guard). Default 100, lowered
-# from 200 in round 9 (VERDICT r8 item 3) — the production-posture
-# argument: the sf1 cap curve (SCALING_MEASURED.md) shows wall time
-# tracking in-cap pair volume
+# Corpus occurrence cap per gram (skew guard). Default 100 rather
+# than 200 — the production-posture argument: the sf1 cap curve
+# (SCALING_MEASURED.md) shows wall time tracking in-cap pair volume
 # ~linearly (200 → 96.4 s, 100 → 51.3 s, 50 → 6.6 s), and the RECALL
 # cost of 100 is confined to runs built exclusively from grams whose
 # corpus frequency exceeds 100 — by construction boilerplate (licence
@@ -639,9 +636,9 @@ def exact_substring_matches(spark: SparkSession, sf_dir: str) -> DataFrame:
     target (boilerplate / licence blocks), use ``duplicate_spans`` —
     span grain, no pair join, linear in corpus size, no cap to tune.
 
-    TERMINAL COST DECISION (round 10, closes the VERDICT r7→r9 open
-    item): cap 100 is the end state, and the sharded suffix array is
-    deliberately NOT built. Why this is terminal, not deferred debt:
+    TERMINAL COST DECISION: cap 100 is the end state, and the sharded
+    suffix array is deliberately NOT built. Why this is terminal, not
+    deferred debt:
     (a) the superlinear slope (1.43 measured) appears only on the
     boilerplate-adversarial corpus, where the cost driver is the
     frequent-gram tail — and for exactly that workload the shipped
@@ -668,7 +665,7 @@ def exact_substring_matches(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.length("t") >= ESS_K
     )
     # 64-bit gram fingerprint BEFORE any shuffle (the chunk_dedup
-    # trade, promised by the round-7 docstring and now real): the raw
+    # trade): the raw
     # ESS_K-char gram string never leaves the scan stage — every
     # exchange downstream moves (doc_id, pos, fp) at a fixed 24 bytes
     # per row instead of a variable-length string. Collision math: a
@@ -687,7 +684,7 @@ def exact_substring_matches(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("p0", "fp"),
     ).select("doc_id", (F.col("p0") + 1).cast("long").alias("pos"), "fp")
     # Occurrence cap as a partial-aggregating groupBy + join instead of
-    # the round-6 count-window: the window shuffled EVERY gram
+    # a count-window: the window would shuffle EVERY gram
     # occurrence (no map-side combine) to count corpus frequency; the
     # groupBy ships one (fp, partial_count) row per distinct gram per
     # task — on boilerplate-heavy corpora (the measured sf1 adversary:
@@ -945,6 +942,30 @@ def dedup_editdist_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _symmetric_lsh_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Both directions of every LSH candidate pair as (s, d) rows,
+    localCheckpoint-ed so the caller's several readers share one
+    materialization. The pairs are unique with doc_a < doc_b by
+    construction (sorted bucket arrays + dropDuplicates), so exploding
+    both directions from ONE pair row is already a distinct symmetric
+    edge list: no distinct exchange, and no union whose two legs would
+    each instantiate the whole LSH pipeline (Spark does not share
+    unaliased subplans)."""
+    return (
+        minhash_lsh_pairs(spark, sf_dir)
+        .select(
+            F.explode(
+                F.expr(
+                    "array(struct(doc_a AS s, doc_b AS d), "
+                    "struct(doc_b AS s, doc_a AS d))"
+                )
+            ).alias("e")
+        )
+        .select("e.s", "e.d")
+        .localCheckpoint()
+    )
+
+
 N_LABEL_ITERS = 3  # label-propagation rounds (bounded, deterministic)
 
 
@@ -959,27 +980,18 @@ def dedup_cluster_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     same aggregate — no second self-reference needed). Bounded rounds
     keep it deterministic and SQL-mirrorable (the oracle unrolls the
     same 3 rounds). For CONVERGED labels use
-    ``dedup_connected_components`` (fixpoint propagation) or, at
-    scale, ``dedup_cc_star`` (large-star/small-star contraction —
+    ``dedup_connected_components`` (large-star/small-star contraction —
     O(log² n) rounds regardless of component diameter).
 
     EAGER: constructing this DataFrame runs the whole propagation —
-    the final labels are ``localCheckpoint``-ed (eager by design) so
-    the cached edge list can be released before returning. Callers
-    get a materialized result, not a lazy plan; static plan tooling
-    (shuffle audit) sees the truncated lineage and books ~0 exchanges
-    (acknowledged in CHECKPOINT_TRUNCATED)."""
-    pairs = minhash_lsh_pairs(spark, sf_dir)
+    the final labels are ``localCheckpoint``-ed (eager by design), so
+    a caller that reads them twice does not replay the rounds. Static
+    plan tooling (shuffle audit) sees the truncated lineage and books
+    ~0 exchanges (acknowledged in CHECKPOINT_TRUNCATED)."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    edges = (
-        pairs.selectExpr("doc_a AS s", "doc_b AS d")
-        .unionByName(pairs.selectExpr("doc_b AS s", "doc_a AS d"))
-        .unionByName(docs.selectExpr("doc_id AS s", "doc_id AS d"))
-        .persist()
+    edges = _symmetric_lsh_edges(spark, sf_dir).unionByName(
+        docs.selectExpr("doc_id AS s", "doc_id AS d")
     )
-    edges.count()  # materialize the cache BEFORE the plan references it
-    # 3x — otherwise each propagation round recomputes the whole LSH
-    # pipeline while racing to populate the same cache
     labels = docs.select("doc_id", F.col("doc_id").alias("label"))
     for _ in range(N_LABEL_ITERS):
         labels = (
@@ -988,72 +1000,9 @@ def dedup_cluster_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.min("label").alias("label"))
             .select(F.col("d").alias("doc_id"), "label")
         )
-    # Materialize the final labels (cutting their lineage off the
-    # cached edge list), then release the cache — same hygiene as
-    # dedup_connected_components. Without this the persist outlived
-    # the query: harmless once, a slow executor-memory leak in a loop.
-    labels = labels.localCheckpoint()
-    edges.unpersist()
-    return labels.select("doc_id", F.col("label").alias("cluster_id"))
-
-
-MAX_CC_ITERS = 20  # converged-CC safety cap (rounds ≈ graph diameter)
-
-
-def dedup_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CONVERGED near-dup clusters: min-label propagation over the LSH
-    candidate-pair graph iterated to a FIXPOINT (unlike
-    ``dedup_cluster_labels``' bounded 3 rounds) — every doc's cluster_id
-    is exactly the smallest doc_id in its connected component.
-
-    Each round is one join + one min-aggregate; convergence is detected
-    by the (strictly decreasing until fixpoint) sum of labels, so the
-    per-round driver action is a scalar aggregate, not a collect.
-    ``localCheckpoint`` truncates the growing lineage each round — on a
-    real cluster use ``checkpoint`` to HDFS for fault tolerance. Rounds
-    scale with component diameter, which for near-dup graphs is tiny
-    (dup clusters are dense); for diameter-proof round counts use the
-    implemented scale path ``dedup_cc_star`` (alternating large-star/
-    small-star contraction, O(log² n) rounds, same labels and oracle).
-    """
-    pairs = minhash_lsh_pairs(spark, sf_dir)
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    edges = (
-        pairs.selectExpr("doc_a AS s", "doc_b AS d")
-        .unionByName(pairs.selectExpr("doc_b AS s", "doc_a AS d"))
-        .unionByName(docs.selectExpr("doc_id AS s", "doc_id AS d"))
-        .persist()
+    return labels.localCheckpoint().select(
+        "doc_id", F.col("label").alias("cluster_id")
     )
-    edges.count()  # materialize once; every round re-reads this cache
-    labels = docs.select(
-        "doc_id", F.col("doc_id").alias("label")
-    ).localCheckpoint()
-    prev = labels.agg(F.sum("label")).first()[0]
-    converged = False
-    for _ in range(MAX_CC_ITERS):
-        labels = (
-            edges.join(labels, edges.s == labels.doc_id)
-            .groupBy("d")
-            .agg(F.min("label").alias("label"))
-            .selectExpr("d AS doc_id", "label")
-            .localCheckpoint()
-        )
-        cur = labels.agg(F.sum("label")).first()[0]
-        if cur == prev:
-            converged = True
-            break
-        prev = cur
-    edges.unpersist()
-    if not converged:
-        # no silent truncation (same posture as lsh_bucket_stats'
-        # visible cap): partially-propagated labels would ship wrong
-        # is_near_canonical flags downstream — fail loudly instead
-        raise RuntimeError(
-            f"dedup_connected_components: no fixpoint after "
-            f"{MAX_CC_ITERS} rounds — component diameter exceeds the "
-            "cap; raise MAX_CC_ITERS or switch to large-star/small-star"
-        )
-    return labels.select("doc_id", F.col("label").alias("cluster_id"))
 
 
 def _non_star_count(e: DataFrame) -> int:
@@ -1075,10 +1024,10 @@ def _non_star_count(e: DataFrame) -> int:
     sum of child-tags per node counts its parent edges (e is
     distinct), max of each role tag detects double-role nodes. The
     role rows come from ONE explode over each edge row, not a union
-    of two selects (round-11 optimization pass): Spark does not share
-    unaliased subplans, so the union instantiated the whole edge
-    subtree twice — which matters now that the per-round edges are
-    lazily checkpointed and THIS job is what materializes them."""
+    of two selects: Spark does not share unaliased subplans, so a
+    union would instantiate the whole edge subtree twice — and the
+    per-round edges are lazily checkpointed, so THIS job is what
+    materializes them."""
     flat = e.select(
         F.explode(
             F.expr(
@@ -1109,13 +1058,13 @@ def _large_star(sym: DataFrame) -> DataFrame:
     edge list; output directed child→parent edges (s > d).
 
     The neighborhood minimum rides a WINDOW over partitionBy(s)
-    (round-11 optimization pass, guide §2.4): the old groupBy+join
-    pair shuffled the edge frame twice per pass (the aggregate's
-    exchange plus the join's re-shuffle of the edge side) and
-    instantiated the un-checkpointed input once per join leg; the
-    window computes the same per-s min in ONE edge-frame exchange
-    with a single instantiation. Duplicate (s, m) rows remain
-    harmless — _small_star's final distinct collapses them."""
+    (guide §2.4): a groupBy+join pair would shuffle the edge frame
+    twice per pass (the aggregate's exchange plus the join's
+    re-shuffle of the edge side) and instantiate the un-checkpointed
+    input once per join leg; the window computes the same per-s min in
+    ONE edge-frame exchange with a single instantiation. Duplicate
+    (s, m) rows are harmless — _small_star's final distinct collapses
+    them."""
     from pyspark.sql.window import Window  # noqa: PLC0415
 
     return (
@@ -1135,14 +1084,14 @@ def _small_star(edges: DataFrame) -> DataFrame:
     (and itself) to the minimum among them. Input/output directed
     child→parent edges (s > d).
 
-    Same round-11 window rewrite as _large_star, and the two output
-    legs — (d → m) per edge plus (s → m) per node — explode from ONE
-    struct array per edge row instead of a union of two selects, so
-    the upstream large-star pass is computed once, not twice (Spark
-    does not share unaliased subplans). The (s → m) leg appears once
-    per edge rather than once per s; the final distinct collapses
-    exactly those duplicates, as it already did for duplicate large-
-    star output rows."""
+    The per-s minimum rides a window as in _large_star, and the two
+    output legs — (d → m) per edge plus (s → m) per node — explode
+    from ONE struct array per edge row instead of a union of two
+    selects, so the upstream large-star pass is computed once, not
+    twice (Spark does not share unaliased subplans). The (s → m) leg
+    appears once per edge rather than once per s; the final distinct
+    collapses those duplicates together with duplicate large-star
+    output rows."""
     from pyspark.sql.window import Window  # noqa: PLC0415
 
     t = edges.withColumn(
@@ -1174,48 +1123,40 @@ MAX_STAR_ROUNDS = 25  # LS+SS rounds ≈ O(log² n) — generous for any n
 CC_DRIVER_EDGE_MAX = 200_000
 
 
-def star_contraction(
-    edges: DataFrame, assume_canonical: bool = False
-) -> tuple[DataFrame, int]:
+def star_contraction(edges: DataFrame) -> tuple[DataFrame, int]:
     """Connected components by ALTERNATING large-star/small-star
-    contraction — the scale path beside the fixpoint label propagation
-    of ``dedup_connected_components``: label propagation needs
-    ~diameter rounds (a 1000-link chain needs 1000 shuffles), star
-    contraction provably converges in O(log² n) rounds regardless of
-    diameter, because every round HALVES tree heights instead of
-    walking them.
+    contraction: label propagation needs ~diameter rounds (a 1000-link
+    chain needs 1000 shuffles), star contraction provably converges in
+    O(log² n) rounds regardless of diameter, because every round HALVES
+    tree heights instead of walking them.
 
-    ``edges``: undirected edge list as (s, d) long columns (self-loops
-    ignored). Returns (parents, rounds): parents maps every non-root
-    node to its component's minimum node id (roots are absent — they
-    are their own label), and rounds is the number of LS+SS rounds to
-    the star-forest. Per round: two groupBy-min shuffles + two joins
-    on the node key, lineage truncated with localCheckpoint; the
-    driver sees one scalar per round (the non-star node count, whose
-    zero IS the termination condition — checking the star property
-    directly instead of edge-set equality saves the no-change
-    confirming round a signature comparison needs, and doubles as the
-    correctness guard: labels ship only from a verified star
-    forest). Ids must be ``long``: both paths emit ``node long, root
-    long``, so any other ``s``/``d`` type raises ``TypeError`` before
-    either path runs.
+    ``edges``: undirected edge list as (s, d) long columns; duplicates
+    in either direction and self-loops are allowed. Returns (parents,
+    rounds): parents maps every non-root node to its component's
+    minimum node id (roots are absent — they are their own label), and
+    rounds is the number of LS+SS rounds to the star-forest (0 on the
+    driver path). The driver sees one scalar per round (the non-star
+    node count, whose zero IS the termination condition — checking the
+    star property directly instead of edge-set equality saves the
+    no-change confirming round a signature comparison needs, and
+    doubles as the correctness guard: labels ship only from a verified
+    star forest). Ids must be ``long``: both paths emit ``node long,
+    root long``, so any other ``s``/``d`` type raises ``TypeError``
+    before either path runs.
 
-    ``assume_canonical=True`` (round-11 optimization pass): the caller
-    vouches the input is already an undirected-unique, self-loop-free
-    pair list — exactly what minhash_lsh_pairs emits (doc_a < doc_b,
-    sorted bucket arrays + dropDuplicates) — so the input-normalization
-    ``distinct`` (a full exchange stacked on the caller's whole
-    upstream plan) is skipped; the orientation select and the
-    checkpoint stay. The generic default keeps the distinct: arbitrary
-    edge lists (tests feed duplicates and self-loops) still normalize.
+    The input is oriented (s > d) and self-loops dropped, but NOT
+    deduplicated: duplicate edges are harmless to the union-find and to
+    the large-star window, small-star ends in a distinct, and the
+    non-star count only ever reads a round's (distinct) output — so an
+    input distinct would be a full exchange stacked on the caller's
+    whole upstream plan for nothing.
 
-    Per round ONE job (round-11): the round's edge set is lazily
-    localCheckpoint-ed and materialized inside the non-star-count job
-    (the pagerank recipe), and every round subtree instantiates its
-    input exactly once — large-star/small-star ride windows instead of
-    groupBy+join pairs, and both union-shaped expansions (small-star's
-    two legs, the count's two role rows) explode from one struct array
-    per row."""
+    Per round ONE job: the round's edge set is lazily localCheckpoint-ed
+    and materialized inside the non-star-count job, and every round
+    subtree instantiates its input exactly once — large-star/small-star
+    ride windows, and both union-shaped expansions (small-star's two
+    legs, the count's two role rows) explode from one struct array per
+    row."""
     for col in ("s", "d"):
         dtype = edges.schema[col].dataType
         if not isinstance(dtype, T.LongType):
@@ -1223,25 +1164,25 @@ def star_contraction(
                 f"star_contraction: edge column {col!r} must be long, "
                 f"got {dtype.simpleString()}"
             )
-    e = edges.select(
-        F.greatest("s", "d").alias("s"), F.least("s", "d").alias("d")
-    ).filter(F.col("s") != F.col("d"))
-    if not assume_canonical:
-        e = e.distinct()
     # eager: e seeds round 1's symmetrize (two instantiations), so the
     # caller's upstream plan must be materialized exactly once here
-    e = e.localCheckpoint()
-    # Driver fast path (round-11 optimization pass — the BPE trainer's
-    # round-10 probe recipe, guide §5): ONE bounded fetch off the
-    # already-checkpointed edge set either returns the whole graph
-    # (≤ CC_DRIVER_EDGE_MAX edges → path-compressed union-find on the
-    # driver, microseconds, zero further jobs) or proves it big and
-    # the distributed loop below takes over. Labels are identical by
-    # construction — both paths map every non-root node to its
-    # component minimum (pinned by the forced-both-paths equivalence
-    # test) — and driver memory is capped at MAX+1 two-long rows. At
-    # 100 TB the candidate-pair graph blows past the cap and the
-    # O(log² n) contraction runs exactly as before; what the cap
+    e = (
+        edges.select(
+            F.greatest("s", "d").alias("s"), F.least("s", "d").alias("d")
+        )
+        .filter(F.col("s") != F.col("d"))
+        .localCheckpoint()
+    )
+    # Driver fast path (the BPE trainer's bounded-probe recipe, guide
+    # §5): ONE bounded fetch off the already-checkpointed edge set
+    # either returns the whole graph (≤ CC_DRIVER_EDGE_MAX edges →
+    # path-compressed union-find on the driver, microseconds, zero
+    # further jobs) or proves it big and the distributed loop below
+    # takes over. Labels are identical by construction — both paths
+    # map every non-root node to its component minimum (pinned by the
+    # forced-both-paths equivalence test) — and driver memory is capped
+    # at MAX+1 two-long rows. At 100 TB the candidate-pair graph blows
+    # past the cap and the O(log² n) contraction runs; what the cap
     # buys is not paying ~5 Spark jobs to label a residual graph an
     # in-process union-find solves outright.
     probe = e.limit(CC_DRIVER_EDGE_MAX + 1).toPandas()
@@ -1299,24 +1240,19 @@ def star_contraction(
     )
 
 
-def dedup_cc_star(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Near-dup clusters via large-star/small-star contraction over the
-    LSH candidate-pair graph — identical labels to
-    ``dedup_connected_components`` (same DuckDB oracle), different
-    round complexity: O(log² n) rounds vs O(diameter). This is the
-    100 TB path: a pathological chain-shaped component costs label
-    propagation one shuffle per link, star contraction a handful
-    total (tests pin a 200-link chain converging in <10 rounds)."""
+def dedup_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """CONVERGED near-dup clusters over the LSH candidate-pair graph
+    (unlike ``dedup_cluster_labels``' bounded 3 rounds): every doc's
+    cluster_id is exactly the smallest doc_id in its connected
+    component. Labels come from ``star_contraction``, so rounds are
+    O(log² n) whatever the component diameter: a chain-shaped
+    component would cost label propagation one shuffle per link
+    (tests pin a 200-link chain converging in <10 rounds). Registered
+    under ``dedup_connected_components`` and ``dedup_cc_star``."""
     pairs = minhash_lsh_pairs(spark, sf_dir).select(
         F.col("doc_a").alias("s"), F.col("doc_b").alias("d")
     )
-    # assume_canonical: LSH pairs are undirected-unique with
-    # doc_a < doc_b by construction (sorted bucket arrays +
-    # dropDuplicates) and never self-paired — the input-normalization
-    # distinct was a full exchange stacked on the whole LSH pipeline
-    # for a set that was never duplicated (round-11 optimization pass;
-    # same argument as pagerank's round-10 symmetrize shave)
-    parents, _rounds = star_contraction(pairs, assume_canonical=True)
+    parents, _rounds = star_contraction(pairs)
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
     return docs.join(
         parents, docs.doc_id == parents.node, "left"
@@ -1385,8 +1321,9 @@ def dedup_decision_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     builds filter on these two booleans instead of re-running any dedup
     — the contract artifact the whole dedup family feeds.
 
-    Cost: dedup_exact + connected components + two doc_id-keyed joins
-    (same partitioning end to end)."""
+    Cost: dedup_exact + ``dedup_connected_components`` (star
+    contraction; on the driver below CC_DRIVER_EDGE_MAX edges) + two
+    doc_id-keyed joins (same partitioning end to end)."""
     d = load_table(spark, sf_dir, "documents").select("doc_id")
     exact = dedup_exact(spark, sf_dir)
     fp = load_table(spark, sf_dir, "documents").select(
@@ -1808,29 +1745,9 @@ def pagerank_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     pure-Python power-iteration equivalence test (tests/test_llm.py)
     stays as the third implementation."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    # Symmetrize WITHOUT a union of two pair-subtree instantiations
-    # and WITHOUT a distinct exchange (round-10 optimization pass):
-    # LSH pairs are unique with doc_a < doc_b by construction (sorted
-    # bucket arrays + dropDuplicates), so exploding both directions
-    # from ONE pair row yields an already-distinct symmetric edge
-    # list — the old union+distinct re-ran the whole LSH pipeline per
-    # leg (unaliased subplans are not shared) and paid a full edge
-    # shuffle to dedup a set that was never duplicated. localCheckpoint
-    # materializes the edge list once for its two consumers (degree
-    # aggregate + weight join), replacing the round-9 pairs.persist().
-    edges = (
-        minhash_lsh_pairs(spark, sf_dir)
-        .select(
-            F.explode(
-                F.expr(
-                    "array(struct(doc_a AS s, doc_b AS d), "
-                    "struct(doc_b AS s, doc_a AS d))"
-                )
-            ).alias("e")
-        )
-        .select("e.s", "e.d")
-        .localCheckpoint()
-    )
+    # checkpointed once for its two consumers (degree aggregate +
+    # weight join)
+    edges = _symmetric_lsh_edges(spark, sf_dir)
     deg = edges.groupBy("s").agg(F.count("*").alias("deg"))
     edges_w = (
         edges.join(deg, "s")
@@ -1844,9 +1761,8 @@ def pagerank_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
         return spark.createDataFrame([], "doc_id long, rank double")
     nodes = docs.select(F.col("doc_id").alias("node")).localCheckpoint()
     # the dangling (edge-less) node set is LOOP-INVARIANT: compute it
-    # once instead of paying a distinct + anti-join per round (round-10
-    # optimization pass — the old loop re-derived `linked` from the
-    # checkpointed edges and anti-joined full ranks every iteration)
+    # once instead of paying a distinct + anti-join of the full ranks
+    # every round
     dangling_nodes = nodes.join(
         edges_w.select(F.col("s").alias("node")).distinct(),
         "node",
@@ -1921,31 +1837,13 @@ def kcore_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_llm.py is the third independent implementation. Fails
     loudly on cap exhaustion — a silently partial peel would overstate
     core sizes."""
-    # single-instantiation symmetrize, no distinct: LSH pairs are
-    # unique with doc_a < doc_b by construction, so exploding both
-    # directions from one pair row is already a distinct symmetric
-    # edge list — the old union re-ran the whole LSH pipeline per leg
-    # and the distinct paid a full edge shuffle for nothing (round-10
-    # optimization pass; same rewrite as pagerank_near_dup)
-    edges = (
-        minhash_lsh_pairs(spark, sf_dir)
-        .select(
-            F.explode(
-                F.expr(
-                    "array(struct(doc_a AS s, doc_b AS d), "
-                    "struct(doc_b AS s, doc_a AS d))"
-                )
-            ).alias("e")
-        )
-        .select("e.s", "e.d")
-        .localCheckpoint()
-    )
-    # Driver fast path (round-11, same bounded-probe recipe as
+    edges = _symmetric_lsh_edges(spark, sf_dir)
+    # Driver fast path (same bounded-probe recipe as
     # star_contraction / the BPE trainer): one bounded fetch off the
     # checkpointed symmetric edge list either returns the whole graph
     # (≤ CC_DRIVER_EDGE_MAX rows → in-process simultaneous peel,
     # zero further jobs) or proves it big and the distributed loop
-    # below runs unchanged. The k-core is the UNIQUE maximal subgraph
+    # below runs. The k-core is the UNIQUE maximal subgraph
     # with min degree ≥ k — any peel schedule reaches it — and the
     # simultaneous-removal rounds below mirror the distributed
     # keep/semi-join rounds exactly; the forced-both-paths test pins
@@ -2229,7 +2127,7 @@ QUERIES = {
     "snm_adjacent_pairs": snm_adjacent_pairs,
     "source_overlap_matrix": source_overlap_matrix,
     "dedup_connected_components": dedup_connected_components,
-    "dedup_cc_star": dedup_cc_star,
+    "dedup_cc_star": dedup_connected_components,
     "dedup_decision_matrix": dedup_decision_matrix,
     "cluster_examples": cluster_examples,
     "chunk_copy_pairs": chunk_copy_pairs,
@@ -2554,7 +2452,7 @@ _EDIT_SIM = (
 )
 
 ORACLES["dedup_graph_triangles"] = f"""
-    WITH lsh AS ({ORACLES["minhash_lsh_pairs"]}),
+    WITH lsh AS MATERIALIZED ({ORACLES["minhash_lsh_pairs"]}),
     pairs AS (SELECT doc_a, doc_b FROM lsh),
     tri AS (
         SELECT e1.doc_a AS a, e1.doc_b AS b, e2.doc_b AS c
@@ -2791,7 +2689,7 @@ ORACLES["kcore_near_dup"] = f"""
 """
 
 ORACLES["dedup_cluster_labels"] = f"""
-    WITH pairs AS ({ORACLES["minhash_lsh_pairs"]}),
+    WITH pairs AS MATERIALIZED ({ORACLES["minhash_lsh_pairs"]}),
     edges AS (
         SELECT doc_a AS s, doc_b AS d FROM pairs
         UNION ALL SELECT doc_b, doc_a FROM pairs
@@ -2808,7 +2706,7 @@ ORACLES["dedup_cluster_labels"] = f"""
 """
 
 ORACLES["dedup_connected_components"] = f"""
-    WITH RECURSIVE pairs AS ({ORACLES["minhash_lsh_pairs"]}),
+    WITH RECURSIVE pairs AS MATERIALIZED ({ORACLES["minhash_lsh_pairs"]}),
     edges AS (
         SELECT doc_a AS s, doc_b AS d FROM pairs
         UNION ALL SELECT doc_b, doc_a FROM pairs
@@ -2822,8 +2720,7 @@ ORACLES["dedup_connected_components"] = f"""
     FROM reach GROUP BY node
 """
 
-# star contraction computes exactly the connected-components labels —
-# same oracle as the fixpoint label propagation
+# the second registry name of the same star-contraction path
 ORACLES["dedup_cc_star"] = ORACLES["dedup_connected_components"]
 
 # NOTE on the fingerprint gap (applies to this oracle AND the
@@ -3050,7 +2947,7 @@ ORACLES["lsh_eval_vs_exact"] = f"""
         SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
         FROM fp a JOIN fp b ON a.fp = b.fp AND a.doc_id < b.doc_id
     ),
-    lsh AS ({ORACLES["minhash_lsh_pairs"]}),
+    lsh AS MATERIALIZED ({ORACLES["minhash_lsh_pairs"]}),
     stats AS (
         SELECT (SELECT count(*) FROM exact_pairs)::BIGINT AS n_exact_pairs,
                (SELECT count(*) FROM lsh)::BIGINT AS n_lsh_pairs,

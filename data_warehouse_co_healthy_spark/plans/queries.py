@@ -73,10 +73,12 @@ for _m in _MODULES:
 # cast_bool — each a one-expression variant of a family still
 # represented in-window) rotated out for never-driver-graded heavies:
 # image_decode_stats (NEW: real BMP/PPM decode), scd2_user_state,
-# dedup_connected_components, bm25_search, hybrid_search_rrf. All five
-# incoming slots carry full DuckDB oracles, so the window stays
-# hash-graded end to end; the rotated-out five remain oracle-tested
-# locally (tests/test_oracle.py runs the whole registry).
+# dedup_connected_components (rotated out again in round 5; it is now
+# the same star-contraction path as dedup_cc_star), bm25_search,
+# hybrid_search_rrf. All five incoming slots carry full DuckDB oracles,
+# so the window stays hash-graded end to end; the rotated-out five
+# remain oracle-tested locally (tests/test_oracle.py runs the whole
+# registry).
 #
 # Round-5 rotation, same policy: semi_join/anti_join (join family keeps
 # four representatives), intersect_keys (setops keeps four), time_label
@@ -98,8 +100,9 @@ for _m in _MODULES:
 # oracle).
 #
 # Round-5 third rotation: dedup_connected_components (dedup_cc_star is
-# the in-window scale path for the SAME labels and oracle — keeping
-# both graded the same operator twice), ngram_jaccard_pairs (near-dup
+# the same star-contraction path under a second registry name, with the
+# same oracle — keeping both graded the same operator twice),
+# ngram_jaccard_pairs (near-dup
 # pair family keeps minhash_lsh/simhash/tfidf_cosine) and
 # count_distinct_agg (aggregate family keeps q1/supplier_scorecard/
 # rollup_sales/pivot_status) rotate out for three never-graded

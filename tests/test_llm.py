@@ -103,11 +103,10 @@ def test_cluster_labels_are_canonical_min(spark):
 
 
 def test_cluster_labels_release_edge_cache(spark):
-    """The edge-list persist must not outlive the query (VERDICT r7
-    item 5): every persistent RDD the query ADDS must be a
-    localCheckpoint block (reclaimed when the result is GC'd), never a
-    plain .persist() cache — those need the explicit unpersist the CC
-    variant always had."""
+    """No edge-list cache may outlive the query: every persistent RDD
+    the query ADDS must be a localCheckpoint block (reclaimed when the
+    result is GC'd), never a plain .persist() cache, which would need
+    an explicit unpersist."""
 
     def persistent(sc):
         out = {}
@@ -369,6 +368,23 @@ def test_connected_components_refines_bounded_propagation(spark):
     assert (grp.index == grp.values).all()
 
 
+def test_connected_components_job_cap(spark):
+    """Converged labels come from star contraction: an eager checkpoint
+    of the oriented pairs, one bounded driver fetch and the final join
+    — 8 Spark jobs measured at SF_DIR (9 as a session's first query);
+    a fixpoint label-propagation loop needs 56 there."""
+    sc = spark.sparkContext
+    group = "test_connected_components_job_cap"
+    sc.setJobGroup(group, group)
+    try:
+        dedup.dedup_connected_components(spark, SF_DIR).toPandas()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert len(jobs) <= 10, len(jobs)
+
+
 def test_exact_substring_matches_exact_offsets(spark, tmp_path):
     """A planted verbatim passage must be reported as ONE maximal run
     with exact 1-based offsets and length; sub-threshold overlaps and
@@ -408,46 +424,27 @@ def test_exact_substring_matches_exact_offsets(spark, tmp_path):
         assert sa == sb and len(sa) == r.run_len
 
 
-def test_star_contraction_equals_fixpoint_labels(spark):
-    """The large-star/small-star scale path must produce EXACTLY the
-    labels of the fixpoint label propagation on the fixture graph."""
-    a = (
-        dedup.dedup_connected_components(spark, SF_DIR)
-        .toPandas()
-        .sort_values("doc_id")
-        .reset_index(drop=True)
-    )
-    b = (
-        dedup.dedup_cc_star(spark, SF_DIR)
-        .toPandas()
-        .sort_values("doc_id")
-        .reset_index(drop=True)
-    )
-    assert (a.doc_id == b.doc_id).all()
-    assert (a.cluster_id == b.cluster_id).all()
-
-
 def _force_distributed_star(monkeypatch):
-    """Route star_contraction around the round-11 driver fast path so
-    the distributed LS/SS machinery itself is what the test runs."""
+    """Route star_contraction around the driver fast path so the
+    distributed LS/SS machinery itself is what the test runs."""
     monkeypatch.setattr(dedup, "CC_DRIVER_EDGE_MAX", -1)
 
 
 def test_star_contraction_driver_and_distributed_paths_agree(
     spark, monkeypatch
 ):
-    """Round-11 driver fast path (bounded union-find off one fetch)
-    must produce exactly the distributed contraction's labels on the
+    """The driver fast path (bounded union-find off one fetch) must
+    produce exactly the distributed contraction's labels on the
     fixture graph — the BPE both-paths equivalence recipe."""
     fast = (
-        dedup.dedup_cc_star(spark, SF_DIR)
+        dedup.dedup_connected_components(spark, SF_DIR)
         .toPandas()
         .sort_values("doc_id")
         .reset_index(drop=True)
     )
     _force_distributed_star(monkeypatch)
     dist = (
-        dedup.dedup_cc_star(spark, SF_DIR)
+        dedup.dedup_connected_components(spark, SF_DIR)
         .toPandas()
         .sort_values("doc_id")
         .reset_index(drop=True)
@@ -1330,7 +1327,7 @@ def test_fellegi_sunter_score_recompute_and_em_consistency(spark):
 def test_kcore_matches_python_peel(spark, monkeypatch):
     """k-core survivors + degrees vs an independent pure-Python peel
     over the same (oracle-checked) LSH pair list — run against BOTH
-    the round-11 driver fast path (default at fixture scale) and the
+    the driver fast path (default at fixture scale) and the
     forced distributed peel loop, which must agree with the reference
     and therefore each other."""
     from data_warehouse_co_healthy_spark.llm import dedup

@@ -238,3 +238,48 @@ def test_every_definition_is_reachable():
 def test_reachability_allowlist_has_no_stale_entries():
     stale = set(UNREACHED_OK) - set(_unreached())
     assert not stale, f"allowlisted but reached or gone: {sorted(stale)}"
+
+
+# ------------------------------------------------------------ tool checkouts
+
+
+def _fixed_checkout_paths() -> list[tuple[str, int, str]]:
+    """Absolute-path string constants (docstrings aside) by which a
+    tool names a fixed checkout: a ``sys.path`` entry, or a path whose
+    last component is a top-level entry of the checkout (a tracked
+    file, or a .gitignore'd output such as ``testdata_sf1``)."""
+    top = {p.name for p in REPO.iterdir()} | {
+        line.strip().strip("/")
+        for line in (REPO / ".gitignore").read_text().splitlines()
+        if line.strip() and not line.startswith("#")
+    }
+    found = []
+    for path in sorted((REPO / "tools").rglob("*.py")):
+        tree = _parse_code(path)
+        on_sys_path = {
+            id(arg)
+            for node in ast.walk(tree)
+            if isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and ast.unparse(node.func.value) == "sys.path"
+            for arg in node.args
+        }
+        for node in ast.walk(tree):
+            if (isinstance(node, ast.Constant)
+                    and isinstance(node.value, str)
+                    and node.value.startswith("/")
+                    and (id(node) in on_sys_path
+                         or node.value.rstrip("/").rsplit("/", 1)[-1]
+                         in top)):
+                found.append(
+                    (str(path.relative_to(REPO)), node.lineno, node.value)
+                )
+    return found
+
+
+def test_tools_find_their_checkout_from_their_own_file():
+    """Run from a second checkout (a parent copy, a benchmark
+    directory), a tool must import and write THAT checkout: the
+    package path and the checkout outputs derive from ``__file__``."""
+    found = _fixed_checkout_paths()
+    assert not found, f"fixed checkout paths in tools/: {found}"

@@ -1,5 +1,5 @@
 """Generate an sf1 fixture (~6M lineitem rows, 10x sf0.1) into
-/root/repo/testdata_sf1/ for scale-slope measurement (VERDICT r6
+testdata_sf1/ at the checkout root for scale-slope measurement (VERDICT r6
 item 4).
 
 /root/testdata is read-only and the driver's generator is not
@@ -26,7 +26,10 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-OUT = "/root/repo/testdata_sf1"
+OUT = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    "testdata_sf1",
+)
 SEED = 42
 
 N_CUST = 150_000

@@ -5,10 +5,13 @@ Usage: python tools/profile_query.py <query_name> [sf_dir] [--vanilla]
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(
+    0, os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+)
 
 
 def main() -> None:

@@ -11,7 +11,9 @@ from __future__ import annotations
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(
+    0, os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+)
 
 from data_warehouse_co_healthy_spark.session import get_spark  # noqa: E402
 from data_warehouse_co_healthy_spark.pipelines.runner import (  # noqa: E402

@@ -23,7 +23,9 @@ import os
 import shutil
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(
+    0, os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+)
 
 from pyspark.sql import functions as F  # noqa: E402
 from pyspark.sql.window import Window  # noqa: E402

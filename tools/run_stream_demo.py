@@ -9,10 +9,13 @@ Usage: python tools/run_stream_demo.py [sf_dir] [output_dir]
 
 from __future__ import annotations
 
+import os
 import shutil
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(
+    0, os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+)
 
 from pyspark.sql import functions as F  # noqa: E402
 

@@ -17,15 +17,17 @@ subquery plans. The old regex-over-toString numbers were upper bounds;
 these are the true static counts. A `raw` column keeps the per-
 appearance count so the dedup effect stays visible.
 
-Run: python tools/shuffle_audit.py  [writes /root/repo/SHUFFLES.md]
+Run: python tools/shuffle_audit.py  [writes SHUFFLES.md in this checkout]
 """
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from data_warehouse_co_healthy_spark.session import get_spark  # noqa: E402
 
@@ -54,9 +56,8 @@ JUSTIFIED = {
     ),
     "dedup_cluster_labels": (
         "N_LABEL_ITERS bounded min-label propagation rounds over a "
-        "persisted edge list — ~3 exchanges per round by design "
-        "(the converged/at-scale variants are dedup_connected_"
-        "components / dedup_cc_star)"
+        "checkpointed edge list — ~3 exchanges per round by design "
+        "(converged labels: dedup_connected_components)"
     ),
     "dedup_cc_star": (
         "alternating large-star/small-star contraction — exchanges "
@@ -69,8 +70,9 @@ JUSTIFIED = {
     "kcore_near_dup": ("iterative degree-peel: 1-2 exchanges per "
                        "round, bounded rounds"),
     "dedup_connected_components": (
-        "converged min-label propagation: bounded rounds over a "
-        "persisted edge list"
+        "alternating large-star/small-star contraction (also "
+        "registered as dedup_cc_star) — exchanges scale with "
+        "O(log^2 n) ROUNDS, not with data width"
     ),
 }
 
@@ -83,14 +85,15 @@ JUSTIFIED = {
 #: timings, not in this table.
 CHECKPOINT_TRUNCATED = {
     "dedup_cluster_labels": (
-        "~11 data shuffles at call time (r7 audit, before the r8 "
-        "leak fix moved the result behind an eager localCheckpoint): "
-        "N_LABEL_ITERS bounded propagation rounds over the persisted "
-        "edge list, ~3 exchanges/round"
+        "~11 data shuffles at call time (last audited before the "
+        "result moved behind an eager localCheckpoint): N_LABEL_ITERS "
+        "bounded propagation rounds over the checkpointed edge list, "
+        "~3 exchanges/round"
     ),
     "dedup_connected_components": (
-        "converged min-label propagation: 2-3 exchanges per round at "
-        "call time, bounded rounds, per-round localCheckpoint"
+        "large-star/small-star contraction (also registered as "
+        "dedup_cc_star): 2-4 exchanges per round at call time, "
+        "O(log^2 n) rounds, per-round localCheckpoint"
     ),
     "dedup_cc_star": (
         "large-star/small-star contraction: 2-4 exchanges per round "
@@ -236,7 +239,7 @@ def main() -> None:
         f"queries above excluded from the total by construction).**",
         "",
     ]
-    with open("/root/repo/SHUFFLES.md", "w") as f:
+    with open(os.path.join(REPO, "SHUFFLES.md"), "w") as f:
         f.write("\n".join(lines))
     print(f"wrote SHUFFLES.md ({n} queries, {total} data shuffles)")
 
