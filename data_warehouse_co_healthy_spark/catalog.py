@@ -10,8 +10,10 @@ from __future__ import annotations
 
 import os
 import weakref
+from collections.abc import Iterable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -131,3 +133,68 @@ def spread(df: DataFrame) -> DataFrame:
         return df.repartition(target)
     return df
 
+
+#: Spark types whose Python values Arrow converts exactly as the
+#: row-by-row ``createDataFrame`` path does. ``TimestampType`` is left
+#: out on purpose: Arrow reads a naive ``datetime`` as UTC, the row path
+#: as the driver's local time.
+_ARROW_EXACT = (
+    T.BooleanType, T.ByteType, T.ShortType, T.IntegerType, T.LongType,
+    T.FloatType, T.DoubleType, T.StringType, T.BinaryType, T.DateType,
+    T.DecimalType,
+)
+
+
+def _check_arrow_exact(name: str, dt: T.DataType) -> None:
+    if isinstance(dt, T.ArrayType):
+        _check_arrow_exact(name, dt.elementType)
+    elif not isinstance(dt, _ARROW_EXACT):
+        raise TypeError(
+            f"local_frame: column {name!r} has type {dt.simpleString()}, "
+            "which it does not convert"
+        )
+
+
+def local_frame(
+    spark: SparkSession,
+    rows: Iterable[Sequence],
+    schema: str | T.StructType,
+) -> DataFrame:
+    """A DataFrame from driver-side ``rows`` (tuples in ``schema``'s
+    column order; ``schema`` a DDL string or a ``StructType``).
+
+    The rows travel as one Arrow table and plan as a
+    ``LocalTableScan``. ``createDataFrame(list, ddl)`` would instead
+    pickle them into a Python RDD whose scan is a 4-task stage waiting
+    on Python-worker start-up, for a handful of rows. NaN stays NaN and
+    None stays null. A column type outside ``_ARROW_EXACT`` (or arrays
+    of those) raises ``TypeError``; a row of the wrong width raises
+    ``ValueError``.
+    """
+    import pyarrow as pa  # noqa: PLC0415
+    from pyspark.sql.pandas.types import to_arrow_schema  # noqa: PLC0415
+
+    struct = (
+        schema if isinstance(schema, T.StructType)
+        else T.StructType.fromDDL(schema)
+    )
+    for f in struct.fields:
+        _check_arrow_exact(f.name, f.dataType)
+    rows = list(rows)
+    width = len(struct.fields)
+    for r in rows:
+        if len(r) != width:
+            raise ValueError(
+                f"local_frame: row {r!r} has {len(r)} fields, "
+                f"schema has {width}"
+            )
+    arrow_schema = to_arrow_schema(struct)
+    columns = list(zip(*rows)) if rows else [()] * width
+    table = pa.Table.from_arrays(
+        [
+            pa.array(col, type=f.type)
+            for col, f in zip(columns, arrow_schema)
+        ],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, struct)

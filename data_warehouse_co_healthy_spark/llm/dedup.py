@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..catalog import load_table, spread
+from ..catalog import load_table, local_frame, spread
 from ..functions.numeric import nz, snap_round, snap_round_sql
 
 N_PERM = 16          # minhash permutations
@@ -1207,12 +1207,11 @@ def star_contraction(edges: DataFrame) -> tuple[DataFrame, int]:
             (n, find(n)) for n in list(parent) if find(n) != n
         ]
         spark = edges.sparkSession
-        out = spark.createDataFrame(rows, "node long, root long")
-        # ≤ CC_DRIVER_EDGE_MAX two-long rows by construction: hint the
-        # broadcast so the caller's docs-side join plans exchange-free
-        # (a local relation's default size estimate blocks the
-        # automatic conversion)
-        return F.broadcast(out), 0
+        # a local relation's size estimate is its real size (24 bytes
+        # a row; the ≤ 2·CC_DRIVER_EDGE_MAX nodes stay under the 10 MB
+        # broadcast threshold), so the caller's docs-side join
+        # broadcasts it without a hint
+        return local_frame(spark, rows, "node long, root long"), 0
     rounds = 0
     converged = False
     # do-while, not while: a star forest is a FIXPOINT of LS∘SS (the
@@ -1465,7 +1464,8 @@ def lsh_eval_vs_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the ratio rounds IN-ENGINE (F.round, HALF_UP) like every other
     # query — Python's round() is banker's rounding and would diverge
     # from the SQL oracle on an exact .5 boundary
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(n_exact, n_lsh, n_both)],
         "n_exact_pairs long, n_lsh_pairs long, n_overlap long",
     ).select(
@@ -1758,7 +1758,7 @@ def pagerank_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     if n == 0:
         # no corpus, no ranks — mirror the oracle's empty result
         # instead of dividing by zero at plan-build time
-        return spark.createDataFrame([], "doc_id long, rank double")
+        return local_frame(spark, [], "doc_id long, rank double")
     nodes = docs.select(F.col("doc_id").alias("node")).localCheckpoint()
     # the dangling (edge-less) node set is LOOP-INVARIANT: compute it
     # once instead of paying a distinct + anti-join of the full ranks
@@ -1864,9 +1864,7 @@ def kcore_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
                 if n not in low
             }
         rows = [(n, len(nb)) for n, nb in adj.items()]
-        return spark.createDataFrame(
-            rows, "doc_id long, core_degree long"
-        )
+        return local_frame(spark, rows, "doc_id long, core_degree long")
     prev = edges.count()
     converged = prev == 0
     for _ in range(MAX_KCORE_ITERS):

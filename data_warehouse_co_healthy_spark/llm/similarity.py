@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..catalog import load_table, spread
+from ..catalog import load_table, local_frame, spread
 from ..functions.numeric import nz, snap_round_sql
 
 N_QUERIES = 5   # query set = vec_id < 5
@@ -109,7 +109,8 @@ def cosine_topk_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     if not qrows:
         # empty corpus slice: no queries, no result — not a crash
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [], "query_id bigint, cand_id bigint, rk bigint, cos double"
         )
     q_ids = np.array([r.vec_id for r in qrows])
@@ -367,7 +368,8 @@ def ann_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     cents = trained_centroids(spark, sf_dir)
     if not cents:
         # empty corpus slice: nothing to index — not a crash
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [], "query_id bigint, cand_id bigint, rk bigint, cos double"
         )
     assigned = _assign(e, cents).select(
@@ -457,7 +459,8 @@ def ivf_index_write(spark: SparkSession, sf_dir: str, path: str) -> None:
     ).write.mode("overwrite").partitionBy("cell").parquet(
         f"{path}/vectors"
     )
-    spark.createDataFrame(
+    local_frame(
+        spark,
         [(i, [float(x) for x in c]) for i, c in enumerate(cents)],
         "cell int, centroid array<double>",
     ).write.mode("overwrite").parquet(f"{path}/quantizer")
@@ -485,7 +488,8 @@ def ivf_index_probe(
     if not cent_rows:
         # empty corpus slice: an index over nothing answers nothing —
         # same guard as ann_ivf_kmeans, not a crash
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [], "query_id bigint, cand_id bigint, rk bigint, cos double"
         )
     C = np.zeros((len(cent_rows), len(cent_rows[0].centroid)))
@@ -873,7 +877,8 @@ def _pq_encoded(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     trained = _pq_train(spark, sf_dir)
     if not trained:
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [], "vec_id long, codes array<int>, recon_mse double"
         )
     books = np.asarray(trained)  # M x K x sub
@@ -972,7 +977,8 @@ def _pq_adc_ranked(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     if not trained or not qrows:
         # empty corpus slice: no codes, no queries — not a crash
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [],
             "query_id long, cand_id long, adc_dist double, rk long",
         )

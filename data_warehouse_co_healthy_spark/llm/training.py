@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..catalog import load_table, spread
+from ..catalog import load_table, local_frame, spread
 from ..functions.numeric import nz, snap_round
 
 N_SHARDS = 16  # output shards for training-data files
@@ -179,7 +179,8 @@ def kmeans_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     centroids = trained_centroids(spark, sf_dir)
     if not centroids:
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [], "vec_id bigint, cid int, dist double"
         )
     return _assign(emb, centroids).select(
@@ -285,7 +286,8 @@ def semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     cents = trained_centroids(spark, sf_dir)
     if not cents:
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [],
             "vec_id bigint, cid int, kept boolean, max_cos_kept double",
         )
@@ -375,7 +377,8 @@ def quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     w_final = train_linear_probe(spark, sf_dir)
     if w_final is None:
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [],
             "vec_id bigint, label bigint, score double, pred bigint",
         )
@@ -636,7 +639,8 @@ def _bpe_merge_rules_python(
 def _merges_df(
     spark: SparkSession, merges: list[tuple[int, str, str, int]]
 ) -> DataFrame:
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         merges, "rank long, left string, right string, pair_count long"
     ).select(
         "rank",
@@ -915,7 +919,8 @@ def pca_whiten_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = spread(load_table(spark, sf_dir, "embeddings"))
     n, s, g = pca_moments(emb)
     if not n:
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [], "vec_id bigint, label int, proj array<double>"
         )
     mean = s / n
@@ -986,7 +991,8 @@ def kcenter_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
     seeds = emb.orderBy("vec_id").limit(1).collect()
     if not seeds:
         # empty corpus slice: nothing to select — not a crash
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [], "pick int, vec_id bigint, radius double"
         )
     seed = seeds[0]
@@ -1041,7 +1047,8 @@ def kcenter_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
             break
         far = cand[0]
         picks.append((int(far.vec_id), float(far.mind)))
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(i, vid, r) for i, (vid, r) in enumerate(picks)],
         "pick int, vec_id long, radius double",
     ).select(
@@ -1079,7 +1086,8 @@ def mahalanobis_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = spread(load_table(spark, sf_dir, "embeddings"))
     n, s, g = pca_moments(emb)
     if not n:
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [], "vec_id bigint, label int, maha_sq double"
         )
     mean = s / n

@@ -20,7 +20,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..catalog import load_table
+from ..catalog import load_table, local_frame
 from ..functions.numeric import nz, snap_round
 
 
@@ -350,7 +350,8 @@ def fk_containment_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
                 round(1.0 - n_missing / n_child, 6) if n_child else None,
             )
         )
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "child string, parent string, n_child_keys long, "
         "n_missing long, containment double",

@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..catalog import load_table
+from ..catalog import load_table, local_frame
 
 
 def surrogate_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -242,7 +242,8 @@ def revenue_pareto(spark: SparkSession, sf_dir: str) -> DataFrame:
     total_raw = per_cust.agg(F.sum("revenue_dec")).first()[0]
     if total_raw is None:
         # empty orders slice: no curve — not a crash
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [],
             "o_custkey bigint, revenue double, rk bigint, "
             "cum_share double",

@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..catalog import load_table
+from ..catalog import load_table, local_frame
 from .cleaning import MUNICIPIO_REPAIRS
 from .payment import build_fact_facturacion
 from .retreat import build_fact_retiro
@@ -147,7 +147,8 @@ def fact_retiro_star(spark: SparkSession, sf_dir: str) -> DataFrame:
             broken, (F.col("n_nationkey") % 9 + 1).cast("int")
         ).alias("municipio"),
     )
-    dim_region = spark.createDataFrame(
+    dim_region = local_frame(
+        spark,
         [(i + 1, good) for i, (_, good) in enumerate(_MUNI)],
         "region_id long, municipio string",
     )
@@ -255,7 +256,8 @@ def fact_service_star(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lpad(F.col("id").cast("string"), 2, "0"), F.lit(":00:00")
         ).alias("hora_label"),
     )
-    dim_region = spark.createDataFrame(
+    dim_region = local_frame(
+        spark,
         [(i + 1, good) for i, (_, good) in enumerate(_MUNI)],
         "region_id long, municipio string",
     )

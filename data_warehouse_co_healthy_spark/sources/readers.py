@@ -20,6 +20,8 @@ from collections.abc import Callable, Iterable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from ..catalog import local_frame
+
 
 def read_parquet(
     spark: SparkSession, path: str, schema: T.StructType | None = None
@@ -133,7 +135,7 @@ def read_excel_catalog(
             [coerce(v, f.dataType) for v, f in zip(row, schema.fields)]
             for row in rows
         ]
-        return spark.createDataFrame(typed, schema=schema)
+        return local_frame(spark, typed, schema)
 
 
 def read_rest_json(
@@ -151,4 +153,4 @@ def read_rest_json(
         rows = rows[:limit]
     names = [f.name for f in schema.fields]
     data = [tuple(r.get(n) for n in names) for r in rows]
-    return spark.createDataFrame(data, schema)
+    return local_frame(spark, data, schema)

@@ -16,7 +16,7 @@ Deliberately NOT a general Excel reader: no formulas, no dates-as-
 numbers handling, no mini-FAT streams (data sheets above the 4 KB
 cutoff always live in the regular FAT), no write support. Spreadsheets
 are a driver-side edge format (nothing about them is splittable); the
-returned rows go straight to ``spark.createDataFrame`` with an
+returned rows go straight to ``catalog.local_frame`` with an
 explicit schema, after which everything is distributed.
 """
 
@@ -174,8 +174,8 @@ def read_xls_rows(
     """Read one sheet of a BIFF8 .xls → (header, data rows).
 
     Row 0 is the header (string cells); remaining rows come back as
-    dense lists padded with None — the shape ``createDataFrame`` with
-    an explicit schema expects.
+    dense lists padded with None — the shape ``local_frame`` with an
+    explicit schema expects.
 
     Error contract: malformed/truncated/corrupt input raises
     ``ValueError`` (low-level struct/index/decode errors are wrapped —

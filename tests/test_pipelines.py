@@ -206,3 +206,43 @@ def test_runner_builds_full_warehouse(spark, src):
     assert out["dim_fecha"].count() == 1826
     for v in out.values():
         v.unpersist()
+
+
+def _codegen_compiles(spark) -> int:
+    """Classes Janino compiled in this JVM so far."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
+def test_warm_fact_star_pass_compiles_nothing(spark, tmp_path):
+    """Each of two rounds builds the four CO fact stars, writes each
+    to parquet, reads it back and aggregates every column (the etl
+    benchmark's operation). The second round must find every
+    generated class in the codegen cache: at the default cache size
+    of 100 it recompiled about 95 of them."""
+    from pyspark.sql import functions as F
+
+    from data_warehouse_co_healthy_spark.plans.queries import QUERIES
+    from data_warehouse_co_healthy_spark.sources.writers import (
+        write_parquet,
+    )
+    from tests.conftest import SF_DIR
+
+    def one_round(tag):
+        for name in ("fact_formula_star", "fact_facturacion_star",
+                     "fact_retiro_star", "fact_service_star"):
+            df = QUERIES[name](spark, SF_DIR)
+            path = str(tmp_path / tag / name)
+            part = ("anio",) if "anio" in df.columns else ()
+            write_parquet(df, path, partition_by=part)
+            back = spark.read.parquet(path)
+            back.select(
+                F.count(F.lit(1)),
+                F.sum(F.xxhash64(*[F.col(f"`{c}`") for c in back.columns])
+                      .cast("decimal(20,0)")),
+            ).collect()
+
+    one_round("cold")
+    before = _codegen_compiles(spark)
+    one_round("warm")
+    assert _codegen_compiles(spark) - before == 0

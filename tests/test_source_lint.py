@@ -118,6 +118,47 @@ def test_concat_ws_allowlist_has_no_stale_entries():
     assert not stale, f"allowlist entries no longer in source: {stale}"
 
 
+# ------------------------------------------------------- driver-side frames
+
+#: (relative path, enclosing function) -> why it may call createDataFrame.
+CREATE_DATAFRAME_OK = {
+    ("catalog.py", "local_frame"):
+        "the one list-to-frame path: rows travel as an Arrow table",
+    ("sources/readers.py", "read_excel_catalog"):
+        "pandas frame from pd.read_excel, converted through Arrow",
+}
+
+
+def _create_dataframe_calls() -> list[tuple[str, str, int]]:
+    found = []
+    for path in sorted(PKG.rglob("*.py")):
+        rel = str(path.relative_to(PKG))
+        tree = ast.parse(path.read_text())
+        for node in ast.walk(tree):
+            if (isinstance(node, ast.Call)
+                    and _call_name(node.func) == "createDataFrame"):
+                found.append(
+                    (rel, _enclosing_function(tree, node.lineno),
+                     node.lineno)
+                )
+    return found
+
+
+def test_driver_rows_become_frames_only_through_local_frame():
+    """``createDataFrame(list, ddl)`` pickles the rows into a Python
+    RDD, so a few driver-side rows cost a Python-worker stage; every
+    list of rows goes through ``catalog.local_frame`` instead."""
+    calls = _create_dataframe_calls()
+    found = [
+        f"{rel}:{lineno} in {func}()"
+        for rel, func, lineno in calls
+        if (rel, func) not in CREATE_DATAFRAME_OK
+    ]
+    assert not found, f"createDataFrame outside local_frame: {found}"
+    stale = set(CREATE_DATAFRAME_OK) - {(rel, func) for rel, func, _ in calls}
+    assert not stale, f"allowlist entries no longer in source: {stale}"
+
+
 # ---------------------------------------------------------------- reachability
 
 REPO = PKG.parent

@@ -1132,3 +1132,58 @@ def test_delete_keys_formats_non_string_partition_values(spark, tmp_path):
     assert sorted(r["user_id"] for r in back.collect()) == [3, 4]
     # partition inference reads bool values back as string 'true'/'false'
     assert back.filter(F.col("flag").cast("string") == "true").count() == 0
+
+
+_LOCAL_FRAME_CASES = [
+    ([(1, "Bogotá D.C."), (2, None)], "region_id long, municipio string"),
+    ([(7, 3, 0.25), (8, None, None)], "vec_id bigint, cid int, dist double"),
+    (
+        [(1, float("nan")), (2, None), (3, -0.0)],
+        "doc_id long, rank double",
+    ),
+    (
+        [(0, [0.5, float("nan"), None]), (1, []), (2, None)],
+        "cell int, centroid array<double>",
+    ),
+    ([(4, [3, None, 0], 1.5)], "vec_id long, codes array<int>, recon_mse double"),
+    ([(5, 2, True, None)], "vec_id bigint, cid int, kept boolean, max_cos_kept double"),
+    ([], "query_id bigint, cand_id bigint, rk bigint, cos double"),
+]
+
+
+@pytest.mark.parametrize(
+    "rows,ddl", _LOCAL_FRAME_CASES, ids=[d for _, d in _LOCAL_FRAME_CASES]
+)
+def test_local_frame_matches_row_path_and_plans_local(spark, rows, ddl):
+    """``local_frame`` gives the schema and rows of
+    ``createDataFrame(list, ddl)`` (NaN stays NaN, None stays null)
+    and plans as a ``LocalTableScan``, not a Python-RDD scan."""
+    from data_warehouse_co_healthy_spark.catalog import local_frame
+
+    got = local_frame(spark, rows, ddl)
+    want = spark.createDataFrame(rows, ddl)
+    assert got.schema == want.schema
+    # repr: NaN != NaN, so compare the printed rows
+    assert repr(got.collect()) == repr(want.collect())
+    plan = got._jdf.queryExecution().executedPlan().toString()
+    assert plan.startswith("LocalTableScan"), plan
+
+
+@pytest.mark.parametrize(
+    "ddl", ["ts timestamp", "m map<string,int>", "s struct<a:int>"]
+)
+def test_local_frame_rejects_unmapped_types(spark, ddl):
+    """Types whose values Arrow would convert differently from the
+    row path (a naive datetime: UTC against local time) or that it
+    does not handle are refused, never routed another way."""
+    from data_warehouse_co_healthy_spark.catalog import local_frame
+
+    with pytest.raises(TypeError, match="local_frame"):
+        local_frame(spark, [], ddl)
+
+
+def test_local_frame_rejects_ragged_rows(spark):
+    from data_warehouse_co_healthy_spark.catalog import local_frame
+
+    with pytest.raises(ValueError, match="schema has 2"):
+        local_frame(spark, [(1, "a"), (2,)], "a long, b string")
