@@ -120,16 +120,17 @@ def test_concat_ws_allowlist_has_no_stale_entries():
 
 # ------------------------------------------------------- driver-side frames
 
-#: (relative path, enclosing function) -> why it may call createDataFrame.
+#: (relative path, enclosing function, first argument) -> why it may
+#: call createDataFrame.
 CREATE_DATAFRAME_OK = {
-    ("catalog.py", "local_frame"):
+    ("catalog.py", "local_frame", "table"):
         "the one list-to-frame path: rows travel as an Arrow table",
-    ("sources/readers.py", "read_excel_catalog"):
+    ("sources/readers.py", "read_excel_catalog", "pdf"):
         "pandas frame from pd.read_excel, converted through Arrow",
 }
 
 
-def _create_dataframe_calls() -> list[tuple[str, str, int]]:
+def _create_dataframe_calls() -> list[tuple[tuple[str, str, str], int]]:
     found = []
     for path in sorted(PKG.rglob("*.py")):
         rel = str(path.relative_to(PKG))
@@ -137,10 +138,9 @@ def _create_dataframe_calls() -> list[tuple[str, str, int]]:
         for node in ast.walk(tree):
             if (isinstance(node, ast.Call)
                     and _call_name(node.func) == "createDataFrame"):
-                found.append(
-                    (rel, _enclosing_function(tree, node.lineno),
-                     node.lineno)
-                )
+                data = ast.unparse(node.args[0]) if node.args else ""
+                func = _enclosing_function(tree, node.lineno)
+                found.append(((rel, func, data), node.lineno))
     return found
 
 
@@ -150,12 +150,12 @@ def test_driver_rows_become_frames_only_through_local_frame():
     list of rows goes through ``catalog.local_frame`` instead."""
     calls = _create_dataframe_calls()
     found = [
-        f"{rel}:{lineno} in {func}()"
-        for rel, func, lineno in calls
-        if (rel, func) not in CREATE_DATAFRAME_OK
+        f"{rel}:{lineno} in {func}({data})"
+        for (rel, func, data), lineno in calls
+        if (rel, func, data) not in CREATE_DATAFRAME_OK
     ]
     assert not found, f"createDataFrame outside local_frame: {found}"
-    stale = set(CREATE_DATAFRAME_OK) - {(rel, func) for rel, func, _ in calls}
+    stale = set(CREATE_DATAFRAME_OK) - {key for key, _ in calls}
     assert not stale, f"allowlist entries no longer in source: {stale}"
 
 
