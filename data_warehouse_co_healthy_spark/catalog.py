@@ -9,28 +9,86 @@ column pruning reach the scan (Catalyst pushdown), nothing is collected.
 from __future__ import annotations
 
 import os
+import stat
 import weakref
-from collections.abc import Iterable, Sequence
+from collections.abc import Callable, Hashable, Iterable, Sequence
+from typing import TypeVar
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-#: Per-session catalog of loaded-table DataFrames, keyed on (path,
-#: mtime_ns, size) — the table-METADATA cache every catalog-backed
+_V = TypeVar("_V")
+
+#: Per-session catalog of loaded-table DataFrames, one ``memo`` store
+#: per session — the table-METADATA cache every catalog-backed
 #: ``spark.table()`` has and a bare-path ``read.parquet`` lacks
 #: (round-11 optimization pass, guide §6 "file listing is cached per
-#: session"). Each ``spark.read.parquet`` call costs ~90 ms of driver
-#: time (DataSource resolution + file listing + footer schema read)
-#: BEFORE any data moves; multi-table stars paid it 4× per plan build.
-#: What is cached is an UNEXECUTED scan plan — every action still
-#: reads the parquet bytes (the bench's cold-per-run clearCache only
-#: clears data caches, which this is not); the source fingerprint in
-#: the key makes a rewritten fixture rebuild instead of serving a
-#: stale schema, mirroring streaming.docs._staged_dir. WeakKey on the
-#: session: a stopped session's plans die with it.
+#: session"). Each ``spark.read.parquet`` call costs ~90 ms of
+#: driver time (DataSource resolution + file listing + footer schema
+#: read) BEFORE any data moves; multi-table stars paid it 4× per plan
+#: build. What is cached is an UNEXECUTED scan plan — every action
+#: still reads the parquet bytes (the bench's cold-per-run clearCache
+#: only clears data caches, which this is not). The plans are JVM
+#: objects of one session, so they live here, WeakKey on the session
+#: (a stopped session's plans die with it), not in ``_MEMO``.
 _TABLE_CACHE: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+#: Values derived from fixture tables: ``{(key, sf_dir): (fingerprint,
+#: value)}``, filled by ``memo``.
+_MEMO: dict[tuple, tuple] = {}
+
+
+def fingerprint(sf_dir: str, *tables: str) -> tuple:
+    """``(relpath, mtime_ns, size)`` of every file of each
+    ``<table>.parquet`` under ``sf_dir`` — a single file or a directory
+    of part files, walked in sorted order; a missing table adds
+    nothing. Rewriting a table at the same path changes it."""
+    parts: list[tuple[str, int, int]] = []
+    for table in tables:
+        path = os.path.join(sf_dir, f"{table}.parquet")
+        try:
+            st = os.stat(path)
+            if not stat.S_ISDIR(st.st_mode):
+                parts.append((f"{table}.parquet", st.st_mtime_ns, st.st_size))
+                continue
+            for root, dirs, files in os.walk(path):
+                dirs.sort()
+                for f in sorted(files):
+                    full = os.path.join(root, f)
+                    st = os.stat(full)
+                    parts.append(
+                        (os.path.relpath(full, sf_dir), st.st_mtime_ns,
+                         st.st_size)
+                    )
+        except OSError:
+            pass
+    return tuple(parts)
+
+
+def memo(
+    key: Hashable,
+    sf_dir: str,
+    tables: Sequence[str],
+    build: Callable[[], _V],
+    store: dict | None = None,
+) -> _V:
+    """``build()``'s value for ``key`` over ``sf_dir``, built once and
+    again whenever ``fingerprint(sf_dir, *tables)`` changes: a table
+    rewritten at the same path never serves the old data's value. The
+    new value replaces the old entry. ``None`` and empty values are
+    kept like any other. Entries live in the process-level ``_MEMO``
+    unless ``store`` names another dict (``load_table``'s per-session
+    one)."""
+    store = _MEMO if store is None else store
+    fp = fingerprint(sf_dir, *tables)
+    hit = store.get((key, sf_dir))
+    if hit is not None and hit[0] == fp:
+        return hit[1]
+    value = build()
+    store[(key, sf_dir)] = (fp, value)
+    return value
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -43,26 +101,20 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     read with ``[PARQUET_TYPE_ILLEGAL]``.
     """
     path = os.path.join(sf_dir, f"{name}.parquet")
-    try:
-        st = os.stat(path)
-        fp = (path, st.st_mtime_ns, st.st_size)
-    except OSError:
-        fp = None
-    per_session = _TABLE_CACHE.setdefault(spark, {})
-    if fp is not None and fp in per_session:
-        return per_session[fp]
-    df = spark.read.parquet(path)
-    try:
+
+    def build() -> DataFrame:
+        df = spark.read.parquet(path)
         # source-size hint for spread(): lets the fan-out guard decide
         # arithmetically instead of forcing a physical plan (df.rdd
         # costs ~35 ms of driver planning PER CALL — round-10
         # optimization pass; 86 call sites pay it at every plan build)
-        df._sg_src_bytes = os.path.getsize(path)
-    except OSError:
-        pass
-    if fp is not None:
-        per_session[fp] = df
-    return df
+        df._sg_src_bytes = sum(s for _, _, s in fingerprint(sf_dir, name))
+        return df
+
+    return memo(
+        name, sf_dir, (name,), build,
+        store=_TABLE_CACHE.setdefault(spark, {}),
+    )
 
 
 def spread(df: DataFrame) -> DataFrame:

@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..catalog import load_table, local_frame, spread
+from ..catalog import fingerprint, load_table, local_frame, memo, spread
 from ..functions.numeric import nz, snap_round_sql
 
 N_QUERIES = 5   # query set = vec_id < 5
@@ -467,16 +467,13 @@ def ivf_index_write(spark: SparkSession, sf_dir: str, path: str) -> None:
 
 
 def ivf_index_probe(
-    spark: SparkSession,
-    path: str,
-    queries: DataFrame,
-    nprobe: int = IVF_NPROBE,
+    spark: SparkSession, path: str, queries: DataFrame
 ) -> DataFrame:
     """Top-TOP_K cosine search against a PERSISTED IVF index
     (ivf_index_write layout): per-query probe cells come from the
     stored quantizer (k×d collect — never data-scaled), the distinct
-    probed-cell set (≤ min(k, nprobe·n_queries) ints) is pushed as a
-    literal IN-filter on the partition column so the parquet scan
+    probed-cell set (≤ min(k, IVF_NPROBE·n_queries) ints) is pushed as
+    a literal IN-filter on the partition column so the parquet scan
     prunes every unprobed cell's directory, and only the surviving
     cells' members are exact-scored (same cosine + per-query top-k as
     ann_ivf_kmeans). Queries: (query_id long, embedding array<float>),
@@ -495,7 +492,7 @@ def ivf_index_probe(
     C = np.zeros((len(cent_rows), len(cent_rows[0].centroid)))
     for r in cent_rows:
         C[r.cell] = np.asarray(r.centroid)
-    k = min(nprobe, len(cent_rows))
+    k = min(IVF_NPROBE, len(cent_rows))
 
     def probe_batches(batches):
         for pdf in batches:
@@ -518,10 +515,10 @@ def ivf_index_probe(
 
     probes = queries.mapInPandas(
         probe_batches, schema="query_id long, q_raw array<float>, cell int"
-    # N_QUERIES×nprobe-row materialization: the distinct-cell collect
-    # AND the broadcast join both consume probes, and Spark shares no
-    # unaliased subplans — without this the query scan + centroid
-    # argsort assignment would run twice
+    # N_QUERIES×IVF_NPROBE-row materialization: the distinct-cell
+    # collect AND the broadcast join both consume probes, and Spark
+    # shares no unaliased subplans — without this the query scan +
+    # centroid argsort assignment would run twice
     ).localCheckpoint()
     cells = sorted(
         r.cell for r in probes.select("cell").distinct().collect()
@@ -565,13 +562,14 @@ def ivf_index_probe(
 
 def ivf_index_probe_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Registry wrapper grading the PERSISTED-index serve path end to
-    end (VERDICT r8 item 1): stage the IVF index once per
-    (warehouse, sf_dir) via ``ivf_index_write`` — hive-partitioned
-    vectors + stored quantizer, reused when already on disk, same
-    staging pattern as ``bucketed_join_revenue`` — then answer the
-    standard N_QUERIES query set through ``ivf_index_probe``, whose
-    parquet scan prunes every unprobed cell's directory
-    (partitionFilters pinned in tests/test_layout.py).
+    end (VERDICT r8 item 1): stage the IVF index once per (warehouse,
+    sf_dir, embeddings fingerprint) via ``ivf_index_write`` —
+    hive-partitioned vectors + stored quantizer, reused when already
+    on disk, same staging pattern as ``bucketed_join_revenue`` — then
+    answer the standard N_QUERIES query set through
+    ``ivf_index_probe``, whose parquet scan prunes every unprobed
+    cell's directory (partitionFilters pinned in
+    tests/test_layout.py).
 
     Result contract: identical rows to ``ann_ivf_kmeans`` (same trained
     quantizer, same IVF_NPROBE probes, same cosine fold and tie-break)
@@ -579,23 +577,16 @@ def ivf_index_probe_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     slot grades that the inline slot can't: the index WRITE layout, the
     stored-quantizer probe, and partition-pruned scan correctness."""
     import hashlib  # noqa: PLC0415
-    import os  # noqa: PLC0415
 
     from ..sources import hadoopfs  # noqa: PLC0415
 
     wh = spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse")
-    # key the staged index on the SOURCE fingerprint, not just the
-    # path (same rationale as streaming.docs._staged_dir): a
-    # regenerated fixture at the same path must rebuild, never serve
-    # the stale index. Partial writes self-heal: the existence check
-    # needs both subdirs and ivf_index_write overwrites both.
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    try:
-        st = os.stat(src)
-        fp = f"{sf_dir}|{st.st_size}|{st.st_mtime_ns}"
-    except OSError:
-        fp = sf_dir
-    tag = hashlib.md5(fp.encode()).hexdigest()[:8]
+    # the name tag folds in the table's fingerprint: a fixture rewritten
+    # at the same path gets a new index, never the stale one. Partial
+    # writes self-heal: the existence check needs both subdirs and
+    # ivf_index_write overwrites both.
+    fp = (sf_dir, fingerprint(sf_dir, "embeddings"))
+    tag = hashlib.md5(repr(fp).encode()).hexdigest()[:8]
     path = f"{wh.rstrip('/')}/r9_ivf_index_{tag}"
     if not (
         hadoopfs.exists(spark, f"{path}/quantizer")
@@ -766,12 +757,6 @@ PQ_K = 16         # codebook entries per subspace (4-bit codes)
 PQ_ITERS = 8      # Lloyd iterations per subspace codebook
 PQ_TRAIN_N = 2048 # training-sample cap (FAISS-style bounded sample)
 
-# codebooks per sf_dir: M x K x (d/M) float lists. Training samples a
-# bounded subset to the driver (production PQ trains codebooks on a
-# ~100k sample regardless of corpus size) — O(PQ_TRAIN_N x d), never
-# corpus-sized, cached like training.trained_centroids.
-_PQ_CODEBOOKS: dict[str, list] = {}
-
 
 def _seq_norms(mat):
     """Row L2 norms via a PYTHON sequential left fold + math.sqrt:
@@ -814,11 +799,24 @@ def _seq_mean_cols(rows):
     return np.asarray(out)
 
 
+def _pq_codebooks(spark: SparkSession, sf_dir: str) -> list:
+    """PQ codebooks of the embeddings table: M x K x (d/M) float
+    lists, trained once per table fingerprint like
+    training.trained_centroids. Training samples a bounded subset to
+    the driver (production PQ trains codebooks on a ~100k sample
+    regardless of corpus size) — O(PQ_TRAIN_N x d), never
+    corpus-sized."""
+    return memo(
+        "pq_codebooks",
+        sf_dir,
+        ("embeddings",),
+        lambda: _pq_train(spark, sf_dir),
+    )
+
+
 def _pq_train(spark: SparkSession, sf_dir: str) -> list:
     import numpy as np  # noqa: PLC0415
 
-    if sf_dir in _PQ_CODEBOOKS:
-        return _PQ_CODEBOOKS[sf_dir]
     rows = (
         spread(load_table(spark, sf_dir, "embeddings"))
         .select("vec_id", "embedding")
@@ -829,7 +827,6 @@ def _pq_train(spark: SparkSession, sf_dir: str) -> list:
     if not rows:
         # empty corpus slice: no codebooks to train — consumers
         # early-return empty frames (not a crash)
-        _PQ_CODEBOOKS[sf_dir] = []
         return []
     mat = np.stack([np.asarray(r.embedding, float) for r in rows])
     with np.errstate(invalid="ignore", divide="ignore"):
@@ -865,7 +862,6 @@ def _pq_train(spark: SparkSession, sf_dir: str) -> list:
                 if mask.any():
                     C[k] = _seq_mean_cols(X[mask])
         books.append(C.tolist())
-    _PQ_CODEBOOKS[sf_dir] = books
     return books
 
 
@@ -875,7 +871,7 @@ def _pq_encoded(spark: SparkSession, sf_dir: str) -> DataFrame:
     snap-rounded mse); ``_pq_adc_ranked`` consumes the array codes."""
     import numpy as np  # noqa: PLC0415
 
-    trained = _pq_train(spark, sf_dir)
+    trained = _pq_codebooks(spark, sf_dir)
     if not trained:
         return local_frame(
             spark,
@@ -966,7 +962,7 @@ def _pq_adc_ranked(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import numpy as np  # noqa: PLC0415
 
-    trained = _pq_train(spark, sf_dir)
+    trained = _pq_codebooks(spark, sf_dir)
     e = spread(load_table(spark, sf_dir, "embeddings")).select(
         "vec_id", "embedding"
     )

@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..catalog import load_table, local_frame, spread
+from ..catalog import load_table, local_frame, memo, spread
 from ..functions.numeric import nz, snap_round
 
 N_SHARDS = 16  # output shards for training-data files
@@ -139,23 +139,24 @@ def _assign(emb: DataFrame, centroids: list[list[float]]) -> DataFrame:
 # Trained coarse quantizers are MODEL ARTIFACTS: k×d floats, trained
 # once per dataset and reused by every consumer (cluster assignment,
 # semantic dedup, IVF probing) — exactly how a production system
-# persists a FAISS/MLlib model instead of retraining per query. The
-# memo is keyed by the dataset path; same data → same deterministic
-# centroids, so results are unchanged, only the redundant retraining
-# goes away. Process-local by design (at scale this is a small file
-# next to the index).
-_CENTROIDS: dict[str, list[list[float]]] = {}
-
-
+# persists a FAISS/MLlib model instead of retraining per query. Same
+# data → same deterministic centroids, so results are unchanged, only
+# the redundant retraining goes away; ``memo`` retrains when the
+# embeddings table is rewritten. Process-local by design (at scale
+# this is a small file next to the index).
 def trained_centroids(
     spark: SparkSession, sf_dir: str
 ) -> list[list[float]]:
-    if sf_dir not in _CENTROIDS:
-        emb = spread(load_table(spark, sf_dir, "embeddings")).select(
-            "vec_id", "embedding"
-        )
-        _CENTROIDS[sf_dir] = lloyd_centroids(emb)
-    return _CENTROIDS[sf_dir]
+    return memo(
+        "centroids",
+        sf_dir,
+        ("embeddings",),
+        lambda: lloyd_centroids(
+            spread(load_table(spark, sf_dir, "embeddings")).select(
+                "vec_id", "embedding"
+            )
+        ),
+    )
 
 
 def kmeans_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -375,7 +376,12 @@ def quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     (`sample_hash_mod`), score the full corpus — the scoring pass
     below is already that shape.
     """
-    w_final = train_linear_probe(spark, sf_dir)
+    w_final = memo(
+        "probe_weights",
+        sf_dir,
+        ("embeddings",),
+        lambda: train_linear_probe(spark, sf_dir),
+    )
     if w_final is None:
         return local_frame(
             spark,
@@ -395,57 +401,14 @@ def _probe_inputs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_PROBE_WEIGHTS: dict[tuple, "object"] = {}
-
-
-def _probe_cache_key(sf_dir: str) -> tuple:
-    """Cache key for trained probe weights: (path, data fingerprint).
-    The fingerprint folds in mtime+size of the embeddings fixture
-    (file or directory of part-files), so rewriting the data at the
-    same path invalidates the cache instead of silently reusing stale
-    weights."""
-    import os  # noqa: PLC0415
-
-    p = os.path.join(sf_dir, "embeddings.parquet")
-    parts: list[tuple[str, int, int]] = []
-    try:
-        if os.path.isdir(p):
-            for root, dirs, files in os.walk(p):
-                dirs.sort()  # deterministic traversal for nested layouts
-                rel = os.path.relpath(root, p)
-                for f in sorted(files):
-                    st = os.stat(os.path.join(root, f))
-                    parts.append(
-                        (os.path.join(rel, f), st.st_mtime_ns, st.st_size)
-                    )
-        else:
-            st = os.stat(p)
-            parts.append(("", st.st_mtime_ns, st.st_size))
-    except OSError:
-        pass
-    return (sf_dir, tuple(parts))
-
-
-def clear_probe_cache() -> None:
-    """Drop all cached probe weights (tests use this to force a real
-    retrain when asserting determinism)."""
-    _PROBE_WEIGHTS.clear()
-
-
 def train_linear_probe(spark: SparkSession, sf_dir: str):
     """Distributed trainer behind ``quality_classifier`` (docstring
     there): class-balanced logistic gradient via Arrow-batched partial
     sums, Adam updates on the driver, O(d) traffic per iteration.
-    Returns the (d+1) weight vector (bias last); cached per
-    (sf_dir, data fingerprint) so repeated scoring calls share one
-    training run without ever serving stale weights after a
-    rewrite."""
+    Returns the (d+1) weight vector (bias last), or None for an empty
+    corpus slice."""
     import numpy as np  # noqa: PLC0415
     import pandas as pd  # noqa: PLC0415
-
-    cache_key = _probe_cache_key(sf_dir)
-    if cache_key in _PROBE_WEIGHTS:
-        return _PROBE_WEIGHTS[cache_key]
 
     e = _probe_inputs(spark, sf_dir).persist()
     try:
@@ -456,7 +419,6 @@ def train_linear_probe(spark: SparkSession, sf_dir: str):
         if not n_total:
             # empty corpus slice: no probe to train — callers
             # early-return an empty scored frame (not a crash)
-            _PROBE_WEIGHTS[cache_key] = None
             return None
         # class-balanced loss weights: each class contributes half the
         # total gradient mass regardless of its share of the corpus
@@ -504,7 +466,6 @@ def train_linear_probe(spark: SparkSession, sf_dir: str):
             v_hat = v / (1 - b2**it)
             w = w - LR_RATE * m_hat / (np.sqrt(v_hat) + eps)
 
-        _PROBE_WEIGHTS[cache_key] = w
         return w
     finally:
         e.unpersist()

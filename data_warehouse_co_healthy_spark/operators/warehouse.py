@@ -20,7 +20,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..catalog import load_table, local_frame
+from ..catalog import fingerprint, load_table, local_frame
 from ..functions.numeric import nz, snap_round
 
 
@@ -822,7 +822,8 @@ def bucketed_join_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     already-clustered bucket is not.) This is the co-located fact⋈fact
     join that removes the dominant shuffle of a 100 TB pipeline; the
     staged write is the graded sink artifact (same staging pattern as
-    ivf_index_write), reused when the tables already exist.
+    ivf_index_write), reused while the tables exist and the two source
+    tables are unchanged.
     tests/test_layout.py pins the exchange-free plan; the merge hint
     keeps AQE from demoting the bucketed join to broadcast at fixture
     scale (at real scale both fact sides are far beyond the broadcast
@@ -832,7 +833,10 @@ def bucketed_join_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources import hadoopfs  # noqa: PLC0415
     from ..sources.writers import write_bucketed  # noqa: PLC0415
 
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
+    # the name tag folds in both tables' fingerprint: a fixture
+    # rewritten at the same path gets new tables, never the stale ones
+    fp = (sf_dir, fingerprint(sf_dir, "orders", "lineitem"))
+    tag = hashlib.md5(repr(fp).encode()).hexdigest()[:8]
     t_o, t_l = f"r7_bkt_orders_{tag}", f"r7_bkt_lineitem_{tag}"
 
     def _clear_stale(table: str) -> None:

@@ -52,18 +52,13 @@ def _dim_fecha(o: DataFrame, with_next_day: bool = False) -> DataFrame:
     )
 
 
-def _dim_fecha_sql(with_next_day: bool = False) -> str:
-    parts = ["SELECT strftime(o_orderdate, '%Y-%m-%d') AS fecha FROM orders"]
-    if with_next_day:
-        parts.append(
-            "SELECT strftime(o_orderdate + INTERVAL 1 DAY, '%Y-%m-%d') "
-            "AS fecha FROM orders"
-        )
-    union = " UNION ALL ".join(parts)
-    return (
-        "SELECT CAST(replace(fecha, '-', '') AS BIGINT) AS fecha_id, fecha "
-        f"FROM (SELECT DISTINCT fecha FROM ({union}))"
-    )
+#: DuckDB twin of ``_dim_fecha(o)``; the service-star oracle, the one
+#: ``with_next_day`` caller, builds its next-day key inline.
+_DIM_FECHA_SQL = (
+    "SELECT CAST(replace(fecha, '-', '') AS BIGINT) AS fecha_id, fecha "
+    "FROM (SELECT DISTINCT strftime(o_orderdate, '%Y-%m-%d') AS fecha "
+    "FROM orders)"
+)
 
 
 def fact_facturacion_star(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -319,7 +314,7 @@ ORACLES = {
                    row_number() OVER (ORDER BY nombre) AS enfermedad_id
             FROM (SELECT DISTINCT c_mktsegment AS nombre FROM customer)
         ),
-        dim_fecha AS ({_dim_fecha_sql()})
+        dim_fecha AS ({_DIM_FECHA_SQL})
         SELECT df.fecha_id, dcm.centro_medico_id, de.enfermedad_id,
                coalesce(demp.empresa_id, 0) AS empresa_id,
                dc.cotizante_id, p.valor_pagado
@@ -359,7 +354,7 @@ ORACLES = {
             SELECT c_custkey + 1 AS cotizante_id, c_custkey AS cedula
             FROM customer
         ),
-        dim_fecha AS ({_dim_fecha_sql()})
+        dim_fecha AS ({_DIM_FECHA_SQL})
         SELECT df.fecha_id, dr.region_id, ce.centro_medico_id,
                dc.cotizante_id, r.cambio_a_eps
         FROM retiros r

@@ -168,10 +168,8 @@ def _decode_rk(rk: int) -> float:
     return v / 100.0 if rk & 1 else v
 
 
-def read_xls_rows(
-    path: str, sheet: int = 0
-) -> tuple[list[str], list[list[object]]]:
-    """Read one sheet of a BIFF8 .xls → (header, data rows).
+def read_xls_rows(path: str) -> tuple[list[str], list[list[object]]]:
+    """Read the first sheet of a BIFF8 .xls → (header, data rows).
 
     Row 0 is the header (string cells); remaining rows come back as
     dense lists padded with None — the shape ``local_frame`` with an
@@ -179,8 +177,8 @@ def read_xls_rows(
 
     Error contract: malformed/truncated/corrupt input raises
     ``ValueError`` (low-level struct/index/decode errors are wrapped —
-    a fuzz test pins that nothing else escapes); a sheet index past
-    the sheet list raises ``IndexError``.
+    a fuzz test pins that nothing else escapes); a workbook without a
+    sheet raises ``IndexError``.
     """
     with open(path, "rb") as f:
         data = f.read()
@@ -198,10 +196,10 @@ def read_xls_rows(
         raise ValueError(
             f"malformed .xls: {type(e).__name__}: {e}"
         ) from e
-    if sheet >= len(sheets):
-        raise IndexError(f"sheet {sheet} of {len(sheets)}")
+    if not sheets:
+        raise IndexError("workbook has no sheet")
     try:
-        return _read_sheet(wb, strings, sheets[sheet])
+        return _read_sheet(wb, strings, sheets[0])
     except (struct.error, IndexError, OverflowError, UnicodeError) as e:
         raise ValueError(
             f"malformed .xls: {type(e).__name__}: {e}"

@@ -2,10 +2,10 @@
 
 The file stream source reads a DIRECTORY, while the fixtures are single
 parquet files; ``staged_stream`` writes a fixture-derived split once
-per process into a ``_staged_dir`` (keyed on the fixture's
-fingerprint) and opens the file stream over it, and every file-stream
-source in the package goes through it. ``fresh_tmpdir`` hands out
-never-cached dirs on the same atexit cleanup.
+per fixture fingerprint (``catalog.memo``) and opens the file stream
+over it, and every file-stream source in the package goes through it.
+``fresh_tmpdir`` hands out the staged dirs and other never-cached dirs
+on one atexit cleanup.
 """
 
 from __future__ import annotations
@@ -16,67 +16,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-_STAGED_DIRS: dict[tuple, str] = {}
+from ..catalog import _MEMO, memo
+
 _STAGED_ALL: list[str] = []
-#: Schema of each staged stream dir, recorded when it is written, so a
-#: cache hit opens the stream without a parquet footer read.
-_STAGED_SCHEMAS: dict[str, T.StructType] = {}
-
-
-def _source_fingerprint(path: str) -> tuple:
-    """(mtime_ns, size) fingerprint of the fixture a staged dir derives
-    from (file or directory of part-files) — same construction as
-    llm.training._probe_cache_key. Folding this into the cache key
-    means rewriting a fixture at the same path rebuilds the staged
-    dir instead of serving stale materialized media."""
-    import os  # noqa: PLC0415
-
-    parts: list[tuple[str, int, int]] = []
-    try:
-        if os.path.isdir(path):
-            for root, dirs, files in os.walk(path):
-                dirs.sort()
-                rel = os.path.relpath(root, path)
-                for f in sorted(files):
-                    st = os.stat(os.path.join(root, f))
-                    parts.append(
-                        (os.path.join(rel, f), st.st_mtime_ns, st.st_size)
-                    )
-        else:
-            st = os.stat(path)
-            parts.append(("", st.st_mtime_ns, st.st_size))
-    except OSError:
-        pass
-    return tuple(parts)
-
-
-def _staged_dir(kind: str, sf_dir: str, prefix: str, build, src: str) -> str:
-    """Shared per-(kind, sf_dir, source-fingerprint) staging-directory
-    cache: build once, revalidate on reuse, clean every staged dir at
-    interpreter exit — repeated streaming calls share one dir instead
-    of leaking a mkdtemp per call. The key folds in ``src``'s
-    mtime+size fingerprint, so rewriting the fixture at the same path
-    within a process rebuilds rather than serving stale contents."""
-    import atexit  # noqa: PLC0415
-    import os  # noqa: PLC0415
-    import shutil  # noqa: PLC0415
-    import tempfile  # noqa: PLC0415
-
-    key = (kind, sf_dir, _source_fingerprint(src))
-    cached = _STAGED_DIRS.get(key)
-    if cached is not None and os.path.isdir(cached):
-        return cached
-    d = tempfile.mkdtemp(prefix=prefix)
-    build(d)
-    if not _STAGED_ALL:
-        atexit.register(
-            lambda: [
-                shutil.rmtree(p, ignore_errors=True) for p in _STAGED_ALL
-            ]
-        )
-    _STAGED_DIRS[key] = d
-    _STAGED_ALL.append(d)
-    return d
 
 
 def staged_stream(
@@ -103,7 +45,8 @@ def staged_stream(
     import os  # noqa: PLC0415
     import shutil  # noqa: PLC0415
 
-    def build(d: str) -> None:
+    def build() -> tuple[str, T.StructType]:
+        d = fresh_tmpdir(f"{kind}_")
         t0 = 1_600_000_000
         n = 0
         split = frames()
@@ -116,16 +59,14 @@ def staged_stream(
                 os.utime(dst, (t0 + n, t0 + n))
                 n += 1
             shutil.rmtree(sub)
-        _STAGED_SCHEMAS[d] = split[0].schema
+        return d, split[0].schema
 
-    staged = _staged_dir(
-        kind,
-        sf_dir,
-        f"{kind}_",
-        build,
-        src=os.path.join(sf_dir, f"{table}.parquet"),
-    )
-    schema = _STAGED_SCHEMAS[staged]
+    key = ("staged", kind)
+    staged, schema = memo(key, sf_dir, (table,), build)
+    if not os.path.isdir(staged):
+        # removed behind the memo's back: stage the split again
+        del _MEMO[(key, sf_dir)]
+        staged, schema = memo(key, sf_dir, (table,), build)
     raw = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", files_per_trigger)
@@ -140,10 +81,11 @@ def staged_stream(
 
 
 def fresh_tmpdir(prefix: str) -> str:
-    """A fresh (never cached) temp dir that rides the shared atexit
-    cleanup — for sinks that MUTATE across a stream's lifetime (e.g.
-    versioned-snapshot merge targets), where reusing a cached dir
-    would replay on top of a previous call's history."""
+    """A fresh temp dir that rides the shared atexit cleanup: each
+    staged split gets one, and so does each sink that MUTATES across a
+    stream's lifetime (e.g. versioned-snapshot merge targets), where
+    reusing a cached dir would replay on top of a previous call's
+    history."""
     import atexit  # noqa: PLC0415
     import shutil  # noqa: PLC0415
     import tempfile  # noqa: PLC0415
@@ -157,15 +99,3 @@ def fresh_tmpdir(prefix: str) -> str:
         )
     _STAGED_ALL.append(d)
     return d
-
-
-def clear_staged_dirs() -> None:
-    """Drop (and delete) every cached staged dir — the test hook
-    mirroring llm.training.clear_probe_cache."""
-    import shutil  # noqa: PLC0415
-
-    for p in _STAGED_ALL:
-        shutil.rmtree(p, ignore_errors=True)
-    _STAGED_ALL.clear()
-    _STAGED_DIRS.clear()
-    _STAGED_SCHEMAS.clear()

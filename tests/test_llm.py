@@ -756,9 +756,11 @@ def test_quality_classifier_learns_the_weak_label(spark):
     # (plain accuracy is maximized by predicting the majority class)
     bal = ((pos.pred == 1).mean() + (neg.pred == 0).mean()) / 2
     assert bal > 0.7, bal
-    # clear the weight cache so run 2 is a REAL retrain, making the
+    # drop the memoized weights so run 2 is a REAL retrain, making the
     # determinism assertion non-vacuous (ADVICE r3)
-    training.clear_probe_cache()
+    from data_warehouse_co_healthy_spark.catalog import _MEMO
+
+    del _MEMO[("probe_weights", SF_DIR)]
     b = training.quality_classifier(spark, SF_DIR).toPandas()
     m = a.merge(b, on="vec_id", suffixes=("_a", "_b"))
     assert (m.pred_a == m.pred_b).all()

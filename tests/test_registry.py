@@ -4,8 +4,11 @@ excused with a reason; nothing dangles."""
 
 from __future__ import annotations
 
+import pytest
+
 import __spark_entry__ as entry
 from data_warehouse_co_healthy_spark.plans import queries as reg
+from tests.conftest import SF_DIR
 
 
 def test_every_query_has_oracle_or_reason():
@@ -116,3 +119,59 @@ def test_every_query_is_documented_in_coverage():
     cov = open("COVERAGE.md").read()
     missing = [q for q in sorted(entry.queries()) if q not in cov]
     assert not missing, f"undocumented queries: {missing}"
+
+
+#: query -> the fixture tables it reads; the first one is rewritten.
+#: The first three read memoized centroids, codebooks and probe
+#: weights, the fourth staged bucketed tables, the last a staged
+#: stream split.
+_REWRITE_CASES = {
+    "kmeans_embeddings": ("embeddings",),
+    "ann_pq_adc": ("embeddings",),
+    "quality_classifier": ("embeddings",),
+    "bucketed_join_revenue": ("lineitem", "orders"),
+    "stream_stateful_totals_drain": ("events",),
+}
+
+
+@pytest.mark.parametrize("name", sorted(_REWRITE_CASES))
+def test_rewritten_fixture_is_not_served_stale(spark, tmp_path, name):
+    """Run again after its source table is rewritten at the same path
+    (half the rows, a new mtime), a query answers what it answers over
+    a fresh dir holding the rewritten table, where no value derived
+    from the old table can hit."""
+    import os
+    import shutil
+
+    import pandas as pd
+    import pyarrow.parquet as pq
+
+    reg.register_llm_modules()
+    fn = reg.QUERIES[name]
+    tables = _REWRITE_CASES[name]
+    dirs = {"a": tmp_path / "a", "b": tmp_path / "b"}
+    for d in dirs.values():
+        d.mkdir()
+        for t in tables:
+            shutil.copyfile(f"{SF_DIR}/{t}.parquet", d / f"{t}.parquet")
+
+    def run(d):
+        got = fn(spark, str(d)).toPandas()
+        return got.sort_values(list(got.columns)).reset_index(drop=True)
+
+    def halve(d):
+        path = d / f"{tables[0]}.parquet"
+        mtime = path.stat().st_mtime_ns + 10**9
+        full = pq.read_table(path)
+        pq.write_table(full.slice(0, full.num_rows // 2), path)
+        os.utime(path, ns=(mtime, mtime))
+
+    first = run(dirs["a"])
+    halve(dirs["a"])
+    again = run(dirs["a"])
+    halve(dirs["b"])
+    fresh = run(dirs["b"])
+    assert not first.equals(fresh), "the rewrite must change the answer"
+    pd.testing.assert_frame_equal(
+        again, fresh, check_exact=False, rtol=1e-9
+    )

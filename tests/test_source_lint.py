@@ -185,10 +185,6 @@ UNREACHED_OK = {
         "SURVEY K2 SQL table sink (COVERAGE.md row K2)",
     ("sources/writers.py", "write_csv"):
         "SURVEY K3 CSV sink (COVERAGE.md row K3)",
-    ("llm/training.py", "clear_probe_cache"):
-        "test hook: resets the trained-probe cache between tests",
-    ("streaming/docs.py", "clear_staged_dirs"):
-        "test hook: drops the staged stream-source dirs between tests",
 }
 
 _WORD = re.compile(r"[A-Za-z_]\w*")
@@ -324,3 +320,106 @@ def test_tools_find_their_checkout_from_their_own_file():
     package path and the checkout outputs derive from ``__file__``."""
     found = _fixed_checkout_paths()
     assert not found, f"fixed checkout paths in tools/: {found}"
+
+
+# ------------------------------------------------------- module-level state
+
+#: (defining module, module-level name) -> why package functions may
+#: write it. Any other write is state one call leaves for the next.
+MODULE_STATE_OK = {
+    ("catalog.py", "_MEMO"):
+        "values derived from fixture tables, rebuilt when a table's "
+        "fingerprint changes (catalog.memo)",
+    ("catalog.py", "_TABLE_CACHE"):
+        "per-session scan plans under the same fingerprint rule, weak "
+        "on the session",
+    ("operators/temporal.py", "_DRAIN_SESSIONS"):
+        "one drain child session per parent, weak on the parent; drain "
+        "conf stays on the child",
+    ("streaming/docs.py", "_STAGED_ALL"):
+        "temp dirs deleted at interpreter exit",
+    ("streaming/events.py", "_CKPT_DIRS"):
+        "checkpoint dirs deleted at interpreter exit or on release",
+    ("plans/queries.py", "QUERIES"):
+        "registry: LLM modules register late, priority order in place",
+    ("plans/queries.py", "ORACLES"):
+        "registry: LLM modules register their oracles late",
+    ("plans/queries.py", "NO_ORACLE"):
+        "registry: LLM modules register their rows-only reasons late",
+}
+
+_MUTATORS = {
+    "append", "extend", "insert", "add", "update", "setdefault", "pop",
+    "popitem", "clear", "remove", "discard",
+}
+
+
+def _written_names(fn: ast.AST) -> set[str]:
+    """Non-local names the code of ``fn`` writes: item assignment or
+    deletion, a mutating method call, or rebinding under ``global``."""
+    local = {a.arg for a in ast.walk(fn) if isinstance(a, ast.arg)} | {
+        n.id for n in ast.walk(fn)
+        if isinstance(n, ast.Name) and isinstance(n.ctx, ast.Store)
+    }
+    written: set[str] = set()
+    for node in ast.walk(fn):
+        if (isinstance(node, ast.Subscript)
+                and isinstance(node.ctx, (ast.Store, ast.Del))
+                and isinstance(node.value, ast.Name)):
+            written.add(node.value.id)
+        elif (isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr in _MUTATORS
+                and isinstance(node.func.value, ast.Name)):
+            written.add(node.func.value.id)
+        elif isinstance(node, ast.Global):
+            local -= set(node.names)
+            written.update(node.names)
+    return written - local
+
+
+def _module_state_writes() -> set[tuple[str, str]]:
+    """(defining module, name) of every module-level name a package
+    function writes; a name a module imports counts against the
+    module that defines it."""
+    trees = {
+        str(path.relative_to(PKG)): ast.parse(path.read_text())
+        for path in sorted(PKG.rglob("*.py"))
+    }
+    owners: dict[str, set[str]] = {}
+    for rel, tree in trees.items():
+        for node in tree.body:
+            targets = (
+                node.targets if isinstance(node, ast.Assign)
+                else [node.target] if isinstance(node, ast.AnnAssign)
+                else []
+            )
+            for t in targets:
+                if isinstance(t, ast.Name):
+                    owners.setdefault(t.id, set()).add(rel)
+    found: set[tuple[str, str]] = set()
+    for rel, tree in trees.items():
+        for fn in ast.walk(tree):
+            if not isinstance(
+                fn, (ast.FunctionDef, ast.AsyncFunctionDef, ast.Lambda)
+            ):
+                continue
+            for name in _written_names(fn) & owners.keys():
+                mods = {rel} if rel in owners[name] else owners[name]
+                found |= {(mod, name) for mod in mods}
+    return found
+
+
+def test_no_function_writes_module_level_state():
+    """A package function that fills a module-level dict or list leaves
+    state behind that a later call reads; derived values go through
+    ``catalog.memo``, which rebuilds them when their tables change."""
+    writes = _module_state_writes()
+    found = sorted(writes - set(MODULE_STATE_OK))
+    assert not found, (
+        "module-level state written by package functions (use "
+        "catalog.memo, or allowlist with a reason): "
+        + ", ".join(f"{rel}:{name}" for rel, name in found)
+    )
+    stale = set(MODULE_STATE_OK) - writes
+    assert not stale, f"allowlist entries no longer written: {stale}"

@@ -11,14 +11,17 @@ from data_warehouse_co_healthy_spark.streaming import events as se
 from tests.conftest import SF_DIR
 
 
-# function-scoped ON PURPOSE: a module-scoped stream would keep the
-# staged source dir captured at first use, and any test that exercises
-# the clear_staged_dirs() hook in between would delete that dir out
-# from under later tests (the stream then reads zero files). Staging
-# is cached, so re-deriving the DataFrame per test is cheap.
+# Staging is memoized, so re-deriving the DataFrame per test is cheap.
 @pytest.fixture
 def stream(spark):
     return se.read_events_stream(spark, SF_DIR)
+
+
+def _staged_path(kind):
+    """The staged dir ``staged_stream`` built for ``kind`` at SF_DIR."""
+    from data_warehouse_co_healthy_spark.catalog import _MEMO
+
+    return _MEMO[(("staged", kind), SF_DIR)][1][0]
 
 
 def _drain(spark, result, name, mode="complete"):
@@ -190,7 +193,6 @@ def test_multibatch_join_crosses_batches_and_matches_batch(spark):
     from data_warehouse_co_healthy_spark.operators.temporal import (
         stream_join_multibatch_drain,
     )
-    from data_warehouse_co_healthy_spark.streaming.docs import _STAGED_DIRS
 
     got = (
         stream_join_multibatch_drain(spark, SF_DIR)
@@ -239,13 +241,8 @@ def test_multibatch_join_crosses_batches_and_matches_batch(spark):
     from data_warehouse_co_healthy_spark.operators.temporal import (
         DRAIN_FILES_PER_TRIGGER,
     )
-    d = [
-        v
-        for k, v in _STAGED_DIRS.items()
-        if k[0] == "events_ordered4" and k[1] == SF_DIR
-    ]
-    assert d, "ordered staging dir not built"
-    files = sorted(glob.glob(os.path.join(d[0], "part-*.parquet")))
+    d = _staged_path("events_ordered4")
+    files = sorted(glob.glob(os.path.join(d, "part-*.parquet")))
     assert len(files) == 4
     batched = reduce(
         lambda a, b: a.unionByName(b),
@@ -522,22 +519,16 @@ def test_stream_dedup_drain_actually_drops(spark):
         DUP_MOD,
         read_events_stream_ordered_with_dups,
     )
-    from data_warehouse_co_healthy_spark.streaming.docs import _STAGED_DIRS
 
     got = stream_dedup_drain(spark, SF_DIR).count()
     n_orig = load_table(spark, SF_DIR, "events").count()
     assert got == n_orig
     # the staged input really contains the duplicates
     read_events_stream_ordered_with_dups(spark, SF_DIR)
-    d = [
-        v
-        for k, v in _STAGED_DIRS.items()
-        if k[0] == "events_ordered_dup4" and k[1] == SF_DIR
-    ]
-    assert d
+    d = _staged_path("events_ordered_dup4")
     from pyspark.sql import functions as F
 
-    staged_rows = spark.read.parquet(d[0]).count()
+    staged_rows = spark.read.parquet(d).count()
     # expected duplicate count from the table itself (not n_orig //
     # DUP_MOD, which assumes dense 0..n-1 event_ids)
     n_dups = (
@@ -686,40 +677,37 @@ def test_purchase_attribution_left_outer(spark, stream):
 
 
 def test_staged_dir_rebuilds_when_fixture_rewritten(tmp_path):
-    """The staging cache keys on the SOURCE FIXTURE'S fingerprint
-    (mtime+size, like llm.training._probe_cache_key): rewriting the
-    fixture at the same path within a process must rebuild the staged
-    dir — the materialized media stager would otherwise serve stale
-    encoded files. Unchanged fixtures keep hitting the cache."""
+    """``catalog.memo``, which holds every staged dir, keys each value
+    on its source table's fingerprint: rewriting the table at the same
+    path within a process must rebuild, and the new value replaces the
+    old entry. Unchanged tables keep hitting, a ``None`` value too."""
     import os
 
-    from data_warehouse_co_healthy_spark.streaming import docs as sd
+    from data_warehouse_co_healthy_spark import catalog
 
     src = tmp_path / "fixture.parquet"
     src.write_bytes(b"one")
     calls = []
 
-    def build(d):
-        calls.append(d)
-        (tmp_path / "marker").write_text(d)
+    def build():
+        calls.append(src.read_bytes())
+        return None
 
-    kwargs = dict(
-        kind="t", sf_dir=str(tmp_path), prefix="t_stage_", build=build,
-        src=str(src),
-    )
-    d1 = sd._staged_dir(**kwargs)
-    assert sd._staged_dir(**kwargs) == d1  # cache hit, no rebuild
-    assert len(calls) == 1
-    # rewrite the fixture at the same path -> new fingerprint -> rebuild
-    src.write_bytes(b"two!")
-    os.utime(src, ns=(1, 1))  # force an mtime change even on fast FS
-    d2 = sd._staged_dir(**kwargs)
-    assert d2 != d1
-    assert len(calls) == 2
-    # the test hook drops and deletes every staged dir
-    sd.clear_staged_dirs()
-    assert not os.path.isdir(d1) and not os.path.isdir(d2)
-    assert sd._STAGED_DIRS == {}
+    args = ("t", str(tmp_path), ("fixture",), build)
+    try:
+        assert catalog.memo(*args) is None
+        assert catalog.memo(*args) is None  # hit, no rebuild
+        assert calls == [b"one"]
+        # rewrite the fixture at the same path -> new fingerprint
+        src.write_bytes(b"two!")
+        os.utime(src, ns=(1, 1))  # force an mtime change even on fast FS
+        catalog.memo(*args)
+        assert calls == [b"one", b"two!"]
+        assert [k for k in catalog._MEMO if k[1] == str(tmp_path)] == [
+            ("t", str(tmp_path))
+        ]
+    finally:
+        catalog._MEMO.pop(("t", str(tmp_path)), None)
 
 
 def test_staged_stream_cache_hit_runs_no_job(spark):
@@ -783,19 +771,13 @@ def test_stream_url_frontier_dedups_across_batches(spark):
         _canonicalized,
         stream_url_frontier_drain,
     )
-    from data_warehouse_co_healthy_spark.streaming.docs import _STAGED_DIRS
 
     got = stream_url_frontier_drain(spark, SF_DIR).toPandas()
     assert len(got) == URL_HOSTS * URL_PATHS
     assert got.canonical.is_unique
 
-    d = [
-        v
-        for k, v in _STAGED_DIRS.items()
-        if k[0] == "url_frontier4" and k[1] == SF_DIR
-    ]
-    assert d
-    files = sorted(glob.glob(os.path.join(d[0], "part-*.parquet")))
+    d = _staged_path("url_frontier4")
+    files = sorted(glob.glob(os.path.join(d, "part-*.parquet")))
     assert len(files) == 4
     n_input = 0
     per_batch = []
@@ -844,7 +826,6 @@ def test_stream_topk_drain_cross_batch_ranked_state(spark):
         TOPK_K,
         stream_topk_drain,
     )
-    from data_warehouse_co_healthy_spark.streaming.docs import _STAGED_DIRS
 
     got = (
         stream_topk_drain(spark, SF_DIR)
@@ -876,13 +857,8 @@ def test_stream_topk_drain_cross_batch_ranked_state(spark):
     # the podium only exists in cross-batch state: every source's
     # final top-K spans ≥2 of the 4 staged files (doc_id-hash split
     # scatters each source's contenders; measured min is 2 at sf0.01)
-    d = [
-        v
-        for k, v in _STAGED_DIRS.items()
-        if k[0] == "topk_docs4" and k[1] == SF_DIR
-    ]
-    assert d
-    files = sorted(glob.glob(os.path.join(d[0], "part-*.parquet")))
+    d = _staged_path("topk_docs4")
+    files = sorted(glob.glob(os.path.join(d, "part-*.parquet")))
     assert len(files) == 4
     doc2file = {}
     for i, f in enumerate(files):
